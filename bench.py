@@ -755,9 +755,13 @@ def _gate_line(gate: dict, timings: dict) -> str:
             for k, v in gate["sf1"].items()
             if k != "check_all"  # the prose block — detail on the line above
         }
-    agreed = gate.pop("gates_agreed", {})
-    gate["gates_agreed_ok"] = all(v[0] for v in agreed.values())
-    gate["gates_agreed_n"] = [sum(1 for v in agreed.values() if v[0]), len(agreed)]
+    # entries are [agreed, passes]; tolerate a bare flag or an empty list
+    agreed = [
+        bool(v[0]) if isinstance(v, (list, tuple)) and v else bool(v)
+        for v in gate.pop("gates_agreed", {}).values()
+    ]
+    gate["gates_agreed_ok"] = all(agreed)
+    gate["gates_agreed_n"] = [sum(agreed), len(agreed)]
     gate["queries"] = {k: timings[k] for k in TREND_KERNELS if k in timings}
     line = json.dumps(gate)
     if len(line) > 1800:  # hard guard: never outgrow the driver tail again

@@ -27,6 +27,10 @@ RUNTIME_CONF = {
     # externally-owned sessions default to 200 shuffle partitions — far too
     # many for local test scale; AQE coalesces upward when needed
     "spark.sql.shuffle.partitions": "32",
+    # Python workers start from a daemon that stops every task from
+    # re-reading pyspark.zip's directory (0.2-0.4 s CPU per task);
+    # see pyworker.py. A core conf: it only takes effect at session build
+    "spark.python.daemon.module": "deltaforge_spark.pyworker",
 }
 
 

@@ -172,7 +172,9 @@ class _BinlogStreamReader(SimpleDataSourceStreamReader):
         rows: list[tuple] = []  # materialized: the API copies/caches this
         for p in files[start["files"] :]:
             rows.extend(_decode_file(p, self.columns))
-        return rows, end
+        # an iterator, not the list: PySpark calls next() on it when
+        # the trigger found no new file
+        return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # replay of an uncommitted range: deterministic re-read of the
@@ -182,7 +184,7 @@ class _BinlogStreamReader(SimpleDataSourceStreamReader):
         rows: list[tuple] = []
         for p in files[start["files"] : end["files"]]:
             rows.extend(_decode_file(p, self.columns))
-        return rows
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         pass  # files are immutable; nothing to clean
@@ -268,7 +270,7 @@ class _PgoutputStreamReader(SimpleDataSourceStreamReader):
         rows: list[tuple] = []
         for i, p in enumerate(files[start["files"] :], start=start["files"]):
             rows.extend(_read_spool(p, i * _PgoutputBatchReader.SEQ_STRIDE))
-        return rows, end
+        return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         files = _list_segments(self.path, self.suffix)
@@ -276,7 +278,7 @@ class _PgoutputStreamReader(SimpleDataSourceStreamReader):
         rows: list[tuple] = []
         for i in range(start["files"], end["files"]):
             rows.extend(_read_spool(files[i], i * _PgoutputBatchReader.SEQ_STRIDE))
-        return rows
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         pass

@@ -1937,54 +1937,58 @@ def decode_pgoutput_two_phase(
     ``retain`` — callers release with ``release_retained`` once the
     frame is consumed."""
     from ..operators.rangejoin import interval_join
-    from ..plans.lineage import retain
+    from ..plans.lineage import release_pinned, retain
 
     # one pinned control-row subset feeds the prepared-parts scan, the
     # relation catalog AND the B/C transaction table (was 3 more
     # full-capture scans); parts derive lazily from the tiny pin, so
     # their own pin is no longer needed
     ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBCbPKrS")
-    parts = _prepared_parts(ctrl, data_col=data_col, seq_col=seq_col, mark_stream=True)
-    kind_counts = {
-        r["kind"]: r["cnt"]
-        for r in parts.groupBy("kind").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if kind_counts.get("S"):
-        from ..plans.lineage import release_pinned
-
-        release_pinned(ctrl)
-        raise PgoutputError(
-            "capture contains protocol-v2 stream blocks; "
-            "decode_pgoutput_two_phase would mis-parse xid-prefixed DML — "
-            "use decode_pgoutput_v2 (it handles streamed and non-streamed "
-            "two-phase transactions together)"
+    dml = None
+    try:
+        parts = _prepared_parts(ctrl, data_col=data_col, seq_col=seq_col, mark_stream=True)
+        kind_counts = {
+            r["kind"]: r["cnt"]
+            for r in parts.groupBy("kind").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        if kind_counts.get("S"):
+            raise PgoutputError(
+                "capture contains protocol-v2 stream blocks; "
+                "decode_pgoutput_two_phase would mis-parse xid-prefixed DML — "
+                "use decode_pgoutput_v2 (it handles streamed and non-streamed "
+                "two-phase transactions together)"
+            )
+        relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
+        # persist, not checkpoint: both stamping branches resolve to one
+        # InMemoryRelation computed inside the final job (no extra job)
+        dml = decode_pgoutput_dml(
+            stream, relations, data_col=data_col, seq_col=seq_col
+        ).persist()
+        tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
+        v1 = stamp_transactions(dml, tx, bucket_width=tx_bucket_width).withColumn(
+            "gid", F.lit(None).cast("string")
         )
-    relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-    # persist, not checkpoint: both stamping branches resolve to one
-    # InMemoryRelation computed inside the final job (no extra job)
-    dml = decode_pgoutput_dml(
-        stream, relations, data_col=data_col, seq_col=seq_col
-    ).persist()
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    v1 = stamp_transactions(dml, tx, bucket_width=tx_bucket_width).withColumn(
-        "gid", F.lit(None).cast("string")
-    )
-    prepared = _prepared_table_from_parts(parts.filter(F.col("kind") != "S"))
-    committed = prepared.filter(F.col("outcome") == "commit").select(
-        "xid", "gid", "begin_seq", "prepare_seq", "commit_ts_ms"
-    )
-    one = F.lit(1)
-    stamped = interval_join(
-        dml.withColumn("_k", one),
-        committed.withColumn("_k", one),
-        by="_k",
-        point_col="seq",
-        start_col="begin_seq",
-        end_col="prepare_seq",
-        bucket_width=tx_bucket_width,
-        how="inner",
-    ).drop("_k", "begin_seq", "prepare_seq")
-    return retain(v1.unionByName(stamped), ctrl, dml)
+        prepared = _prepared_table_from_parts(parts.filter(F.col("kind") != "S"))
+        committed = prepared.filter(F.col("outcome") == "commit").select(
+            "xid", "gid", "begin_seq", "prepare_seq", "commit_ts_ms"
+        )
+        one = F.lit(1)
+        stamped = interval_join(
+            dml.withColumn("_k", one),
+            committed.withColumn("_k", one),
+            by="_k",
+            point_col="seq",
+            start_col="begin_seq",
+            end_col="prepare_seq",
+            bucket_width=tx_bucket_width,
+            how="inner",
+        ).drop("_k", "begin_seq", "prepare_seq")
+        return retain(v1.unionByName(stamped), ctrl, dml)
+    except BaseException:
+        release_pinned(ctrl)
+        if dml is not None:
+            release_pinned(dml)
+        raise
 
 
 def decode_pgoutput_v2(
@@ -2368,18 +2372,22 @@ def decode_pgoutput(
     pinned control-row subset instead of two more full-capture scans
     (guide §1.2); the pin rides the result via ``retain`` — release
     with ``release_retained`` once consumed."""
-    from ..plans.lineage import retain
+    from ..plans.lineage import release_pinned, retain
 
     ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBC")
-    relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-    dml = decode_pgoutput_dml(stream, relations, data_col=data_col, seq_col=seq_col)
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    return retain(
-        stamp_transactions(
-            dml, tx, bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted
-        ),
-        ctrl,
-    )
+    try:
+        relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
+        dml = decode_pgoutput_dml(stream, relations, data_col=data_col, seq_col=seq_col)
+        tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
+        return retain(
+            stamp_transactions(
+                dml, tx, bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted
+            ),
+            ctrl,
+        )
+    except BaseException:
+        release_pinned(ctrl)
+        raise
 
 
 def pgoutput_change_feed(

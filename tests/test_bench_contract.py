@@ -225,6 +225,16 @@ class TestGateLineContract:
         b._gate_line(gate, {k: 1.0 for k in b.TREND_KERNELS})
         assert "gates_agreed" in gate and "check_all" in gate["sf1"]
 
+    def test_scalar_and_empty_agreement_entries(self):
+        import json
+
+        b = _bench()
+        gate = self._realistic_gate()
+        gate["gates_agreed"] = {"pair": [True, 9], "scalar": True, "empty": []}
+        parsed = json.loads(b._gate_line(gate, {}))
+        assert parsed["gates_agreed_ok"] is False
+        assert parsed["gates_agreed_n"] == [2, 3]
+
 
 class TestCpusAwareMerge:
     """VERDICT r13 #2: the round-best merge must condition on the core

@@ -242,7 +242,7 @@ class TestOffsetHardening:
         r = self._reader(src)
         rows, off = r.read(r.initialOffset())
         assert off["files"] == 2 and off["last"] == "b2.binlog"
-        assert len(rows) == 2
+        assert len(list(rows)) == 2
         os.remove(f"{src}/b2.binlog")  # compaction/cleanup under the offset
         with pytest.raises(SegmentStoreChangedError, match="deleted/compacted"):
             r.read(off)
@@ -280,7 +280,7 @@ class TestOffsetHardening:
         _rows, off = r.read(r.initialOffset())
         _write_segment(f"{src}/b2.binlog", [[2, "b"]], gno=2, xid=901)
         rows, off2 = r.read(off)
-        assert len(rows) == 1 and off2["files"] == 2
+        assert len(list(rows)) == 1 and off2["files"] == 2
 
     def test_legacy_offset_without_name_still_accepted(self, tmp_path):
         """Checkpoints written before the name field lack 'last' —
@@ -291,7 +291,7 @@ class TestOffsetHardening:
         _write_segment(f"{src}/b2.binlog", [[2, "b"]], gno=2, xid=901)
         r = self._reader(src)
         rows, off = r.read({"files": 1})
-        assert len(rows) == 1 and off["files"] == 2
+        assert len(list(rows)) == 1 and off["files"] == 2
 
     def test_pgoutput_spool_same_contract(self, tmp_path):
         from deltaforge_spark.sources.datasource import (
@@ -305,7 +305,42 @@ class TestOffsetHardening:
         write_spool(f"{src}/w1.pgout", [b"m1", b"m2"])
         r = _PgoutputStreamReader({"path": src})
         rows, off = r.read(r.initialOffset())
-        assert len(rows) == 2 and off["last"] == "w1.pgout"
+        assert len(list(rows)) == 2 and off["last"] == "w1.pgout"
         os.remove(f"{src}/w1.pgout")
         with pytest.raises(SegmentStoreChangedError):
             r.read(off)
+
+
+class TestTriggerWithoutNewFiles:
+    """A trigger that finds no new file must complete with zero rows:
+    PySpark calls next() on what read() returned when the offset did
+    not advance, so the readers return iterators, not lists."""
+
+    @pytest.mark.parametrize("fmt", ["binlog_segments", "pgoutput_spool"])
+    def test_second_trigger_reads_zero_rows(self, spark, tmp_path, fmt):
+        import deltaforge_spark.sources.pgoutput as pg
+        from deltaforge_spark.sources.datasource import PgoutputSpoolDataSource, write_spool
+
+        spark.dataSource.register(BinlogSegmentsDataSource)
+        spark.dataSource.register(PgoutputSpoolDataSource)
+        src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+        os.makedirs(src)
+        if fmt == "binlog_segments":
+            _write_segment(f"{src}/b1.binlog", [[1, "a"], [2, "b"]], gno=1, xid=900)
+        else:
+            write_spool(f"{src}/000001.pgout", [pg.encode_begin(10, 1, 1), pg.encode_commit(10, 20, 1)])
+
+        def trigger():
+            q = (
+                spark.readStream.format(fmt).option("path", src).load()
+                .writeStream.format("parquet")
+                .option("path", out).option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start()
+            )
+            q.awaitTermination(120)
+            assert q.exception() is None
+            return sum(p["numInputRows"] for p in q.recentProgress)
+
+        assert trigger() == 2
+        assert trigger() == 0
+        assert spark.read.parquet(out).count() == 2

@@ -7,6 +7,7 @@ import pytest
 
 from deltaforge_spark.sources.pgoutput import (
     PgoutputError,
+    decode_pgoutput,
     decode_pgoutput_two_phase,
     encode_begin,
     encode_begin_prepare,
@@ -168,3 +169,35 @@ class TestPreparedAssembly:
             (10, "g10", '{"id": 1, "name": "a"}', 946684800000 + 5_000),
             (40, None, '{"id": 4, "name": "d"}', 946684800000 + 7_000),
         ]
+
+
+def _stored(spark) -> int:
+    """Persistent RDDs plus CacheManager entries in the session."""
+    n = int(spark.sparkContext._jsc.getPersistentRDDs().size())
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return n + int(field.get(cm).size())
+
+
+class TestErrorPathReleasesPins:
+    """A decode that raises after pinning its control rows releases the
+    pin before the error propagates."""
+
+    @pytest.mark.parametrize(
+        "decode", [decode_pgoutput, decode_pgoutput_two_phase], ids=lambda f: f.__name__
+    )
+    def test_malformed_relation_leaks_nothing(self, spark, decode):
+        rel = encode_relation(REL, "public", "t", COLS)
+        with pytest.raises(PgoutputError, match="truncated"):
+            parse_message(rel[:-3])
+        stream = _df(spark, [
+            (0, rel[:-3]),
+            (1, encode_begin(14, 7_000_000, 40)),
+            (2, encode_insert(REL, ["4", "d"])),
+            (3, encode_commit(14, 15, 7_000_000)),
+        ])
+        before = _stored(spark)
+        with pytest.raises(Exception, match="truncated"):
+            decode(stream)
+        assert _stored(spark) == before
