@@ -3571,12 +3571,15 @@ def q_cdc_pgoutput_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     postgres_event.rs:166-334, postgres_object.rs:50-340). The oracle
     recomputes every expected image straight from the parquet table, so
     the whole byte path — tuple markers, text-mode conversion, before
-    images, tx metadata — is value-checked end to end."""
+    images, tx metadata — is value-checked end to end. The single
+    ``decode_pgoutput`` takes its tag census of the pinned control rows,
+    finds only B/C, and builds the plain path alone."""
     _prep(spark)
     from pyspark.sql import types as T
 
     from deltaforge_spark.plans.lineage import pin, retain
-    from deltaforge_spark.sources.pgoutput import decode_pgoutput, synth_pgoutput_orders
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_orders
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     # pin the synth stream: decode references it three times (relation
     # catalog, DML parse, tx table) and each reference re-ran the whole
@@ -3618,10 +3621,11 @@ def q_cdc_pgoutput_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMED in-progress transaction — S…E fragments with xid-prefixed
     DML, some split across two segments, closed by StreamCommit; every
     ninth-plus-six tx ends in StreamAbort and must vanish. Decode =
-    map-only parse with broadcast block-interval attribution +
-    equi-join commit gating + anti-join abort discard
-    (sources/pgoutput.py decode_pgoutput_v2; grammar: public pgoutput
-    protocol v2 docs — beyond the reference, which speaks protocol 1).
+    the single ``decode_pgoutput``: its tag census sees S/E and c/A
+    rows and adds map-only parse with broadcast block-interval
+    attribution + equi-join commit gating + anti-join abort discard
+    (sources/pgoutput.py; grammar: public pgoutput protocol v2 docs —
+    beyond the reference, which speaks protocol 1).
     The oracle reproduces the committed row set from the parquet table
     alone, so fragment stitching, xid stripping, and abort semantics
     are all value-checked."""
@@ -3629,15 +3633,14 @@ def q_cdc_pgoutput_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from deltaforge_spark.plans.lineage import pin, retain
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_v2,
-        synth_pgoutput_streamed,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_streamed
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
-    # pinned: the v2 decode references the stream several times (block
-    # attribution, commit gating, abort anti-join) — r13 optimization
+    # pinned: the streamed decode references the stream several times
+    # (block attribution, commit gating, abort anti-join) — r13
+    # optimization
     stream = pin(synth_pgoutput_streamed(spark, sf_dir))
-    dec = decode_pgoutput_v2(stream)
+    dec = decode_pgoutput(stream)
     img_schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -3669,25 +3672,23 @@ def q_cdc_pgoutput_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     implemented it): every third transaction travels PREPARED (b dml…
     P) with the decision arriving later as COMMIT PREPARED ('K');
     rolled-back ('r') and still-PENDING prepared transactions must
-    never emit. Decode = v1 interval path for plain txs + a gid-keyed
-    decision join for prepared ones (sources/pgoutput.py
-    decode_pgoutput_two_phase; grammar: public PG logical-replication
-    message docs). The oracle reproduces the committed row set from
+    never emit. Decode = the single ``decode_pgoutput``: its tag census
+    sees b/P rows and unions the committed b…P intervals (a gid-keyed
+    decision join) into the one B…C stamping join (sources/pgoutput.py;
+    grammar: public PG logical-replication message docs). The oracle reproduces the committed row set from
     the parquet table alone, value-checking prepare framing, decision
     gating, and pending-exclusion."""
     _prep(spark)
     from pyspark.sql import types as T
 
     from deltaforge_spark.plans.lineage import pin, retain
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
-        synth_pgoutput_two_phase,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_two_phase
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     # pinned: the 2PC decode references the stream for DML, prepare
     # framing AND the gid decision join — r13 optimization
     stream = pin(synth_pgoutput_two_phase(spark, sf_dir))
-    dec = decode_pgoutput_two_phase(stream)
+    dec = decode_pgoutput(stream)
     img_schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -3924,10 +3925,8 @@ def q_cdc_pgoutput_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from pyspark.sql import types as T
 
-    from deltaforge_spark.sources.pgoutput import (
-        pgoutput_change_feed,
-        synth_pgoutput_orders,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_orders
+    from deltaforge_spark.sources.pgoutput import pgoutput_change_feed
 
     image_schema = T.StructType(
         [

@@ -343,18 +343,17 @@ def main():
         decode_binlog_segments as _warm_decode,
         synth_binlog_events as _warm_synth,
     )
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput as _warm_pg_decode,
-        decode_pgoutput_two_phase as _warm_2pc_decode,
+    from deltaforge_spark.sources.fixtures import (
         synth_pgoutput_orders as _warm_pg_synth,
         synth_pgoutput_two_phase as _warm_2pc_synth,
     )
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput as _warm_pg_decode
 
     materialize(
         _warm_decode(_warm_synth(spark, warm_dir), {("testdb", "events"): _WARM_COLS})
     )
     materialize(_warm_pg_decode(_warm_pg_synth(spark, warm_dir)))
-    materialize(_warm_2pc_decode(_warm_2pc_synth(spark, warm_dir)))
+    materialize(_warm_pg_decode(_warm_2pc_synth(spark, warm_dir)))
     print("warmup done", file=sys.stderr, flush=True)
 
     # Timed runs, keep the min + a per-query pass count: the container's
@@ -467,7 +466,11 @@ def main():
 
     # pgoutput side (same staging discipline): decode = map-only parse +
     # relation-catalog broadcast + interval-join tx stamping
-    from deltaforge_spark.sources.pgoutput import decode_pgoutput, synth_pgoutput_orders
+    from deltaforge_spark.sources.fixtures import (
+        synth_pgoutput_orders,
+        synth_pgoutput_two_phase,
+    )
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     wal_path = f"/dev/shm/deltaforge-bench-data/pgoutput-v1-p{par}-sf{sf}"
     if not _parquet_staged(wal_path):
@@ -484,20 +487,13 @@ def main():
     # interval stamping — timed on a staged capture like its v1
     # sibling. Decode is seq-keyed (order-independent), so the
     # repartitioned layout is exactly what an archive reader produces.
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
-        synth_pgoutput_two_phase,
-    )
-
     tp_path = f"/dev/shm/deltaforge-bench-data/pgoutput-2pc-p{par}-sf{sf}"
     if not _parquet_staged(tp_path):
         synth_pgoutput_two_phase(spark, sf_dir).repartition(par).write.mode(
             "overwrite"
         ).parquet(tp_path)
     tp = spark.read.parquet(tp_path)
-    timed_agreed(
-        "cdc_pgoutput_two_phase_staged", lambda: decode_pgoutput_two_phase(tp)
-    )
+    timed_agreed("cdc_pgoutput_two_phase_staged", lambda: decode_pgoutput(tp))
 
     # ---- TIER 1c: end-to-end delivery over the REAL Kafka wire
     # protocol — envelope + routing + transactional produce

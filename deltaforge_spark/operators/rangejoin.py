@@ -67,11 +67,15 @@ def interval_join(
     )
     if how == "left":
         # keep unmatched points as single null rows: filter matched,
-        # then re-attach points that matched nothing
+        # then re-attach points that matched nothing. Null-safe
+        # equality: a point with a null column must still find its match
         matched = joined.filter(contained)
+        seen = matched.select(
+            *[F.col(c).alias(f"_m{i}") for i, c in enumerate(points.columns)]
+        ).distinct()
         unmatched = points.join(
-            matched.select(*points.columns).distinct(),
-            on=points.columns,
+            seen,
+            [points[c].eqNullSafe(seen[f"_m{i}"]) for i, c in enumerate(points.columns)],
             how="left_anti",
         )
         for c in ival_cols:

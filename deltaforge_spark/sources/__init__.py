@@ -23,7 +23,6 @@ from .pgoutput import (
     decode_pgoutput_truncates,
     parse_message,
     pgoutput_change_feed,
-    synth_pgoutput_orders,
 )
 
 __all__ = [
@@ -48,5 +47,4 @@ __all__ = [
     "decode_pgoutput_truncates",
     "parse_message",
     "pgoutput_change_feed",
-    "synth_pgoutput_orders",
 ]

@@ -39,7 +39,7 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -930,15 +930,24 @@ DML_V2_SCHEMA = T.StructType(
     ]
 )
 
-TX_PART_SCHEMA = T.StructType(
+#: one row per parsed non-'R' control message; a field a message kind
+#: does not carry is null (see :func:`pgoutput_control_rows`)
+CONTROL_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType()),
         T.StructField("seq", T.LongType()),
-        T.StructField("lsn_key", T.LongType()),
         T.StructField("xid", T.LongType()),
-        T.StructField("commit_ts_us", T.LongType()),
+        T.StructField("subxid", T.LongType()),
+        T.StructField("lsn_key", T.LongType()),
+        T.StructField("gid", T.StringType()),
+        T.StructField("ts_us", T.LongType()),
+        T.StructField("first_segment", T.BooleanType()),
     ]
 )
+
+#: first-byte tags of the control messages: Relation, Begin/Commit,
+#: stream Start/End/Commit/Abort, and the two-phase b/P/K/r/p family
+CONTROL_TAGS = b"RBCSEcAbPKrp"
 
 
 def _block_intervals(
@@ -968,26 +977,30 @@ def _tag_prefilter(stream: DataFrame, data_col: str, tags: bytes) -> DataFrame:
     transfer shrinks to the control rows themselves (a replication
     stream is ~2 control rows per transaction). The Python-side tag
     check stays as the invariant guard, exactly like the DML pass."""
+    return stream.where(_tag_in(data_col, tags))
+
+
+def _tag_in(data_col: str, tags: bytes) -> Column:
+    """``data``'s first byte is one of ``tags`` (binary compare, codegen'd)."""
     hexes = ", ".join(f"X'{t:02X}'" for t in tags)
-    return stream.where(F.expr(f"substring(`{data_col}`, 1, 1) IN ({hexes})"))
+    return F.expr(f"substring(`{data_col}`, 1, 1) IN ({hexes})")
 
 
-def _control_plane_pin(
-    stream: DataFrame, data_col: str, seq_col: str, tags: bytes
-) -> DataFrame:
+def _control_plane_pin(stream: DataFrame, data_col: str, seq_col: str) -> DataFrame:
     """Materialize the control rows ONCE and feed every control-plane
-    pass from the pinned subset (guide §1.2 — don't recompute: the
-    v2 decode ran up to SIX tag-selective passes, each re-scanning the
-    ENTIRE capture to keep ~2 control rows per transaction; at archive
-    scale that multiplies the dominant I/O term by the pass count).
-    The pin is control-plane-sized (#control rows, never #events), and
-    it is a PERSIST, not a checkpoint: it materializes inside the
-    first job that already scans it (no extra materialization job —
-    the eager-checkpoint form measured ~0.5 s/query of pure job
-    latency at sf0.1), and every later pass reads the cache. Caller
-    owns release (``release_pinned`` handles cached frames) — decode
-    entry points retain it on their result."""
-    ctrl = _tag_prefilter(stream, data_col, tags).select(seq_col, data_col)
+    pass from the pinned subset (guide §1.2 — don't recompute: each
+    pass would otherwise re-scan the ENTIRE capture to keep ~2 control
+    rows per transaction). Rows whose payload is NULL or empty ride
+    along so the tag census can count and reject them. The pin is
+    control-plane-sized (#control rows, never #events), and it is a
+    PERSIST, not a checkpoint: the census job materializes it and
+    every later pass reads the cache. Caller owns release
+    (``release_pinned`` handles cached frames) — the decoder retains
+    it on its result."""
+    null_or_empty = F.col(data_col).isNull() | (F.length(data_col) == 0)
+    ctrl = stream.where(null_or_empty | _tag_in(data_col, CONTROL_TAGS)).select(
+        seq_col, data_col
+    )
     ctrl.persist()
     return ctrl
 
@@ -1121,7 +1134,6 @@ def decode_pgoutput_dml(
     seq_col: str = "seq",
     stream_blocks: list[dict[str, Any]] | None = None,
     attr_col: str | None = None,
-    first_byte_prefilter: bool = True,
 ) -> DataFrame:
     """Map-only decode of I/U/D messages into CDC rows with JSON
     before/after images. DML for an unknown relation is dropped, like
@@ -1315,23 +1327,26 @@ def decode_pgoutput_dml(
     # whole-stage codegen shrinks the Arrow transfer to DML-only rows
     # (a replication stream is ~2 control rows per tx plus relation
     # re-announcements, so the saving scales with tx rate). The
-    # Python-side tag check stays as a cheap invariant guard.
-    # (``first_byte_prefilter=False`` is the paired-A/B knob: identical
-    # decode with control rows crossing Arrow, for measuring the win.)
-    dml_only = stream.select(*in_cols)
-    if first_byte_prefilter:
-        dml_only = dml_only.where(
-            F.expr(f"substring(`{data_col}`, 1, 1) IN (X'49', X'55', X'44')")
-        )
-    return dml_only.mapInPandas(run, DML_V2_SCHEMA if v2 else DML_SCHEMA)
+    # Python-side tag check stays as a cheap invariant guard. NULL or
+    # empty payloads never reach it: decode_pgoutput's tag census
+    # rejects them first.
+    return (
+        _tag_prefilter(stream, data_col, b"IUD")
+        .select(*in_cols)
+        .mapInPandas(run, DML_V2_SCHEMA if v2 else DML_SCHEMA)
+    )
 
 
-def pgoutput_tx_table(stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq") -> DataFrame:
-    """Order-free transaction reconstruction: Begin rows pair with
-    Commit rows on the commit LSN both sides carry (B.final_lsn ==
-    C.commit_lsn — that is what the field is for), yielding
-    (xid, begin_seq, commit_seq, commit_ts_ms). One small groupBy-free
-    equi-join; #tx rows, never #event rows."""
+def pgoutput_control_rows(
+    stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
+) -> DataFrame:
+    """The ONE Python scan of the control plane: every non-'R' control
+    message (B/C, S/E/c/A, b/P/K/r/p) parsed into :data:`CONTROL_SCHEMA`
+    — ``xid``/``subxid``, ``lsn_key`` (Begin's final LSN, Commit's
+    commit LSN: the B↔C pairing key), ``gid``, ``ts_us`` (commit or
+    prepare time, µs since 2000-01-01) and ``first_segment``. The
+    B…C, b…P, S/E, c/A and p/K tables are filters and joins over this
+    one frame. #control rows, never #event rows."""
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1339,43 +1354,50 @@ def pgoutput_tx_table(stream: DataFrame, *, data_col: str = "data", seq_col: str
             for seq, data in zip(pdf[seq_col], pdf[data_col]):
                 b = bytes(data)
                 tag = b[:1]
-                if tag == b"B":
-                    m = parse_message(b)
-                    rows.append(("B", int(seq), m["final_lsn"], m["xid"], m["commit_ts_us"]))
-                elif tag == b"C":
-                    m = parse_message(b)
-                    rows.append(("C", int(seq), m["commit_lsn"], None, m["commit_ts_us"]))
-            yield pd.DataFrame(
-                rows, columns=["kind", "seq", "lsn_key", "xid", "commit_ts_us"]
-            )
+                if tag == b"R":
+                    continue
+                m = parse_message(b)
+                rows.append((
+                    tag.decode(), int(seq), m.get("xid"), m.get("subxid"),
+                    m.get("final_lsn", m.get("commit_lsn")), m.get("gid"),
+                    m.get("commit_ts_us", m.get("prepare_ts_us")),
+                    m.get("first_segment"),
+                ))
+            # object dtype: a u64 LSN next to a null must not round
+            # through float64
+            yield pd.DataFrame(rows, columns=CONTROL_SCHEMA.names, dtype=object)
 
-    parts = (
-        _tag_prefilter(stream, data_col, b"BC")
+    return (
+        _tag_prefilter(stream, data_col, CONTROL_TAGS.replace(b"R", b""))
         .select(seq_col, data_col)
-        .mapInPandas(scan, TX_PART_SCHEMA)
+        .mapInPandas(scan, CONTROL_SCHEMA)
     )
-    begins = (
-        parts.filter(F.col("kind") == "B")
-        .select(
-            F.col("seq").alias("begin_seq"),
-            F.col("lsn_key"),
-            F.col("xid"),
-            F.col("commit_ts_us"),
-        )
+
+
+def _ts_ms(ts_us: str) -> Column:
+    """µs since 2000-01-01 → unix epoch ms. Integer DIV, not `/`:
+    µs-since-2000 values exceed double's exact range within this
+    century (same rule as the epoch-nanos handling in
+    changefeed/binlog)."""
+    return F.expr(f"CAST({ts_us} DIV 1000 AS BIGINT)") + F.lit(PG_EPOCH_UNIX_MS)
+
+
+def _tx_intervals(ctl: DataFrame) -> DataFrame:
+    """Order-free transaction reconstruction from parsed control rows:
+    Begin pairs with Commit on the commit LSN both sides carry
+    (B.final_lsn == C.commit_lsn — that is what the field is for),
+    yielding ``(xid, begin_seq, commit_seq, commit_ts_ms, gid)`` with a
+    null gid. One small equi-join; #tx rows, never #event rows."""
+    begins = ctl.filter(F.col("kind") == "B").select(
+        F.col("seq").alias("begin_seq"), "lsn_key", "xid", "ts_us"
     )
-    commits = parts.filter(F.col("kind") == "C").select(
-        F.col("seq").alias("commit_seq"), F.col("lsn_key")
+    commits = ctl.filter(F.col("kind") == "C").select(
+        F.col("seq").alias("commit_seq"), "lsn_key"
     )
     return begins.join(commits, "lsn_key").select(
-        "xid",
-        "begin_seq",
-        "commit_seq",
-        # integer DIV, not `/`: µs-since-2000 values exceed double's
-        # exact range within this century (same rule as the epoch-nanos
-        # handling in changefeed/binlog)
-        (F.expr("CAST(commit_ts_us DIV 1000 AS BIGINT)") + F.lit(PG_EPOCH_UNIX_MS)).alias(
-            "commit_ts_ms"
-        ),
+        "xid", "begin_seq", "commit_seq",
+        _ts_ms("ts_us").alias("commit_ts_ms"),
+        F.lit(None).cast("string").alias("gid"),
     )
 
 
@@ -1383,56 +1405,34 @@ def pgoutput_tx_table(stream: DataFrame, *, data_col: str = "data", seq_col: str
 #: — beyond any real seq, so bisect membership stays a plain `<` test
 OPEN_BLOCK_END_SEQ = 1 << 62
 
-STREAM_BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("xid", T.LongType()),
-        T.StructField("first_segment", T.BooleanType()),
-    ]
-)
+
+def _bound_rows(ctl: DataFrame) -> DataFrame:
+    """S ('Stream Start') and E ('Stream Stop') boundary rows of the
+    parsed control rows: ``(seq, kind, xid, first_segment)``."""
+    return ctl.filter(F.col("kind").isin("S", "E")).select(
+        "seq", "kind", "xid", "first_segment"
+    )
 
 
 def pgoutput_stream_bounds(
     stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
 ) -> DataFrame:
-    """Map-only extraction of protocol-v2 S ('Stream Start') and E
-    ('Stream Stop') boundary rows: ``(seq, kind, xid, first_segment)``.
-    One pass over the capture, no shuffle — the shared front half of
-    both the collected (:func:`pgoutput_stream_blocks`) and the
-    distributed (:func:`pgoutput_stream_block_table`) pairing paths."""
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seq, data in zip(pdf[seq_col], pdf[data_col]):
-                b = bytes(data)
-                tag = b[:1]
-                if tag == b"S":
-                    m = parse_message(b)
-                    rows.append((int(seq), "S", m["xid"], m["first_segment"]))
-                elif tag == b"E":
-                    rows.append((int(seq), "E", None, None))
-            yield pd.DataFrame(
-                rows, columns=["seq", "kind", "xid", "first_segment"]
-            )
-
-    return (
-        _tag_prefilter(stream, data_col, b"SE")
-        .select(seq_col, data_col)
-        .mapInPandas(scan, STREAM_BLOCK_SCHEMA)
-    )
+    """Map-only extraction of protocol-v2 S/E boundary rows — the
+    shared front half of both the collected
+    (:func:`pgoutput_stream_blocks`) and the distributed
+    (:func:`pgoutput_stream_block_table`) pairing paths."""
+    return _bound_rows(pgoutput_control_rows(stream, data_col=data_col, seq_col=seq_col))
 
 
-def _pair_bound_rows(bounds: list[dict[str, Any]]) -> list[dict[str, Any]]:
-    """Sequential S↔E pairing over an already-collected, seq-sorted
-    boundary list (driver-side half of the small-capture fast path).
-    Torn captures fail loudly; a trailing open block closes at the
-    sentinel and is marked ``truncated`` (see
-    :func:`pgoutput_stream_blocks` for the semantics)."""
+def _pair_bound_rows(bounds: DataFrame) -> list[dict[str, Any]]:
+    """Collect the S/E boundary rows and pair them sequentially by seq
+    (driver-side half of the small-capture fast path). Torn captures
+    fail loudly; a trailing open block closes at the sentinel and is
+    marked ``truncated`` (see :func:`pgoutput_stream_blocks` for the
+    semantics)."""
     blocks: list[dict[str, Any]] = []
     open_s: dict[str, Any] | None = None
-    for r in bounds:
+    for r in sorted((r.asDict() for r in bounds.collect()), key=lambda r: r["seq"]):
         if r["kind"] == "S":
             if open_s is not None:
                 raise PgoutputError(
@@ -1476,7 +1476,7 @@ def pgoutput_stream_blocks(
     :func:`pgoutput_attribute_stream` instead — S…E boundaries are
     O(#streamed transactions × segments), data-proportional, and a
     100-TB capture would OOM the driver here
-    (:func:`decode_pgoutput_v2` picks automatically via
+    (:func:`decode_pgoutput` picks automatically via
     ``stream_block_collect_max``).
 
     Blocks never nest (protocol guarantee), so pairing is each 'S'
@@ -1491,27 +1491,9 @@ def pgoutput_stream_blocks(
     ``end_seq = +inf`` (sentinel) and marked ``truncated``; its rows
     still parse in streamed form and are then dropped by the missing
     StreamCommit, exactly like uncommitted v1 rows."""
-    bounds = sorted(
-        (
-            r.asDict()
-            for r in pgoutput_stream_bounds(
-                stream, data_col=data_col, seq_col=seq_col
-            ).collect()
-        ),
-        key=lambda r: r["seq"],
+    return _pair_bound_rows(
+        pgoutput_stream_bounds(stream, data_col=data_col, seq_col=seq_col)
     )
-    return _pair_bound_rows(bounds)
-
-
-BLOCK_TABLE_SCHEMA = T.StructType(
-    [
-        T.StructField("xid", T.LongType()),
-        T.StructField("start_seq", T.LongType()),
-        T.StructField("end_seq", T.LongType()),
-        T.StructField("first_segment", T.BooleanType()),
-        T.StructField("truncated", T.BooleanType()),
-    ]
-)
 
 
 def _ranked_by_seq(
@@ -1526,12 +1508,12 @@ def _ranked_by_seq(
     when a checkpoint dir is configured, localCheckpoint otherwise) so
     the count job and the window job cannot see different shuffles.
     Returns ``(ranked, pinned)`` — the caller MUST release ``pinned``
-    (``release_local_checkpoint``) once the ranked frame has been
+    (``release_pinned``) once the ranked frame has been
     re-materialized behind its own barrier, or its storage blocks
     outlive the call (the graph.py peeling-loop leak pattern)."""
     from pyspark.sql import Window
 
-    from ..plans.lineage import pin
+    from ..plans.lineage import pin, release_pinned
 
     sess = df.sparkSession
     n = max(2, sess.sparkContext.defaultParallelism)
@@ -1540,10 +1522,14 @@ def _ranked_by_seq(
             "_pid", F.spark_partition_id()
         )
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
+    try:
+        counts = {
+            r["_pid"]: r["cnt"]
+            for r in d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+    except BaseException:
+        release_pinned(d)
+        raise
     offsets, acc = [], 0
     for pid in sorted(counts):
         offsets.append((pid, acc))
@@ -1588,57 +1574,66 @@ def pgoutput_stream_block_table(
     closed at the sentinel exactly like the fast path.
 
     The returned table is pinned behind its own lineage barrier and the
-    two ranked intermediates are RELEASED before returning — a session
-    replaying many archive slices retains one compact block table per
-    live result, not 3 checkpointed rank frames per call (ADVICE r9)."""
-    from ..plans.lineage import pin, release_local_checkpoint
+    two ranked intermediates are RELEASED before returning or raising —
+    a session replaying many archive slices retains one compact block
+    table per live result, not 3 checkpointed rank frames per call
+    (ADVICE r9), and a torn capture leaves none behind."""
+    from ..plans.lineage import pin, release_pinned
 
-    s_ranked, s_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "S"))
-    s = s_ranked.select(
-        F.col("_rank"),
-        F.col("xid"),
-        F.col("seq").alias("start_seq"),
-        F.col("first_segment"),
-    )
-    e_ranked, e_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "E"))
-    e = e_ranked.select(F.col("_rank"), F.col("seq").alias("end_seq"))
-    paired = s.join(e, "_rank", "full_outer")
-    nxt = s.select((F.col("_rank") - 1).alias("_rank"), F.col("start_seq").alias("_next_start"))
-    chk = (
-        paired.join(nxt, "_rank", "left")
-        .agg(
-            F.sum(F.when(F.col("start_seq").isNull(), 1).otherwise(0)).alias("e_no_s"),
-            F.sum(F.when(F.col("end_seq").isNull(), 1).otherwise(0)).alias("open_s"),
-            F.sum(
-                F.when(F.col("end_seq") <= F.col("start_seq"), 1).otherwise(0)
-            ).alias("inverted"),
-            F.sum(
-                F.when(F.col("_next_start") < F.col("end_seq"), 1).otherwise(0)
-            ).alias("interleaved"),
+    rank_pins = []
+    try:
+        s_ranked, s_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "S"))
+        rank_pins.append(s_pin)
+        s = s_ranked.select(
+            F.col("_rank"),
+            F.col("xid"),
+            F.col("seq").alias("start_seq"),
+            F.col("first_segment"),
         )
-        .collect()[0]
-    )
-    if (chk["e_no_s"] or 0) > 0:
-        raise PgoutputError("stream stop without start (distributed pairing)")
-    if (chk["open_s"] or 0) > 1 or (chk["inverted"] or 0) > 0 or (
-        chk["interleaved"] or 0
-    ) > 0:
-        raise PgoutputError(
-            "stream block never closed before the next started "
-            "(distributed pairing)"
+        e_ranked, e_pin = _ranked_by_seq(bounds.filter(F.col("kind") == "E"))
+        rank_pins.append(e_pin)
+        e = e_ranked.select(F.col("_rank"), F.col("seq").alias("end_seq"))
+        paired = s.join(e, "_rank", "full_outer")
+        nxt = s.select(
+            (F.col("_rank") - 1).alias("_rank"), F.col("start_seq").alias("_next_start")
         )
-    out = pin(
-        paired.select(
-            "xid",
-            "start_seq",
-            F.coalesce(F.col("end_seq"), F.lit(OPEN_BLOCK_END_SEQ)).alias("end_seq"),
-            "first_segment",
-            F.col("end_seq").isNull().alias("truncated"),
+        chk = (
+            paired.join(nxt, "_rank", "left")
+            .agg(
+                F.sum(F.when(F.col("start_seq").isNull(), 1).otherwise(0)).alias("e_no_s"),
+                F.sum(F.when(F.col("end_seq").isNull(), 1).otherwise(0)).alias("open_s"),
+                F.sum(
+                    F.when(F.col("end_seq") <= F.col("start_seq"), 1).otherwise(0)
+                ).alias("inverted"),
+                F.sum(
+                    F.when(F.col("_next_start") < F.col("end_seq"), 1).otherwise(0)
+                ).alias("interleaved"),
+            )
+            .collect()[0]
         )
-    )
-    release_local_checkpoint(s_pin)
-    release_local_checkpoint(e_pin)
-    return out
+        if (chk["e_no_s"] or 0) > 0:
+            raise PgoutputError("stream stop without start (distributed pairing)")
+        if (chk["open_s"] or 0) > 1 or (chk["inverted"] or 0) > 0 or (
+            chk["interleaved"] or 0
+        ) > 0:
+            raise PgoutputError(
+                "stream block never closed before the next started "
+                "(distributed pairing)"
+            )
+        return pin(
+            paired.select(
+                "xid",
+                "start_seq",
+                F.coalesce(F.col("end_seq"), F.lit(OPEN_BLOCK_END_SEQ)).alias("end_seq"),
+                "first_segment",
+                F.col("end_seq").isNull().alias("truncated"),
+            )
+        )
+    finally:
+        # the rank frames back nothing once the block table is pinned,
+        # and a torn capture must not leave them behind either
+        for p in rank_pins:
+            release_pinned(p)
 
 
 def pgoutput_attribute_stream(
@@ -1697,168 +1692,29 @@ def pgoutput_attribute_stream(
     return stream.join(attr, on=seq_col, how="left")
 
 
-STREAM_TX_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("xid", T.LongType()),
-        T.StructField("subxid", T.LongType()),
-        T.StructField("commit_seq", T.LongType()),
-        T.StructField("commit_ts_us", T.LongType()),
-    ]
-)
-
-
-def _pgoutput_stream_ctrl(
-    stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
-) -> DataFrame:
-    """Map-only extraction of StreamCommit ('c') / StreamAbort ('A')
-    control rows — #streamed-tx rows, never #event rows."""
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seq, data in zip(pdf[seq_col], pdf[data_col]):
-                b = bytes(data)
-                tag = b[:1]
-                if tag == b"c":
-                    m = parse_message(b)
-                    rows.append(("c", m["xid"], None, int(seq), m["commit_ts_us"]))
-                elif tag == b"A":
-                    m = parse_message(b)
-                    rows.append(("A", m["xid"], m["subxid"], int(seq), None))
-            yield pd.DataFrame(
-                rows, columns=["kind", "xid", "subxid", "commit_seq", "commit_ts_us"]
-            )
-
+def _prepared_table(ctl: DataFrame) -> DataFrame:
+    """Two-phase rows of the parsed control rows → one row per prepared
+    transaction (see :func:`pgoutput_prepared_tx_table`)."""
+    begins = ctl.filter(F.col("kind") == "b").select(
+        "xid", "gid", F.col("seq").alias("begin_seq")
+    )
+    preps = ctl.filter(F.col("kind") == "P").select(
+        F.col("gid").alias("_pg"), F.col("seq").alias("prepare_seq")
+    )
+    outcomes = ctl.filter(F.col("kind").isin("K", "r")).select(
+        F.col("gid").alias("_og"),
+        F.when(F.col("kind") == "K", F.lit("commit")).otherwise(F.lit("rollback")).alias("outcome"),
+        F.col("seq").alias("outcome_seq"),
+        F.when(F.col("kind") == "K", _ts_ms("ts_us")).alias("commit_ts_ms"),
+    )
     return (
-        _tag_prefilter(stream, data_col, b"cA")
-        .select(seq_col, data_col)
-        .mapInPandas(scan, STREAM_TX_SCHEMA)
+        begins.join(preps, begins.gid == preps._pg, "inner")
+        .join(outcomes, begins.gid == outcomes._og, "left")
+        .select(
+            "xid", "gid", "begin_seq", "prepare_seq",
+            "outcome", "outcome_seq", "commit_ts_ms",
+        )
     )
-
-
-def pgoutput_stream_tx_table(
-    stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
-) -> DataFrame:
-    """StreamCommit rows → (xid, commit_seq, commit_ts_ms). Unlike v1
-    Begin/Commit (paired via LSN interval), streamed rows already carry
-    their xid inline — commit gating is a plain equi-join on xid."""
-    ctrl = _pgoutput_stream_ctrl(stream, data_col=data_col, seq_col=seq_col)
-    return ctrl.filter(F.col("kind") == "c").select(
-        "xid",
-        "commit_seq",
-        (
-            F.expr("CAST(commit_ts_us DIV 1000 AS BIGINT)") + F.lit(PG_EPOCH_UNIX_MS)
-        ).alias("commit_ts_ms"),
-    )
-
-
-def pgoutput_stream_aborts(
-    stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
-) -> DataFrame:
-    """StreamAbort rows → (xid, subxid): discard every streamed row
-    whose ``msg_xid`` equals an aborted subxid (subxid == xid when the
-    whole transaction rolled back — in which case the missing
-    StreamCommit already gates the rows out; the subxid path covers
-    partial subtransaction rollbacks inside a committed tx)."""
-    ctrl = _pgoutput_stream_ctrl(stream, data_col=data_col, seq_col=seq_col)
-    return ctrl.filter(F.col("kind") == "A").select("xid", "subxid")
-
-
-def pgoutput_stream_prepared_commits(
-    stream: DataFrame, *, data_col: str = "data", seq_col: str = "seq"
-) -> DataFrame:
-    """Streamed TWO-PHASE transactions (PG 15 ``streaming=on`` +
-    ``two_phase``): a large prepared transaction travels as S…E
-    fragments closed by Stream Prepare ('p', carrying xid AND gid)
-    instead of StreamCommit; the decision arrives later as COMMIT
-    PREPARED ('K', gid). Output ``(xid, commit_seq, commit_ts_ms)`` —
-    the same shape as :func:`pgoutput_stream_tx_table`, so the v2
-    decoder treats a decided streamed-prepared tx exactly like a
-    streamed-committed one (rolled-back and pending ones simply never
-    appear, which gates their rows out)."""
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seq, data in zip(pdf[seq_col], pdf[data_col]):
-                b = bytes(data)
-                tag = b[:1]
-                if tag not in (b"p", b"K"):
-                    continue
-                m = parse_message(b)
-                rows.append(
-                    (
-                        tag.decode(), int(seq), m["xid"], m["gid"],
-                        m.get("commit_ts_us"),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["kind", "seq", "xid", "gid", "ts_us"])
-
-    parts = (
-        _tag_prefilter(stream, data_col, b"pK")
-        .select(seq_col, data_col)
-        .mapInPandas(scan, PREPARED_PART_SCHEMA)
-    )
-    preps = parts.filter(F.col("kind") == "p").select("xid", "gid")
-    commits = parts.filter(F.col("kind") == "K").select(
-        F.col("gid").alias("_kg"),
-        F.col("seq").alias("commit_seq"),
-        (
-            F.expr("CAST(ts_us DIV 1000 AS BIGINT)") + F.lit(PG_EPOCH_UNIX_MS)
-        ).alias("commit_ts_ms"),
-    )
-    return preps.join(commits, preps.gid == commits._kg, "inner").select(
-        "xid", "commit_seq", "commit_ts_ms"
-    )
-
-
-def _prepared_parts(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    mark_stream: bool = False,
-) -> DataFrame:
-    """Map-only extraction of two-phase control rows (b/P/K/r) —
-    #prepared-tx rows, never #event rows. ``mark_stream`` additionally
-    emits a marker row per 'S' (Stream Start) so a caller that must
-    PROVE the capture has no v2 blocks gets that fact from the same
-    single pass instead of paying a second scan."""
-    tags = (b"b", b"P", b"K", b"r") + ((b"S",) if mark_stream else ())
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for seq, data in zip(pdf[seq_col], pdf[data_col]):
-                b = bytes(data)
-                tag = b[:1]
-                if tag not in tags:
-                    continue
-                if tag == b"S":
-                    rows.append(("S", int(seq), None, None, None))
-                    continue
-                m = parse_message(b)
-                ts = m.get("commit_ts_us", m.get("prepare_ts_us"))
-                rows.append((tag.decode(), int(seq), m["xid"], m["gid"], ts))
-            yield pd.DataFrame(rows, columns=["kind", "seq", "xid", "gid", "ts_us"])
-
-    return (
-        _tag_prefilter(stream, data_col, b"".join(tags))
-        .select(seq_col, data_col)
-        .mapInPandas(scan, PREPARED_PART_SCHEMA)
-    )
-
-
-PREPARED_PART_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("xid", T.LongType()),
-        T.StructField("gid", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-    ]
-)
 
 
 def pgoutput_prepared_tx_table(
@@ -1874,124 +1730,102 @@ def pgoutput_prepared_tx_table(
     prepared transactions; a capture long enough to see gid REUSE
     (commit then a new prepare under the same gid) must be split at a
     decision boundary first."""
-    parts = _prepared_parts(stream, data_col=data_col, seq_col=seq_col)
-    return _prepared_table_from_parts(parts)
+    return _prepared_table(pgoutput_control_rows(stream, data_col=data_col, seq_col=seq_col))
 
 
-def _prepared_table_from_parts(parts: DataFrame) -> DataFrame:
-    begins = parts.filter(F.col("kind") == "b").select(
-        "xid", "gid", F.col("seq").alias("begin_seq")
-    )
-    preps = parts.filter(F.col("kind") == "P").select(
-        F.col("gid").alias("_pg"), F.col("seq").alias("prepare_seq")
-    )
-    outcomes = parts.filter(F.col("kind").isin("K", "r")).select(
-        F.col("gid").alias("_og"),
-        F.when(F.col("kind") == "K", F.lit("commit")).otherwise(F.lit("rollback")).alias("outcome"),
-        F.col("seq").alias("outcome_seq"),
-        F.when(
-            F.col("kind") == "K",
-            F.expr("CAST(ts_us DIV 1000 AS BIGINT)") + F.lit(PG_EPOCH_UNIX_MS),
-        ).alias("commit_ts_ms"),
-    )
-    return (
-        begins.join(preps, begins.gid == preps._pg, "inner")
-        .join(outcomes, begins.gid == outcomes._og, "left")
-        .select(
-            "xid", "gid", "begin_seq", "prepare_seq",
-            "outcome", "outcome_seq", "commit_ts_ms",
-        )
-    )
-
-
-def decode_pgoutput_two_phase(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    tx_bucket_width: int = 256,
+def _stamp_intervals(
+    dml: DataFrame, intervals: DataFrame, *, bucket_width: int, keep_uncommitted: bool
 ) -> DataFrame:
-    """PG 15 ``two_phase`` pipeline: plain B…C transactions decode via
-    the v1 interval path; PREPARED transactions (b … P) emit only after
-    their COMMIT PREPARED ('K') arrives — the decision join is on gid —
-    and ROLLBACK PREPARED ('r') / still-pending transactions never
-    emit (emitting before the decision would un-prepare the 2PC
-    semantics downstream; a consumer wanting pre-decision visibility
-    reads :func:`pgoutput_prepared_tx_table` directly). Output is the
-    v1 schema + ``gid`` (null for plain transactions).
+    """Stamp each DML row with the transaction whose interval contains
+    its seq (``begin_seq <= seq <= commit_seq``): one bucketized
+    interval join (operators/rangejoin.py) over the union of every
+    interval table the capture has — B…C transactions and committed
+    b…P prepared ones. The intervals are disjoint in seq space (PG's
+    reorder buffer emits each transaction contiguously), so no row is
+    emitted twice. Scales with #tx, no ordering assumption, no
+    cartesian.
 
-    This entry point assumes NO protocol-v2 streaming: an S…E block's
-    DML is xid-prefixed and would silently mis-parse here, so any
-    Stream Start in the capture raises loudly with a pointer to
-    :func:`decode_pgoutput_v2` (which handles streamed AND
-    non-streamed two-phase shapes in one pass). The check rides the
-    same single control-row scan that builds the prepared table — no
-    extra pass over the data plane.
-
-    Retained storage: the DML decode feeds BOTH stamping branches
-    (plain B…C and committed prepared) — without a barrier each branch
-    re-ran the full Python message parse (two identical MapInPandas
-    subtrees in the plan). It is pinned once and, with the shared
-    control-plane pin (replacing the prepared-parts pin that
-    previously leaked one checkpoint per call), rides the result via
-    ``retain`` — callers release with ``release_retained`` once the
-    frame is consumed."""
+    ``keep_uncommitted``: a capture cut mid-transaction leaves DML with
+    a Begin but no Commit; the default inner join drops those rows
+    (commit-gated emission). The reference's sequential reader emits
+    rows as they arrive, BEFORE the commit (postgres_event.rs
+    handle_insert → send_event) — True makes it a left join for that
+    parity: orphaned rows survive with a null xid/commit_ts/gid so a
+    downstream gate can quarantine instead of silently losing them."""
     from ..operators.rangejoin import interval_join
-    from ..plans.lineage import release_pinned, retain
 
-    # one pinned control-row subset feeds the prepared-parts scan, the
-    # relation catalog AND the B/C transaction table (was 3 more
-    # full-capture scans); parts derive lazily from the tiny pin, so
-    # their own pin is no longer needed
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBCbPKrS")
-    dml = None
-    try:
-        parts = _prepared_parts(ctrl, data_col=data_col, seq_col=seq_col, mark_stream=True)
-        kind_counts = {
-            r["kind"]: r["cnt"]
-            for r in parts.groupBy("kind").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-        if kind_counts.get("S"):
-            raise PgoutputError(
-                "capture contains protocol-v2 stream blocks; "
-                "decode_pgoutput_two_phase would mis-parse xid-prefixed DML — "
-                "use decode_pgoutput_v2 (it handles streamed and non-streamed "
-                "two-phase transactions together)"
-            )
-        relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-        # persist, not checkpoint: both stamping branches resolve to one
-        # InMemoryRelation computed inside the final job (no extra job)
-        dml = decode_pgoutput_dml(
-            stream, relations, data_col=data_col, seq_col=seq_col
-        ).persist()
-        tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-        v1 = stamp_transactions(dml, tx, bucket_width=tx_bucket_width).withColumn(
-            "gid", F.lit(None).cast("string")
+    one = F.lit(1)
+    return interval_join(
+        dml.withColumn("_k", one),
+        intervals.withColumn("_k", one),
+        by="_k",
+        point_col="seq",
+        start_col="begin_seq",
+        end_col="commit_seq",
+        bucket_width=bucket_width,
+        how="left" if keep_uncommitted else "inner",
+    ).drop("_k", "begin_seq", "commit_seq")
+
+
+def _gate_streamed(sv: DataFrame, ctl: DataFrame, census: dict[str, int]) -> DataFrame:
+    """Commit-gate streamed DML rows (``stream_xid`` set): a streamed
+    tx commits either directly (StreamCommit 'c') or, with two_phase
+    on, via Stream Prepare ('p') + COMMIT PREPARED ('K', joined on
+    gid) — both land in one (xid, commit time, gid) table, joined on
+    the block's toplevel xid. Rows of a rolled-back subtransaction
+    (StreamAbort 'A', keyed by the message's own xid) are discarded;
+    a streamed tx with no commit, or a rolled-back or pending
+    streamed-prepared one, never emits."""
+    commits = ctl.filter(F.col("kind") == "c").select("xid", "ts_us", "gid")
+    if census["p"]:
+        preps = ctl.filter(F.col("kind") == "p").select("xid", F.col("gid").alias("_pg"))
+        decided = ctl.filter(F.col("kind") == "K").select("gid", "ts_us")
+        commits = commits.unionByName(
+            preps.join(decided, preps._pg == decided.gid).select("xid", "ts_us", "gid")
         )
-        prepared = _prepared_table_from_parts(parts.filter(F.col("kind") != "S"))
-        committed = prepared.filter(F.col("outcome") == "commit").select(
-            "xid", "gid", "begin_seq", "prepare_seq", "commit_ts_ms"
+    out = sv.join(
+        commits.select(F.col("xid").alias("_cxid"), "ts_us", "gid"),
+        sv.stream_xid == F.col("_cxid"),
+        "inner",
+    )
+    if census["A"]:
+        aborted = ctl.filter(F.col("kind") == "A").select(F.col("subxid").alias("_axid"))
+        out = out.join(aborted, sv.msg_xid == F.col("_axid"), "left_anti")
+    return out.select(
+        *DML_SCHEMA.names,
+        F.col("stream_xid").alias("xid"),
+        _ts_ms("ts_us").alias("commit_ts_ms"),
+        "gid",
+    )
+
+
+def _tag_census(ctrl: DataFrame, data_col: str) -> dict[str, int]:
+    """Count the pinned control rows per first-byte tag in one JVM-only
+    job — a ``noop`` write under an observation, which also
+    materializes the pin for every later pass — and reject NULL or
+    empty payloads loudly: every tag prefilter downstream would
+    otherwise drop them before a Python-side check could see them."""
+    from pyspark.sql import Observation
+
+    d = f"`{data_col}`"
+    census = Observation()
+    ctrl.observe(
+        census,
+        F.expr(f"count_if({d} IS NULL OR length({d}) = 0)").alias("bad"),
+        *[
+            F.expr(f"count_if(substring({d}, 1, 1) = X'{t:02X}')").alias(f"t{t}")
+            for t in CONTROL_TAGS
+        ],
+    ).write.format("noop").mode("overwrite").save()
+    counts = census.get
+    if counts["bad"]:
+        raise PgoutputError(
+            f"capture has {counts['bad']} row(s) with a NULL or empty payload"
         )
-        one = F.lit(1)
-        stamped = interval_join(
-            dml.withColumn("_k", one),
-            committed.withColumn("_k", one),
-            by="_k",
-            point_col="seq",
-            start_col="begin_seq",
-            end_col="prepare_seq",
-            bucket_width=tx_bucket_width,
-            how="inner",
-        ).drop("_k", "begin_seq", "prepare_seq")
-        return retain(v1.unionByName(stamped), ctrl, dml)
-    except BaseException:
-        release_pinned(ctrl)
-        if dml is not None:
-            release_pinned(dml)
-        raise
+    return {chr(t): counts[f"t{t}"] for t in CONTROL_TAGS}
 
 
-def decode_pgoutput_v2(
+def decode_pgoutput(
     stream: DataFrame,
     *,
     data_col: str = "data",
@@ -2001,199 +1835,97 @@ def decode_pgoutput_v2(
     stream_block_collect_max: int = 65536,
     block_bucket_width: int = 4096,
 ) -> DataFrame:
-    """Protocol-v2 full pipeline (PG 14+ ``streaming = on``), the ONE
-    entry point for a combined capture: the v1 path (catalog →
-    map-only DML decode → interval-join tx stamp) PLUS streamed
-    in-progress transactions stitched back together PLUS two-phase
-    transactions in BOTH their shapes —
+    """The pgoutput decoder: relation catalog → map-only DML decode →
+    transaction stamping, for every transaction shape a capture can
+    hold — plain B…C (protocol v1), streamed in-progress S…E blocks
+    (protocol v2, PG 14+ ``streaming = on``) and two-phase b…P with
+    the K/r decision later (PG 15 ``two_phase``), streamed-prepared
+    ('p') included.
 
-    - streamed txs: S…E block fragments attribute rows to their
-      toplevel xid, StreamCommit gates emission (equi-join on xid),
-      StreamAbort discards rolled-back subtransactions (anti-join on
-      msg_xid); a streamed-prepared tx ('p' + COMMIT PREPARED 'K')
-      gates through the same xid table.
-    - NON-streamed prepared txs (``two_phase`` on, small tx: b dml… P
-      with the 'K'/'r' decision later): their DML has no stream xid
-      and no B…C interval, so it stamps against the committed b…P
-      intervals from :func:`pgoutput_prepared_tx_table` — previously
-      these rows were silently inner-join-dropped (ADVICE r8).
+    The control rows (every tag in :data:`CONTROL_TAGS`, plus rows with
+    a NULL or empty payload) are pinned once, and one JVM-side tag
+    census over the pin decides which branches exist — the shape of
+    the capture, not the caller, picks the work:
 
-    Commit-gated like v1: a streamed tx with no StreamCommit, and a
-    prepared tx whose decision is rollback or missing, never emit.
-    Output schema matches :func:`decode_pgoutput` exactly so every
-    downstream consumer (change feed, envelope, sinks) is
-    format-agnostic about how the transaction traveled the wire.
+    - S/E rows: block attribution. Up to ``stream_block_collect_max``
+      boundaries (a micro-batch, a bounded slice) collect and pair on
+      the driver and membership is a broadcast bisect; above it
+      (archive replay — S…E boundaries are O(#streamed txs ×
+      segments)) the rank-paired block table
+      (:func:`pgoutput_stream_block_table`) attributes rows with one
+      bucketized interval join (:func:`pgoutput_attribute_stream`),
+      never building a driver-side block list. Streamed rows then
+      gate on StreamCommit or p+K, and StreamAbort discards
+      rolled-back subtransactions;
+    - b/P rows: committed b…P intervals join the B…C ones in the one
+      stamping join; rolled-back and pending prepared txs never emit;
+    - NULL or empty payloads raise :class:`PgoutputError`.
 
-    Block attribution picks its shape by measured boundary count
-    (one counts-only job over the map-only S/E scan):
+    A plain B…C capture thus plans exactly the v1 pipeline: the catalog
+    collect, the DML parse, the control parse and one interval join.
+    The DML parse is persisted only when both the plain and the
+    streamed branch read it. Output: ``seq, lsn, relation_id, op,
+    schema, table, before, after, n_bytes, xid, commit_ts_ms, gid``
+    (gid null unless the transaction was prepared).
 
-    - ``≤ stream_block_collect_max`` boundaries (a micro-batch, a
-      bounded slice): collect + broadcast bisect — zero extra
-      data-plane shuffles, the right call for streaming mode where
-      the micro-batch bounds the block list;
-    - above it (archive replay — S…E boundaries are O(#streamed txs ×
-      segments), a 100-TB capture has millions): fully distributed —
-      rank-paired block table (:func:`pgoutput_stream_block_table`) +
-      bucketized interval-join attribution
-      (:func:`pgoutput_attribute_stream`). Costs one data-plane
-      shuffle; never builds a driver-side block list."""
-    from ..plans.lineage import release_pinned as _release_pinned
-    from ..plans.lineage import retain as _retain
+    Retained storage: the control pin (plus the DML persist and the
+    distributed block table when built) rides the result via
+    ``retain`` — release with ``release_retained`` once consumed. On
+    any raise every pin taken so far is released first."""
+    from ..plans.lineage import release_pinned, retain
 
-    # one pinned control-row subset feeds EVERY control-plane pass
-    # below (bounds, catalog, B/C table, prepared parts, stream
-    # commit/abort/prepared gates) — previously each pass re-scanned
-    # the full capture (guide §1.2: at archive scale the re-reads are
-    # the dominant I/O term). Rides the result via retain; released on
-    # the torn-capture raise paths.
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBCSEcAbPKrp")
-    bounds = pgoutput_stream_bounds(ctrl, data_col=data_col, seq_col=seq_col)
-    bounds.persist()
-    block_table = None
+    ctrl = _control_plane_pin(stream, data_col, seq_col)
+    pins = [ctrl]
     try:
-        n_bounds = bounds.count()
-        if n_bounds <= stream_block_collect_max:
-            # small-capture fast path: broadcast-bisect membership
-            blocks = _pair_bound_rows(
-                sorted((r.asDict() for r in bounds.collect()), key=lambda r: r["seq"])
+        census = _tag_census(ctrl, data_col)
+        ctl = pgoutput_control_rows(ctrl, data_col=data_col, seq_col=seq_col)
+        n_bounds = census["S"] + census["E"]
+        src, blocks, attr = stream, None, None
+        if 0 < n_bounds <= stream_block_collect_max:
+            blocks = _pair_bound_rows(_bound_rows(ctl))
+        elif n_bounds:
+            pins.append(pgoutput_stream_block_table(_bound_rows(ctl)))
+            attr = "_blk_xid"
+            src = pgoutput_attribute_stream(
+                stream, pins[-1], data_col=data_col, seq_col=seq_col,
+                bucket_width=block_bucket_width, attr_col=attr,
             )
-            # blocks FIRST: 'R' messages inside S…E blocks are
-            # xid-prefixed too (PG's maybe_send_schema runs in-stream) —
-            # without the intervals the xid bytes would be misread as
-            # the relation_id and the entry silently poisoned
-            relations = pgoutput_relation_catalog(
-                ctrl, data_col=data_col, seq_col=seq_col, stream_blocks=blocks
+        # blocks FIRST: 'R' messages inside S…E blocks are xid-prefixed
+        # too (PG's maybe_send_schema runs in-stream) — without block
+        # membership the xid bytes would be misread as the relation_id
+        relations = pgoutput_relation_catalog(
+            ctrl if attr is None else src, data_col=data_col, seq_col=seq_col,
+            stream_blocks=blocks, attr_col=attr,
+        )
+        dml = decode_pgoutput_dml(
+            src, relations, data_col=data_col, seq_col=seq_col,
+            stream_blocks=blocks, attr_col=attr,
+        )
+        intervals = _tx_intervals(ctl)
+        if census["b"] or census["P"]:
+            intervals = intervals.unionByName(
+                _prepared_table(ctl).filter(F.col("outcome") == "commit").select(
+                    "xid", "begin_seq", F.col("prepare_seq").alias("commit_seq"),
+                    "commit_ts_ms", "gid",
+                )
             )
-            dml = decode_pgoutput_dml(
-                stream,
-                relations,
-                data_col=data_col,
-                seq_col=seq_col,
-                stream_blocks=blocks,
-            )
-        else:
-            block_table = pgoutput_stream_block_table(bounds)
-            astream = pgoutput_attribute_stream(
-                stream,
-                block_table,
-                data_col=data_col,
-                seq_col=seq_col,
-                bucket_width=block_bucket_width,
-            )
-            relations = pgoutput_relation_catalog(
-                astream, data_col=data_col, seq_col=seq_col, attr_col="_blk_xid"
-            )
-            dml = decode_pgoutput_dml(
-                astream,
-                relations,
-                data_col=data_col,
-                seq_col=seq_col,
-                attr_col="_blk_xid",
-            )
+        stamp = dict(bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted)
+        if not n_bounds:
+            return retain(_stamp_intervals(dml, intervals, **stamp), *pins)
+        # both branches below read the DML parse (the one expensive
+        # Python pass over the capture): a persist makes them share ONE
+        # InMemoryRelation computed inside the final job
+        dml = dml.persist()
+        pins.append(dml)
+        plain = dml.filter(F.col("stream_xid").isNull()).drop("stream_xid", "msg_xid")
+        streamed = _gate_streamed(dml.filter(F.col("stream_xid").isNotNull()), ctl, census)
+        return retain(
+            _stamp_intervals(plain, intervals, **stamp).unionByName(streamed), *pins
+        )
     except BaseException:
-        _release_pinned(ctrl)
+        for p in pins:
+            release_pinned(p)
         raise
-    finally:
-        bounds.unpersist()
-    # the DML decode (the one expensive Python parse of the capture)
-    # feeds BOTH the plain and the streamed branch below — persist it
-    # or each branch re-runs the full MapInPandas parse (two identical
-    # DML subtrees in the pre-r14 plan). A persist (not a checkpoint):
-    # both branches resolve to ONE InMemoryRelation computed inside
-    # the final job itself — no separate materialization job. Rides
-    # the result via retain, released by the caller.
-    dml = dml.persist()
-    plain = dml.filter(F.col("stream_xid").isNull()).drop("stream_xid", "msg_xid")
-    tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    # non-streamed prepared txs: committed b…P intervals join exactly
-    # like B…C ones; rollback/pending intervals never enter the table
-    prepared = pgoutput_prepared_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-    committed_2p = prepared.filter(F.col("outcome") == "commit").select(
-        "xid",
-        F.col("begin_seq"),
-        F.col("prepare_seq").alias("commit_seq"),
-        "commit_ts_ms",
-    )
-    v1 = _stamp_plain(
-        plain,
-        tx,
-        committed_2p,
-        bucket_width=tx_bucket_width,
-        keep_uncommitted=keep_uncommitted,
-    )
-    sv = dml.filter(F.col("stream_xid").isNotNull())
-    # a streamed tx commits either directly (StreamCommit 'c') or, with
-    # two_phase on, via Stream Prepare ('p') + COMMIT PREPARED ('K') —
-    # both shapes land in the same (xid, commit_ts) gate table
-    commits = pgoutput_stream_tx_table(
-        ctrl, data_col=data_col, seq_col=seq_col
-    ).unionByName(
-        pgoutput_stream_prepared_commits(ctrl, data_col=data_col, seq_col=seq_col)
-    )
-    aborts = pgoutput_stream_aborts(ctrl, data_col=data_col, seq_col=seq_col)
-    streamed = (
-        sv.join(
-            commits.select(F.col("xid").alias("_cxid"), "commit_ts_ms"),
-            sv.stream_xid == F.col("_cxid"),
-            "inner",
-        )
-        .join(
-            aborts.select(F.col("subxid").alias("_axid")),
-            sv.msg_xid == F.col("_axid"),
-            "left_anti",
-        )
-        .select(
-            "seq", "lsn", "relation_id", "op", "schema", "table",
-            "before", "after", "n_bytes",
-            F.col("stream_xid").alias("xid"),
-            "commit_ts_ms",
-        )
-    )
-    out = v1.unionByName(streamed)
-    # distributed path: the pinned block table still backs the lazy
-    # DML persist — it rides the result too (previously it leaked one
-    # checkpoint per archive slice, tagged on nothing)
-    pins = [ctrl, dml] + ([block_table] if block_table is not None else [])
-    return _retain(out, *pins)
-
-
-def _stamp_plain(
-    dml: DataFrame,
-    tx: DataFrame,
-    committed_prepared: DataFrame,
-    *,
-    bucket_width: int,
-    keep_uncommitted: bool,
-) -> DataFrame:
-    """Stamp plain (non-streamed) DML against BOTH interval tables —
-    B…C transactions and committed b…P prepared ones (disjoint in seq
-    space: PG's reorder buffer emits each transaction's block
-    contiguously). With ``keep_uncommitted``, rows matching NEITHER
-    survive with null xid/commit_ts (anti-join on the unique seq), so
-    the quarantine contract of :func:`stamp_transactions` holds across
-    both shapes without double-emitting prepared rows."""
-    from ..operators.rangejoin import interval_join
-
-    one = F.lit(1)
-    both = tx.select("xid", "begin_seq", "commit_seq", "commit_ts_ms").unionByName(
-        committed_prepared.select("xid", "begin_seq", "commit_seq", "commit_ts_ms")
-    )
-    stamped = interval_join(
-        dml.withColumn("_k", one),
-        both.withColumn("_k", one),
-        by="_k",
-        point_col="seq",
-        start_col="begin_seq",
-        end_col="commit_seq",
-        bucket_width=bucket_width,
-        how="inner",
-    ).drop("_k", "begin_seq", "commit_seq")
-    if not keep_uncommitted:
-        return stamped
-    orphans = dml.join(stamped.select("seq"), "seq", "left_anti")
-    for c in ("xid", "commit_ts_ms"):
-        orphans = orphans.withColumn(c, F.lit(None).cast("long"))
-    return stamped.unionByName(orphans)
 
 
 MESSAGE_SCHEMA = T.StructType(
@@ -2225,7 +1957,8 @@ def decode_pgoutput_messages(
     after image; a prefix matching the outbox allow-list is tagged
     ``__outbox`` for the OutboxProcessor, anything else
     ``__wal_message``; non-JSON content is warn-skipped. Map-only; tx
-    stamping composes via :func:`stamp_transactions` when needed."""
+    stamping composes via the same interval join
+    :func:`decode_pgoutput` uses when needed."""
     from ..patterns import AllowList
 
     allow = AllowList(outbox_prefixes or [])
@@ -2325,71 +2058,6 @@ def decode_pgoutput_truncates(
     )
 
 
-def stamp_transactions(
-    dml: DataFrame,
-    tx: DataFrame,
-    *,
-    bucket_width: int = 256,
-    keep_uncommitted: bool = False,
-) -> DataFrame:
-    """Stamp each DML row with its transaction via the bucketized
-    interval join (seq ∈ [begin_seq, commit_seq]) — scales with #tx,
-    no ordering assumption, no cartesian (operators/rangejoin.py).
-
-    ``keep_uncommitted``: a capture cut mid-transaction leaves DML with
-    a Begin but no Commit; the default inner join drops those rows
-    (commit-gated emission). The reference's sequential reader emits
-    rows as they arrive, BEFORE the commit (postgres_event.rs
-    handle_insert → send_event) — pass True for that parity: orphaned
-    rows survive with a null xid/commit_ts so a downstream gate can
-    quarantine instead of silently losing them."""
-    from ..operators.rangejoin import interval_join
-
-    one = F.lit(1)
-    return interval_join(
-        dml.withColumn("_k", one),
-        tx.withColumn("_k", one),
-        by="_k",
-        point_col="seq",
-        start_col="begin_seq",
-        end_col="commit_seq",
-        bucket_width=bucket_width,
-        how="left" if keep_uncommitted else "inner",
-    ).drop("_k", "begin_seq", "commit_seq")
-
-
-def decode_pgoutput(
-    stream: DataFrame,
-    *,
-    data_col: str = "data",
-    seq_col: str = "seq",
-    tx_bucket_width: int = 256,
-    keep_uncommitted: bool = False,
-) -> DataFrame:
-    """Full pipeline: catalog collect → map-only DML decode → tx stamp.
-
-    The relation catalog and the B/C transaction table read from ONE
-    pinned control-row subset instead of two more full-capture scans
-    (guide §1.2); the pin rides the result via ``retain`` — release
-    with ``release_retained`` once consumed."""
-    from ..plans.lineage import release_pinned, retain
-
-    ctrl = _control_plane_pin(stream, data_col, seq_col, b"RBC")
-    try:
-        relations = pgoutput_relation_catalog(ctrl, data_col=data_col, seq_col=seq_col)
-        dml = decode_pgoutput_dml(stream, relations, data_col=data_col, seq_col=seq_col)
-        tx = pgoutput_tx_table(ctrl, data_col=data_col, seq_col=seq_col)
-        return retain(
-            stamp_transactions(
-                dml, tx, bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted
-            ),
-            ctrl,
-        )
-    except BaseException:
-        release_pinned(ctrl)
-        raise
-
-
 def pgoutput_change_feed(
     stream: DataFrame,
     image_schema: T.StructType,
@@ -2439,345 +2107,6 @@ def pgoutput_change_feed(
         F.lit(None).cast("boolean").alias("tx_end"),
     )
     return retain(finish_envelope(out), *retained_pins(dec))
-
-
-# ------------------------------------------------------------------
-# deterministic wire-stream synthesis (fixture generator)
-# ------------------------------------------------------------------
-
-ORDERS_COLUMNS: list[tuple[str, int, int, int]] = [
-    ("o_orderkey", INT8, -1, 1),
-    ("o_custkey", INT8, -1, 0),
-    ("o_orderstatus", TEXT, -1, 0),
-    ("o_totalprice", FLOAT8, -1, 0),
-    ("o_orderdate", TIMESTAMP, -1, 0),
-    ("o_orderpriority", TEXT, -1, 0),
-]
-
-ORDERS_RELATION_ID = 51234
-
-STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
-
-
-def _pg_ts_text(epoch_us: int) -> str:
-    """PG text format: seconds, with fractional µs only when nonzero."""
-    ts = pd.Timestamp(int(epoch_us), unit="us")
-    base = ts.strftime("%Y-%m-%d %H:%M:%S")
-    if ts.microsecond:
-        return f"{base}.{ts.microsecond:06d}"
-    return base
-
-
-def _float_text(v: float) -> str:
-    """Shortest round-trip float text (PG float8 output semantics)."""
-    return repr(float(v))
-
-
-def _order_row_texts(
-    pdf: pd.DataFrame,
-) -> tuple[list[list[str]], list[str], list[float]]:
-    """Column-wise extraction of the per-order pgoutput text tuples:
-    (vals rows, statuses, totalprices) for an ALREADY-SORTED pdf.
-
-    r13 optimization (guide §4.2): the synth gens built each row via
-    ``pdf.iloc[i]`` — a fresh pandas Series per row — which dominated
-    synth wall at bench scale (~3x the whole encode). Values are pulled
-    once per column here; the timestamp text is the vectorized twin of
-    :func:`_pg_ts_text` (strftime on the datetime series + explicit
-    fractional-µs suffix), byte-identical output."""
-    us = pdf["o_orderdate_us"].astype("int64")
-    base = pd.to_datetime(us, unit="us").dt.strftime("%Y-%m-%d %H:%M:%S").tolist()
-    frac = (us % 1_000_000).tolist()
-    ts_text = [b + f".{f:06d}" if f else b for b, f in zip(base, frac)]
-    statuses = [str(s) for s in pdf["o_orderstatus"].tolist()]
-    prices = [float(p) for p in pdf["o_totalprice"].tolist()]
-    vals = [
-        [str(k), str(c), s, _float_text(p), t, str(pr)]
-        for k, c, s, p, t, pr in zip(
-            pdf["o_orderkey"].astype("int64").tolist(),
-            pdf["o_custkey"].astype("int64").tolist(),
-            statuses,
-            prices,
-            ts_text,
-            pdf["o_orderpriority"].tolist(),
-        )
-    ]
-    return vals, statuses, prices
-
-
-def _order_msg(
-    vals: list[str], status: str, price: float, *, stream_xid=None
-) -> bytes:
-    """One DML message from a precomputed text tuple — op by
-    o_orderstatus exactly as the per-row ``dml`` closures did
-    ('F'→delete, 'P'→update with before image, else insert)."""
-    if status == "F":
-        return encode_delete(ORDERS_RELATION_ID, vals, stream_xid=stream_xid)
-    if status == "P":
-        old = list(vals)
-        old[3] = _float_text(price - 1.0)
-        return encode_update(ORDERS_RELATION_ID, vals, old, stream_xid=stream_xid)
-    return encode_insert(ORDERS_RELATION_ID, vals, stream_xid=stream_xid)
-
-
-def _orders_with_date_us(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``orders`` with the timestamp normalized to an epoch-µs LONG up
-    front: testdata vintages differ (TIMESTAMP(NANOS) reads as long
-    under nanosAsLong, MICROS as timestamp) and the codec wants one
-    representation."""
-    from .snapshot import read_table
-
-    orders = read_table(spark, sf_dir, "orders")
-    dt = dict(orders.dtypes)["o_orderdate"]
-    if dt in ("bigint", "long"):
-        # integer DIV: epoch nanos exceed double's exact range
-        date_us = F.expr("CAST(o_orderdate DIV 1000 AS BIGINT)")
-    else:
-        # NTZ→TS cast is session-tz-based; read_table pins UTC
-        date_us = F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-    return orders.withColumn("o_orderdate_us", date_us)
-
-
-#: transactions per applyInPandas group in the synth generators — the
-#: per-GROUP harness cost (Arrow slice + pandas build + worker
-#: round-trip, ~0.5-1 ms) dominated synth wall when every transaction
-#: was its own group (~2,350 groups at sf0.1 ⇒ >1 s pure harness; the
-#: same diagnosis as the r13 bucketed tx-assembler). 32 txs/group keeps
-#: groups plentiful at every SF while amortizing the harness 32x.
-_SYNTH_TX_BUCKET = 32
-
-
-def _tx_bucketed_synth(orders: DataFrame, emit_tx, *, rows_per_tx: int) -> DataFrame:
-    """Shared fixture-generator frame (guide §4 — cross the Python
-    boundary per BUCKET of transactions, not per transaction):
-    bucket = ``_tx DIV _SYNTH_TX_BUCKET``; inside a bucket the rows
-    sort by (_tx, o_orderkey) — identical per-tx order to the old
-    one-group-per-tx shape — the text tuples extract ONCE for the
-    whole bucket (vectorized ``_order_row_texts``), and
-    ``emit_tx(tx, lo, hi, vals, statuses, prices, out)`` appends each
-    transaction's (seq, bytes) rows from its [lo, hi) slice. Output
-    rows are byte-identical to the per-tx form (seqs encode absolute
-    positions, so row order is irrelevant)."""
-    import numpy as np
-
-    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:  # defensive: applyInPandas never sends empties
-            return pd.DataFrame({"seq": [], "data": []})
-        pdf = pdf.sort_values(["_tx", "o_orderkey"]).reset_index(drop=True)
-        vals, statuses, prices = _order_row_texts(pdf)
-        txs = pdf["_tx"].to_numpy()
-        bounds = np.flatnonzero(np.r_[True, txs[1:] != txs[:-1], True])
-        out: list[tuple[int, bytes]] = []
-        for a, b in zip(bounds[:-1], bounds[1:]):
-            emit_tx(int(txs[a]), int(a), int(b), vals, statuses, prices, out)
-        return pd.DataFrame(out, columns=["seq", "data"])
-
-    keyed = orders.withColumn(
-        "_tx", F.floor(F.col("o_orderkey") / F.lit(rows_per_tx)).cast("long")
-    ).withColumn("_bkt", F.expr(f"_tx DIV {_SYNTH_TX_BUCKET}"))
-    return keyed.groupBy("_bkt").applyInPandas(gen, STREAM_SCHEMA)
-
-
-def synth_pgoutput_orders(
-    spark: SparkSession, sf_dir: str, *, rows_per_tx: int = 64
-) -> DataFrame:
-    """Encode the ``orders`` table as a deterministic pgoutput stream:
-    per transaction group (o_orderkey // rows_per_tx): R, B, one DML per
-    order (op by o_orderstatus: 'F'→delete, 'P'→update with before
-    image, else insert), C. The encoder is the codec's own inverse, so
-    ``decode_pgoutput`` over this stream must reproduce the source
-    table bit-for-bit — which the DuckDB oracle checks from the
-    original parquet, independent of any of this code."""
-    orders = _orders_with_date_us(spark, sf_dir)
-    slot = rows_per_tx + 3  # R, B, rows..., C
-
-    def emit(tx, lo, hi, vals, statuses, prices, out):
-        base = tx * slot
-        xid = tx & 0xFFFFFFFF
-        commit_ts_us = xid * 1_000_000
-        n = hi - lo
-        commit_seq = base + n + 2
-        out.append(
-            (base, encode_relation(ORDERS_RELATION_ID, "public", "orders", ORDERS_COLUMNS))
-        )
-        out.append((base + 1, encode_begin(commit_seq, commit_ts_us, xid)))
-        for i in range(lo, hi):
-            out.append((base + 2 + i - lo, _order_msg(vals[i], statuses[i], prices[i])))
-        out.append((commit_seq, encode_commit(commit_seq, commit_seq + 1, commit_ts_us)))
-
-    return _tx_bucketed_synth(orders, emit, rows_per_tx=rows_per_tx)
-
-
-def synth_pgoutput_streamed(
-    spark: SparkSession, sf_dir: str, *, rows_per_tx: int = 64
-) -> DataFrame:
-    """Protocol-v2 twin of :func:`synth_pgoutput_orders`: every third
-    transaction travels as a STREAMED in-progress transaction —
-    S…E block(s) with xid-prefixed DML, closed by StreamCommit — and
-    every ninth additionally large enough to split into TWO segments
-    (first_segment then continuation) before committing; every
-    (9k+6)-th streamed tx ends in StreamAbort instead (its rows must
-    never emit). Deterministic, so the DuckDB oracle can reproduce the
-    expected committed row set from the orders parquet alone.
-
-    Streamed transactions announce their relation IN-STREAM — the 'R'
-    sits inside the first S…E block with the leading xid, exactly as
-    PG 14's ``maybe_send_schema`` emits it for a relation first touched
-    mid-stream — so the catalog's in-block relation parsing is
-    value-checked end-to-end, not just the DML path.
-
-    Layout per tx slot (rows_per_tx + 8 seqs wide):
-      plain:    R B dml… C                 (v1, unchanged)
-      streamed: S Rˣ dml… E c              (single segment, in-block R)
-      split:    S Rˣ dml₁… E S dml₂… E c   (two segments, same xid)
-      aborted:  S Rˣ dml… E A              (whole-tx rollback)
-    """
-    orders = _orders_with_date_us(spark, sf_dir)
-    slot = rows_per_tx + 8  # R + worst case S…E S…E + commit/abort
-
-    def emit(tx, lo, hi, vals, statuses, prices, out):
-        base = tx * slot
-        xid = tx & 0xFFFFFFFF
-        commit_ts_us = xid * 1_000_000
-        n = hi - lo
-        streamed = tx % 3 == 0
-        split = streamed and tx % 9 == 0
-        aborted = streamed and tx % 9 == 6
-
-        def dml(i: int, *, stream_xid=None) -> bytes:
-            return _order_msg(
-                vals[i], statuses[i], prices[i], stream_xid=stream_xid
-            )
-
-        seq = base
-        if not streamed:
-            out.append(
-                (seq, encode_relation(ORDERS_RELATION_ID, "public", "orders", ORDERS_COLUMNS))
-            )
-            seq += 1
-            commit_seq = base + n + 2
-            out.append((seq, encode_begin(commit_seq, commit_ts_us, xid)))
-            seq += 1
-            for i in range(lo, hi):
-                out.append((seq, dml(i)))
-                seq += 1
-            out.append((commit_seq, encode_commit(commit_seq, commit_seq + 1, commit_ts_us)))
-        else:
-            half = n // 2 if split else n
-            out.append((seq, encode_stream_start(xid, first_segment=True)))
-            seq += 1
-            # relation announced IN-STREAM, xid-prefixed (PG 14
-            # maybe_send_schema inside the streamed block)
-            out.append(
-                (
-                    seq,
-                    encode_relation(
-                        ORDERS_RELATION_ID, "public", "orders", ORDERS_COLUMNS,
-                        stream_xid=xid,
-                    ),
-                )
-            )
-            seq += 1
-            for i in range(lo, lo + half):
-                out.append((seq, dml(i, stream_xid=xid)))
-                seq += 1
-            out.append((seq, encode_stream_stop()))
-            seq += 1
-            if split:
-                out.append((seq, encode_stream_start(xid, first_segment=False)))
-                seq += 1
-                for i in range(lo + half, hi):
-                    out.append((seq, dml(i, stream_xid=xid)))
-                    seq += 1
-                out.append((seq, encode_stream_stop()))
-                seq += 1
-            if aborted:
-                out.append((seq, encode_stream_abort(xid, xid)))
-            else:
-                out.append(
-                    (seq, encode_stream_commit(xid, seq, seq + 1, commit_ts_us))
-                )
-
-    return _tx_bucketed_synth(orders, emit, rows_per_tx=rows_per_tx)
-
-
-def synth_pgoutput_two_phase(
-    spark: SparkSession, sf_dir: str, *, rows_per_tx: int = 64
-) -> DataFrame:
-    """Two-phase twin of :func:`synth_pgoutput_orders` (PG 15
-    ``two_phase``): every third transaction travels PREPARED —
-    ``b dml… P`` with the decision arriving later in the capture as
-    COMMIT PREPARED ('K'); every (9k+6)-th prepared transaction gets
-    ROLLBACK PREPARED ('r') instead and must never emit; every
-    (9k+3)-th stays PENDING (no decision in the capture) and must not
-    emit either. Deterministic, so the DuckDB oracle reproduces the
-    committed row set from the orders parquet alone.
-
-    Layout per tx slot (rows_per_tx + 8 seqs wide):
-      plain:      R B dml… C
-      committed:  R b dml… P K      (decision at slot end)
-      rolled:     R b dml… P r
-      pending:    R b dml… P        (decision outside the capture)
-    """
-    orders = _orders_with_date_us(spark, sf_dir)
-    slot = rows_per_tx + 8
-
-    def emit(tx, lo, hi, vals, statuses, prices, out):
-        base = tx * slot
-        xid = tx & 0xFFFFFFFF
-        gid = f"tx{xid}"
-        ts_us = xid * 1_000_000
-        n = hi - lo
-        prepared = tx % 3 == 0
-        rolled = prepared and tx % 9 == 6
-        pending = prepared and tx % 9 == 3
-
-        def dml(i: int) -> bytes:
-            return _order_msg(vals[i], statuses[i], prices[i])
-
-        out.append(
-            (base, encode_relation(ORDERS_RELATION_ID, "public", "orders", ORDERS_COLUMNS))
-        )
-        seq = base + 1
-        if not prepared:
-            commit_seq = base + n + 2
-            out.append((seq, encode_begin(commit_seq, ts_us, xid)))
-            seq += 1
-            for i in range(lo, hi):
-                out.append((seq, dml(i)))
-                seq += 1
-            out.append((commit_seq, encode_commit(commit_seq, commit_seq + 1, ts_us)))
-        else:
-            prep_seq = base + n + 2
-            out.append((seq, encode_begin_prepare(prep_seq, prep_seq + 1, ts_us, xid, gid)))
-            seq += 1
-            for i in range(lo, hi):
-                out.append((seq, dml(i)))
-                seq += 1
-            out.append((prep_seq, encode_prepare(prep_seq, prep_seq + 1, ts_us, xid, gid)))
-            if rolled:
-                out.append(
-                    (
-                        prep_seq + 1,
-                        encode_rollback_prepared(
-                            prep_seq, prep_seq + 2, ts_us, ts_us + 1, xid, gid
-                        ),
-                    )
-                )
-            elif not pending:
-                out.append(
-                    (
-                        prep_seq + 1,
-                        encode_commit_prepared(prep_seq, prep_seq + 2, ts_us, xid, gid),
-                    )
-                )
-
-    return _tx_bucketed_synth(orders, emit, rows_per_tx=rows_per_tx)
 
 
 RELATION_VERSION_SCHEMA = T.StructType(

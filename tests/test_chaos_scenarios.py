@@ -481,10 +481,8 @@ def test_pg_capture_cut_mid_transaction(spark, tmp_path):
     silent."""
     from pyspark.sql import functions as F
 
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput,
-        synth_pgoutput_orders,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_orders
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     full = synth_pgoutput_orders(spark, "/root/testdata/sf0.001")
     last_commit = full.agg(F.max("seq")).collect()[0][0]

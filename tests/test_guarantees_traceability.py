@@ -53,3 +53,15 @@ def test_cited_queries_are_declared():
         and q not in bench_defs
     )
     assert not unknown, f"GUARANTEES.md cites undeclared queries: {unknown}"
+
+
+def test_cited_pgoutput_names_resolve():
+    """A stale citation of a deleted pgoutput decoder or helper fails:
+    every backticked ``decode_*`` / ``pgoutput_*`` name must exist in
+    the pgoutput module."""
+    from deltaforge_spark.sources import pgoutput
+
+    cited = set(re.findall(r"`((?:decode|pgoutput)_\w+)`", _doc()))
+    assert cited, "matrix cites no pgoutput names?"
+    missing = sorted(n for n in cited if not hasattr(pgoutput, n))
+    assert not missing, f"GUARANTEES.md cites names pgoutput does not define: {missing}"

@@ -7,12 +7,10 @@ reassembly, and subtransaction abort discard."""
 import pytest
 
 from deltaforge_spark.sources.pgoutput import (
-    ORDERS_COLUMNS,
-    ORDERS_RELATION_ID,
     PgoutputError,
     ReplicationStream,
+    decode_pgoutput,
     decode_pgoutput_dml,
-    decode_pgoutput_v2,
     encode_commit,
     encode_begin,
     encode_insert,
@@ -24,10 +22,9 @@ from deltaforge_spark.sources.pgoutput import (
     encode_update,
     encode_xlogdata,
     parse_message,
+    pgoutput_control_rows,
     pgoutput_relation_catalog,
-    pgoutput_stream_aborts,
     pgoutput_stream_blocks,
-    pgoutput_stream_tx_table,
 )
 
 REL = 77
@@ -180,7 +177,7 @@ class TestDistributedStitch:
             pgoutput_stream_blocks(dangling)
 
     def test_commit_gating_multiseg_stitch_and_abort_discard(self, spark):
-        dec = decode_pgoutput_v2(_base_stream(spark))
+        dec = decode_pgoutput(_base_stream(spark))
         got = sorted(
             (r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect()
         )
@@ -203,18 +200,21 @@ class TestDistributedStitch:
             (5, encode_stream_abort(10, 11)),  # subxact rolls back...
             (6, encode_stream_commit(10, 0x10, 0x11, 1_000_000)),  # ...tx commits
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = [(r["xid"], r["after"]) for r in dec.collect()]
         assert got == [(10, '{"id": 1, "name": "main"}')]
 
     def test_stream_ctrl_tables(self, spark):
-        s = _base_stream(spark)
+        ctl = pgoutput_control_rows(_base_stream(spark))
         commits = {
-            (r["xid"], r["commit_ts_ms"]) for r in pgoutput_stream_tx_table(s).collect()
+            (r["xid"], r["ts_us"]) for r in ctl.filter("kind = 'c'").collect()
         }
-        assert commits == {(10, 946684800000 + 5_000)}
-        aborts = {(r["xid"], r["subxid"]) for r in pgoutput_stream_aborts(s).collect()}
+        assert commits == {(10, 5_000_000)}
+        aborts = {(r["xid"], r["subxid"]) for r in ctl.filter("kind = 'A'").collect()}
         assert aborts == {(20, 20)}
+        # the same one scan carries the S/E boundaries and the B…C pair
+        kinds = sorted(r["kind"] for r in ctl.collect())
+        assert kinds == sorted("SESESEcABC")
 
     def test_dml_v1_schema_unchanged_without_blocks(self, spark):
         s = _base_stream(spark)
@@ -266,7 +266,7 @@ class TestInStreamRelation:
         assert poisoned
 
     def test_v2_pipeline_decodes_rows_announced_in_stream(self, spark):
-        dec = decode_pgoutput_v2(self._stream(spark))
+        dec = decode_pgoutput(self._stream(spark))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [
             (10, '{"id": 1, "name": "a"}'),
@@ -310,7 +310,7 @@ class TestTrailingOpenBlock:
         assert blk["end_seq"] == OPEN_BLOCK_END_SEQ
         # the truncated block's rows parse in streamed form but the
         # missing StreamCommit gates them out — nothing emits
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         assert dec.count() == 0
 
     def test_closed_blocks_have_no_truncated_flag(self, spark):
@@ -396,7 +396,7 @@ class TestDistributedPathParity:
 
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_combined_capture_decodes_every_shape(self, spark, collect_max):
-        dec = decode_pgoutput_v2(
+        dec = decode_pgoutput(
             _combined_capture(spark), stream_block_collect_max=collect_max
         )
         got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
@@ -404,8 +404,8 @@ class TestDistributedPathParity:
 
     def test_fast_and_distributed_agree_row_for_row(self, spark):
         s = _combined_capture(spark)
-        fast = decode_pgoutput_v2(s, stream_block_collect_max=65536)
-        dist = decode_pgoutput_v2(s, stream_block_collect_max=0)
+        fast = decode_pgoutput(s, stream_block_collect_max=65536)
+        dist = decode_pgoutput(s, stream_block_collect_max=0)
         assert fast.columns == dist.columns
         key = lambda r: tuple(r)
         assert sorted(map(key, fast.collect())) == sorted(map(key, dist.collect()))
@@ -456,8 +456,8 @@ class TestDistributedPathParity:
                 add(encode_prepare(seq, seq + 1, 1_000_000 * i, xid, gid))
                 add(encode_commit_prepared(seq, seq + 1, 1_000_000 * i + 7, xid, gid))
         s = _df(spark, rows).repartition(8)
-        fast = decode_pgoutput_v2(s, stream_block_collect_max=1 << 30)
-        dist = decode_pgoutput_v2(s, stream_block_collect_max=0)
+        fast = decode_pgoutput(s, stream_block_collect_max=1 << 30)
+        dist = decode_pgoutput(s, stream_block_collect_max=0)
         kf = sorted(tuple(r) for r in fast.collect())
         kd = sorted(tuple(r) for r in dist.collect())
         assert kf == kd and len(kf) > 100
@@ -474,10 +474,10 @@ class TestDistributedPathParity:
             ],
         )
         with pytest.raises(PgoutputError):
-            decode_pgoutput_v2(torn, stream_block_collect_max=collect_max).collect()
+            decode_pgoutput(torn, stream_block_collect_max=collect_max).collect()
         dangling = _df(spark, [(0, encode_stream_stop())])
         with pytest.raises(PgoutputError):
-            decode_pgoutput_v2(
+            decode_pgoutput(
                 dangling, stream_block_collect_max=collect_max
             ).collect()
 
@@ -492,7 +492,7 @@ class TestDistributedPathParity:
             (5, encode_insert(REL, ["2", "cut"], stream_xid=10)),
             # capture ends mid-block: no E, no StreamCommit
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows), stream_block_collect_max=collect_max)
+        dec = decode_pgoutput(_df(spark, rows), stream_block_collect_max=collect_max)
         got = [(r["xid"], r["after"]) for r in dec.collect()]
         # the committed v1 row survives; the truncated block's row is
         # commit-gated out (graceful degrade, not an error)
@@ -517,11 +517,16 @@ class TestDistributedPathParity:
 
 
 class TestTwoPhaseStreamGuard:
-    def test_two_phase_decode_refuses_v2_stream_blocks(self, spark):
-        """decode_pgoutput_two_phase would mis-parse xid-prefixed DML in
-        S…E blocks — it must refuse loudly and point to the v2 entry
-        (ADVICE r8 medium, landed r9; pinned here)."""
-        from deltaforge_spark.sources.pgoutput import decode_pgoutput_two_phase
+    def test_stream_blocks_and_prepared_txs_decode(self, spark):
+        """A two-phase capture that also holds an S…E block: the tag
+        census sees both, so the streamed DML parses in its
+        xid-prefixed form (never mis-parsed as plain) and the prepared
+        tx stamps through the b…P interval, with its gid."""
+        from deltaforge_spark.sources.pgoutput import (
+            encode_begin_prepare,
+            encode_commit_prepared,
+            encode_prepare,
+        )
 
         rows = [
             (0, encode_relation(REL, "public", "t", COLS)),
@@ -529,14 +534,24 @@ class TestTwoPhaseStreamGuard:
             (2, encode_insert(REL, ["1", "a"], stream_xid=10)),
             (3, encode_stream_stop()),
             (4, encode_stream_commit(10, 0x100, 0x101, 5_000_000)),
+            (5, encode_begin_prepare(0x20, 0x21, 8_000_000, 40, "g40")),
+            (6, encode_insert(REL, ["4", "d"])),
+            (7, encode_prepare(0x20, 0x21, 8_000_000, 40, "g40")),
+            (8, encode_commit_prepared(0x20, 0x22, 11_000_000, 40, "g40")),
         ]
-        with pytest.raises(PgoutputError, match="decode_pgoutput_v2"):
-            decode_pgoutput_two_phase(_df(spark, rows))
+        got = sorted(
+            (r["xid"], r["gid"], r["after"])
+            for r in decode_pgoutput(_df(spark, rows)).collect()
+        )
+        assert got == [
+            (10, None, '{"id": 1, "name": "a"}'),
+            (40, "g40", '{"id": 4, "name": "d"}'),
+        ]
 
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_plain_prepared_tx_emits_through_v2(self, spark, collect_max):
         """A committed NON-streamed prepared tx (b dml P … K) must emit
-        through decode_pgoutput_v2's plain path — ADVICE r8: these rows
+        through decode_pgoutput's plain path — ADVICE r8: these rows
         were silently inner-join-dropped before r9."""
         from deltaforge_spark.sources.pgoutput import (
             encode_begin_prepare,
@@ -556,7 +571,7 @@ class TestTwoPhaseStreamGuard:
             (7, encode_commit_prepared(0x20, 0x22, 11_000_000, 40, "g40")),
             (8, encode_rollback_prepared(0x30, 0x32, 9_000_000, 9_500_000, 50, "g50")),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows), stream_block_collect_max=collect_max)
+        dec = decode_pgoutput(_df(spark, rows), stream_block_collect_max=collect_max)
         got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         assert got == [(40, '{"id": 4, "name": "d"}', 946684800000 + 11_000)]
 
@@ -579,7 +594,7 @@ class TestVersionedCatalogResolution:
             (5, encode_insert(REL, ["2", "b"])),
             (6, encode_commit(9, 10, 2_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [(31, '{"id": 2, "name": "b"}')]
 
@@ -596,7 +611,7 @@ class TestVersionedCatalogResolution:
             (6, encode_insert(REL, ["2", "b"])),
             (7, encode_commit(9, 10, 2_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = sorted((r["xid"], r["after"]) for r in dec.collect())
         assert got == [
             (30, '{"id": 1, "name": "a"}'),
@@ -611,14 +626,14 @@ class TestVersionedCatalogResolution:
             (3, encode_insert(9999, ["2", "b"])),  # never announced
             (4, encode_commit(5, 6, 1_000_000)),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         assert [r["after"] for r in dec.collect()] == ['{"id": 1, "name": "a"}']
 
 
 class TestDmlPrefilter:
     """The JVM-side first-byte prefilter (VERDICT r10 #2): control /
     relation rows are dropped inside whole-stage codegen BEFORE the
-    Arrow crossing, and doing so changes nothing about the decode."""
+    Arrow crossing."""
 
     def _capture(self):
         rows = [
@@ -644,16 +659,60 @@ class TestDmlPrefilter:
         assert "substring(data" in plan and "0x49" in plan, plan
         assert plan.index("MapInPandas") < plan.index("substring(data"), plan
 
-    def test_prefilter_off_decodes_identically(self, spark):
-        df = _df(spark, self._capture())
-        rel = pgoutput_relation_catalog(df)
-        on = sorted(map(tuple, decode_pgoutput_dml(df, rel).collect()))
-        off = sorted(
-            map(
-                tuple,
-                decode_pgoutput_dml(
-                    df, rel, first_byte_prefilter=False
-                ).collect(),
-            )
-        )
-        assert on == off and len(on) == 2
+
+class TestSingleDecoder:
+    """decode_pgoutput builds only the branches its tag census finds in
+    the capture."""
+
+    def _plain(self, spark):
+        rows = [(0, encode_relation(REL, "public", "t", COLS))]
+        for i in range(3):
+            b = 1 + 3 * i
+            rows += [
+                (b, encode_begin(b + 2, 1_000_000, 30 + i)),
+                (b + 1, encode_insert(REL, [str(i), "a"])),
+                (b + 2, encode_commit(b + 2, b + 3, 1_000_000)),
+            ]
+        return _df(spark, rows)
+
+    @staticmethod
+    def _plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_plain_capture_plans_only_the_v1_branches(self, spark):
+        import re
+
+        plan = self._plan(decode_pgoutput(self._plain(spark)))
+        # two Python functions run: the DML parse and the control parse
+        # (the control parse is referenced by both sides of the B⋈C
+        # equi-join, so it prints twice under one expression id)
+        udfs = set(re.findall(r"MapInPandas (\w+)\([^)]*\)#(\d+)", plan))
+        assert sorted(name for name, _ in udfs) == ["run", "scan"], plan
+        # no persist over the DML: the only cached relation is the pin
+        cached = [ln for ln in plan.splitlines() if "InMemoryRelation" in ln]
+        assert cached and not any("relation_id" in ln for ln in cached), plan
+        # no S/E attribution, c/A gate or prepared join: the B⋈C pairing
+        # and the one interval join are the only joins
+        for col in ("stream_xid", "_cxid", "_axid", "_pg", "_og", "_blk_xid"):
+            assert col not in plan, (col, plan)
+        assert sum("Join " in ln for ln in plan.splitlines()) == 2, plan
+
+    def test_streamed_capture_builds_the_streamed_branch(self, spark):
+        plan = self._plan(decode_pgoutput(_base_stream(spark)))
+        assert "stream_xid" in plan and "_cxid" in plan and "_axid" in plan
+        assert any(
+            "InMemoryRelation" in ln and "relation_id" in ln for ln in plan.splitlines()
+        ), plan
+
+    def test_keep_uncommitted_emits_each_row_once(self, spark):
+        rows = [
+            (0, encode_relation(REL, "public", "t", COLS)),
+            (1, encode_begin(3, 1_000_000, 10)),
+            (2, encode_insert(REL, ["1", "a"])),
+            (3, encode_commit(3, 4, 1_000_000)),
+            # capture cut before this tx's Commit
+            (4, encode_begin(9, 2_000_000, 11)),
+            (5, encode_insert(REL, ["2", "b"])),
+        ]
+        dec = decode_pgoutput(_df(spark, rows), keep_uncommitted=True)
+        assert sorted((r["seq"], r["xid"]) for r in dec.collect()) == [(2, 10), (5, None)]

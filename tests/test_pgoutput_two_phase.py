@@ -3,12 +3,14 @@ byte-pinned b/P/K/r/p vectors against the public message-format docs,
 the prepared-transaction control table, and the decode pipeline's
 decision gating (commit emits, rollback and pending never do)."""
 
+import os
+import urllib.parse
+
 import pytest
 
 from deltaforge_spark.sources.pgoutput import (
     PgoutputError,
     decode_pgoutput,
-    decode_pgoutput_two_phase,
     encode_begin,
     encode_begin_prepare,
     encode_commit,
@@ -130,9 +132,8 @@ class TestPreparedAssembly:
     def test_streamed_two_phase_gates_on_commit_prepared(self, spark):
         """PG 15 streaming + two_phase combined: S…E fragments closed by
         Stream Prepare ('p'), decided by 'K'/'r' — rows emit only for
-        the committed gid, through decode_pgoutput_v2's streamed path."""
+        the committed gid, through decode_pgoutput's streamed path."""
         from deltaforge_spark.sources.pgoutput import (
-            decode_pgoutput_v2,
             encode_stream_abort,
             encode_stream_prepare,
             encode_stream_start,
@@ -155,13 +156,13 @@ class TestPreparedAssembly:
             (9, encode_commit_prepared(0x10, 0x12, 5_000_000, 10, "sg10")),
             (10, encode_rollback_prepared(0x20, 0x22, 2_000_000, 2_100_000, 20, "sg20")),
         ]
-        dec = decode_pgoutput_v2(_df(spark, rows))
+        dec = decode_pgoutput(_df(spark, rows))
         got = sorted((r["xid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         assert got == [(10, '{"id": 1, "name": "a"}', 946684800000 + 5_000)]
         assert encode_stream_abort is not None
 
     def test_decode_gates_on_commit_prepared(self, spark):
-        dec = decode_pgoutput_two_phase(_capture(spark))
+        dec = decode_pgoutput(_capture(spark))
         got = sorted((r["xid"], r["gid"], r["after"], r["commit_ts_ms"]) for r in dec.collect())
         # g10 emits with the COMMIT PREPARED timestamp; g20 (rolled
         # back) and g30 (pending) never emit; xid 40 rides the v1 path
@@ -180,24 +181,71 @@ def _stored(spark) -> int:
     return n + int(field.get(cm).size())
 
 
+def _checkpoint_files(spark) -> set:
+    """Every file under the session's reliable-checkpoint dir."""
+    root = urllib.parse.urlparse(spark.sparkContext.getCheckpointDir()).path
+    return {os.path.join(d, f) for d, _, files in os.walk(root) for f in files}
+
+
 class TestErrorPathReleasesPins:
     """A decode that raises after pinning its control rows releases the
-    pin before the error propagates."""
+    pin — and every pin taken after it — before the error propagates."""
 
-    @pytest.mark.parametrize(
-        "decode", [decode_pgoutput, decode_pgoutput_two_phase], ids=lambda f: f.__name__
-    )
-    def test_malformed_relation_leaks_nothing(self, spark, decode):
+    @pytest.mark.parametrize("prepared", [False, True], ids=["decode_plain", "decode_two_phase"])
+    def test_malformed_relation_leaks_nothing(self, spark, prepared):
         rel = encode_relation(REL, "public", "t", COLS)
         with pytest.raises(PgoutputError, match="truncated"):
             parse_message(rel[:-3])
-        stream = _df(spark, [
+        rows = [
             (0, rel[:-3]),
             (1, encode_begin(14, 7_000_000, 40)),
             (2, encode_insert(REL, ["4", "d"])),
             (3, encode_commit(14, 15, 7_000_000)),
-        ])
+        ]
+        if prepared:
+            rows += [
+                (4, encode_begin_prepare(6, 7, 1_000_000, 10, "g10")),
+                (5, encode_insert(REL, ["1", "a"])),
+                (6, encode_prepare(6, 7, 1_000_000, 10, "g10")),
+            ]
+        stream = _df(spark, rows)
         before = _stored(spark)
         with pytest.raises(Exception, match="truncated"):
-            decode(stream)
+            decode_pgoutput(stream)
         assert _stored(spark) == before
+
+    @pytest.mark.parametrize("payload", [None, b""], ids=["null", "empty"])
+    def test_null_or_empty_payload_raises(self, spark, payload):
+        """The JVM-side tag prefilters would drop these rows silently;
+        the census counts them and the decode fails loudly."""
+        stream = _df(spark, [
+            (0, encode_relation(REL, "public", "t", COLS)),
+            (1, encode_begin(3, 7_000_000, 40)),
+            (2, payload),
+            (3, encode_commit(3, 4, 7_000_000)),
+        ])
+        before = _stored(spark)
+        with pytest.raises(PgoutputError, match="1 row.*NULL or empty"):
+            decode_pgoutput(stream)
+        assert _stored(spark) == before
+
+    @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
+    def test_torn_stream_capture_leaks_nothing(self, spark, collect_max):
+        """S, S, E: a block never closed before the next started. The
+        distributed pairing raises after pinning its rank frames; those
+        (reliable checkpoints) and the control pin must all be gone."""
+        from deltaforge_spark.sources.pgoutput import (
+            encode_stream_start,
+            encode_stream_stop,
+        )
+
+        stream = _df(spark, [
+            (0, encode_stream_start(1)),
+            (1, encode_stream_start(2)),
+            (2, encode_stream_stop()),
+        ])
+        before, files = _stored(spark), _checkpoint_files(spark)
+        with pytest.raises(PgoutputError, match="never closed"):
+            decode_pgoutput(stream, stream_block_collect_max=collect_max)
+        assert _stored(spark) == before
+        assert _checkpoint_files(spark) - files == set()

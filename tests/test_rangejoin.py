@@ -61,6 +61,20 @@ def test_left_join_keeps_unmatched_points(spark, frames):
 
 
 @pytest.mark.spark
+def test_left_join_matched_point_with_null_column_emits_once(spark, frames):
+    _, intervals = frames
+    points = spark.createDataFrame(
+        [(1, "u", 100, None), (2, "v", 100, None)],
+        "pid long, k string, p long, note string",
+    )
+    out = interval_join(
+        points, intervals, by="k", point_col="p",
+        start_col="s", end_col="e", bucket_width=100, how="left",
+    ).collect()
+    assert sorted((r.pid, r.tag) for r in out) == [(1, "a"), (2, None)]
+
+
+@pytest.mark.spark
 def test_no_cartesian_in_plan(spark, frames):
     points, intervals = frames
     df = interval_join(

@@ -17,10 +17,8 @@ from deltaforge_spark.sources.binlog import (
     decode_binlog_segments,
     synth_binlog_events,
 )
-from deltaforge_spark.sources.pgoutput import (
-    decode_pgoutput,
-    synth_pgoutput_orders,
-)
+from deltaforge_spark.sources.fixtures import synth_pgoutput_orders
+from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
 
 @pytest.fixture(scope="module")
@@ -284,10 +282,7 @@ def test_pgoutput_envelope_feeds_tx_assembly(spark, sf_dir):
     wire bytes must equal the orders-per-transaction group sizes."""
     from pyspark.sql import types as T
 
-    from deltaforge_spark.sources.pgoutput import (
-        pgoutput_change_feed,
-        synth_pgoutput_orders,
-    )
+    from deltaforge_spark.sources.pgoutput import pgoutput_change_feed
     from deltaforge_spark.streaming import assembled_transactions_batch
 
     image_schema = T.StructType(

@@ -4,7 +4,8 @@
 # value-verified" cannot recur (the fast tier catches SQL-side
 # regressions in seconds; the --all tier value-checks every query).
 #
-#   tools/ci.sh fast   # seconds : oracle SQL parses + unit guards
+#   tools/ci.sh fast   # ~1 min  : oracle SQL parses + unit guards +
+#                      # the pgoutput decode oracles at sf0.001
 #   tools/ci.sh all    # minutes : pytest + full DuckDB value-check
 #   tools/ci.sh sf1    # ~2 h    : 10x scale soak — regenerate sf1,
 #                      # time the risky kernels, value-check the FULL
@@ -28,6 +29,11 @@ python -m pytest tests/test_pyworker.py::TestArchiveReads -q
 if [ "$tier" != "all" ]; then
     python -m pytest tests/test_plan_shape.py -q
 fi
+# the four pgoutput decode paths (plain, streamed, two-phase, change
+# feed) against their DuckDB oracles in EVERY tier, so a decoder change
+# gets a value check on each commit (~45 s on 4 cores)
+python tools/check.py /root/testdata/sf0.001 cdc_pgoutput_decode \
+    cdc_pgoutput_stream_decode cdc_pgoutput_two_phase cdc_pgoutput_changefeed
 
 if [ "$tier" = "all" ]; then
     python -m pytest tests/ -x -q

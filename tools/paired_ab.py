@@ -9,13 +9,12 @@ is trustworthy where a pair of independent runs is not — shared-tenant
 stalls land on single runs, not on every interleaved pair the same way.
 
 Usage:
-    python tools/paired_ab.py pgoutput_prefilter [pairs] [sf_dir]
+    python tools/paired_ab.py pin_reliable [pairs] [sf_dir]
 
 Experiments:
-    pgoutput_prefilter — decode_pgoutput with vs without the JVM-side
-        first-byte DML prefilter (VERDICT r10 #2): A = control rows
-        cross the Arrow boundary and die in Python, B = they are
-        dropped inside whole-stage codegen before mapInPandas.
+    pin_reliable / pin_reliable_bpe — an iterative pin-per-round kernel
+        (connected components / BPE training) with localCheckpoint
+        rounds (A) vs reliable checkpoint rounds (B).
 """
 
 from __future__ import annotations
@@ -31,51 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _stage_wal(spark, sf_dir: str, *, rows_per_tx: int = 64):
-    from bench import _parquet_staged
-    from deltaforge_spark.sources.pgoutput import synth_pgoutput_orders
-
-    par = spark.sparkContext.defaultParallelism
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    suffix = "" if rows_per_tx == 64 else f"-tx{rows_per_tx}"
-    wal_path = f"/dev/shm/deltaforge-bench-data/pgoutput-v1-p{par}-sf{sf}{suffix}"
-    if not _parquet_staged(wal_path):
-        synth_pgoutput_orders(spark, sf_dir, rows_per_tx=rows_per_tx).repartition(
-            par
-        ).write.mode("overwrite").parquet(wal_path)
-    return spark.read.parquet(wal_path)
-
-
-def _pgoutput_prefilter(spark, sf_dir: str, *, rows_per_tx: int = 64):
-    """(make_a, make_b): full decode_pgoutput pipeline with the DML
-    prefilter off (A) vs on (B); everything else identical.
-
-    ``rows_per_tx`` sets the control-row fraction of the capture:
-    64 (the bench capture) → ~4.5% control rows, 1 → 75% — the
-    small-transaction shape where the Arrow-crossing saving is the
-    dominant term."""
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_dml,
-        pgoutput_relation_catalog,
-        pgoutput_tx_table,
-        stamp_transactions,
-    )
-
-    wal = _stage_wal(spark, sf_dir, rows_per_tx=rows_per_tx)
-    relations = pgoutput_relation_catalog(wal)
-
-    def make(prefilter: bool):
-        def factory():
-            dml = decode_pgoutput_dml(
-                wal, relations, first_byte_prefilter=prefilter
-            )
-            return stamp_transactions(dml, pgoutput_tx_table(wal))
-
-        return factory
-
-    return make(False), make(True)
 
 
 def _pin_reliable(spark, sf_dir: str, *, kernel: str = "dedup_connected_components"):
@@ -107,10 +61,6 @@ def _pin_reliable(spark, sf_dir: str, *, kernel: str = "dedup_connected_componen
 
 
 EXPERIMENTS = {
-    "pgoutput_prefilter": _pgoutput_prefilter,
-    "pgoutput_prefilter_smalltx": lambda spark, sf_dir: _pgoutput_prefilter(
-        spark, sf_dir, rows_per_tx=1
-    ),
     "pin_reliable": _pin_reliable,
     "pin_reliable_bpe": lambda spark, sf_dir: _pin_reliable(
         spark, sf_dir, kernel="text_bpe_train"
@@ -119,7 +69,7 @@ EXPERIMENTS = {
 
 
 def main() -> None:
-    name = sys.argv[1] if len(sys.argv) > 1 else "pgoutput_prefilter"
+    name = sys.argv[1] if len(sys.argv) > 1 else "pin_reliable"
     pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 

@@ -147,10 +147,8 @@ def _pgoutput_stream_decode_staged(spark, sf_dir, *, collect_max: int):
     ratio measures)."""
     import os as _os
 
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_v2,
-        synth_pgoutput_streamed,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_streamed
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     par = spark.sparkContext.defaultParallelism
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -160,7 +158,7 @@ def _pgoutput_stream_decode_staged(spark, sf_dir, *, collect_max: int):
             "overwrite"
         ).parquet(path)
     wal = spark.read.parquet(path)
-    return decode_pgoutput_v2(wal, stream_block_collect_max=collect_max)
+    return decode_pgoutput(wal, stream_block_collect_max=collect_max)
 
 
 def _pgoutput_v2_decode_fast(spark, sf_dir):
@@ -175,10 +173,8 @@ def _pgoutput_two_phase_decode_staged(spark, sf_dir):
     """Decode-only row for the 2PC kernel (same staging discipline)."""
     import os as _os
 
-    from deltaforge_spark.sources.pgoutput import (
-        decode_pgoutput_two_phase,
-        synth_pgoutput_two_phase,
-    )
+    from deltaforge_spark.sources.fixtures import synth_pgoutput_two_phase
+    from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
     par = spark.sparkContext.defaultParallelism
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -187,7 +183,7 @@ def _pgoutput_two_phase_decode_staged(spark, sf_dir):
         synth_pgoutput_two_phase(spark, sf_dir).repartition(par).write.mode(
             "overwrite"
         ).parquet(path)
-    return decode_pgoutput_two_phase(spark.read.parquet(path))
+    return decode_pgoutput(spark.read.parquet(path))
 
 
 #: pair-emitting kernels whose raw wall ratio is output-dominated on
