@@ -23,17 +23,17 @@ from pyspark.sql import functions as F
 from deltaforge_spark.session import get_spark
 
 
-def materialize(df) -> None:
-    if df is None:
-        return  # action-style kernel: the factory already executed
-    df.write.format("noop").mode("overwrite").save()
-    # retained-pin convention (ADVICE r12 / r13 optimization): queries
-    # that pin an intermediate ride its storage on the result; release
-    # once consumed so repeated bench passes don't accumulate one
-    # checkpoint per invocation in the long-lived session
-    from deltaforge_spark.plans.lineage import release_retained
+def materialize(make) -> None:
+    """Build the query with the zero-argument factory ``make`` and
+    consume it through the noop sink, inside one ``pin_scope`` so the
+    caches and checkpoints it made are released before the next pass
+    (repeated passes in the long-lived session accumulate nothing)."""
+    from deltaforge_spark.plans.lineage import pin_scope
 
-    release_retained(df)
+    with pin_scope():
+        df = make()
+        if df is not None:  # None: action-style kernel, already executed
+            df.write.format("noop").mode("overwrite").save()
 
 
 def cdc_pipeline(spark, sf_dir):
@@ -324,10 +324,10 @@ def main():
     # every plan (JIT cost excluded from timings, as criterion does for
     # the reference's benches)
     warm_dir = stage_to_tmpfs("/root/testdata/sf0.001")
-    materialize(cdc_pipeline(spark, warm_dir))
+    materialize(lambda: cdc_pipeline(spark, warm_dir))
     for name in HEADLINE:
         if name in qs:
-            materialize(qs[name](spark, warm_dir))
+            materialize(lambda: qs[name](spark, warm_dir))
     # The tier-1b staged decode kernels never appeared in this loop, so
     # their first timed pass paid one-time costs the suite-wide warm-up
     # removes for everything else: Python-worker spawn + pandas/pyarrow
@@ -350,10 +350,10 @@ def main():
     from deltaforge_spark.sources.pgoutput import decode_pgoutput as _warm_pg_decode
 
     materialize(
-        _warm_decode(_warm_synth(spark, warm_dir), {("testdb", "events"): _WARM_COLS})
+        lambda: _warm_decode(_warm_synth(spark, warm_dir), {("testdb", "events"): _WARM_COLS})
     )
-    materialize(_warm_pg_decode(_warm_pg_synth(spark, warm_dir)))
-    materialize(_warm_pg_decode(_warm_2pc_synth(spark, warm_dir)))
+    materialize(lambda: _warm_pg_decode(_warm_pg_synth(spark, warm_dir)))
+    materialize(lambda: _warm_pg_decode(_warm_2pc_synth(spark, warm_dir)))
     print("warmup done", file=sys.stderr, flush=True)
 
     # Timed runs, keep the min + a per-query pass count: the container's
@@ -368,7 +368,7 @@ def main():
 
     def timed(name: str, df_factory) -> float:
         t0 = time.perf_counter()
-        materialize(df_factory())
+        materialize(df_factory)
         sec = round(time.perf_counter() - t0, 3)
         if name not in timings or sec < timings[name]:
             timings[name] = sec

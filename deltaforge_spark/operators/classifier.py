@@ -47,8 +47,7 @@ Python's // floors.
 
 EAGER at build: training (K bounded jobs + O(B) collects) runs when the
 operator is constructed. The returned frame is backed by the feature
-cache and tagged with ``retain`` — callers release via
-``plans.lineage.release_retained`` once consumed.
+cache, owned by the caller's ``plans.lineage.pin_scope``.
 """
 
 from __future__ import annotations
@@ -56,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.lineage import retain
+from ..plans.lineage import persist
 from .dsir import doc_gram_buckets
 
 _MICRO = 1000000.0
@@ -113,7 +112,7 @@ def doc_quality_classifier(
     # order-independent exact-int64 sum over the pairs). persist()
     # rather than a reliable checkpoint so lineage on executor loss
     # recomputes one scan + one shuffle.
-    feat = (
+    feat = persist(
         feats_raw.groupBy("doc_id")
         .agg(
             F.collect_list(F.struct("bucket", "cnt")).alias("pairs"),
@@ -121,7 +120,7 @@ def doc_quality_classifier(
         )
         .join(labels, "doc_id")
         .select("doc_id", "pairs", "n", "y")
-    ).persist()
+    )
     n_docs = feat.count()
 
     def dot_col(weights: dict[int, int]):
@@ -202,4 +201,4 @@ def doc_quality_classifier(
         .select("doc_id", "n_grams", _margin_prob(b_micro).alias("prob"))
         .withColumn("keep", F.col("prob") >= F.lit(threshold))
     )
-    return retain(out, feat)
+    return out

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import persist
+
 MICRO = 1_000_000
 
 
@@ -97,11 +99,10 @@ def kmeans_fit_assign(
     # the quantized corpus is re-read by the seed collect, by every
     # Lloyd round's partial-sum job, and by the final assignment —
     # persist it once (standard iterative-kmeans discipline; the cache
-    # spills to disk gracefully at scale). Tagged with the retained-pin
-    # convention: the caller releases once the assignment is consumed.
-    q = df.select(
-        F.col(id_col).alias("vec_id"), quantize_micro(F.col(vec_col)).alias("_qvec")
-    ).persist()
+    # spills to disk gracefully at scale)
+    q = persist(
+        df.select(F.col(id_col).alias("vec_id"), quantize_micro(F.col(vec_col)).alias("_qvec"))
+    )
     seed_rows = (
         q.orderBy(F.col("vec_id").asc()).limit(k).select("vec_id", "_qvec").collect()
     )
@@ -132,11 +133,7 @@ def kmeans_fit_assign(
             for i in range(k)
         ]
 
-    from ..plans.lineage import retain
-
-    return retain(
-        assign_clusters(q, centroids).select("vec_id", "cluster", "sq_dist"), q
-    )
+    return assign_clusters(q, centroids).select("vec_id", "cluster", "sq_dist")
 
 
 def kmeans_cluster_profile(
@@ -151,12 +148,7 @@ def kmeans_cluster_profile(
     (cluster, n_members, min_id, mean_sq_dist) — the shape a
     cluster-budget sampler consumes. mean_sq_dist is the exact integer
     sum divided once in double, rounded to 6dp."""
-    from ..plans.lineage import retain, retained_pins
-
-    a = kmeans_fit_assign(
-        df, vec_col=vec_col, id_col=id_col, k=k, n_iter=n_iter
-    )
-    return retain(_profile(a), *retained_pins(a))
+    return _profile(kmeans_fit_assign(df, vec_col=vec_col, id_col=id_col, k=k, n_iter=n_iter))
 
 
 def _profile(a: DataFrame) -> DataFrame:

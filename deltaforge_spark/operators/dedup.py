@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.lineage import pin, release_pinned
+
 # ------------------------------------------------------------------ exact
 
 
@@ -230,7 +232,7 @@ def connected_components(
 
     Scale shape per round: one join on node id + one groupBy min — both
     shuffle on the id key and reuse the same partitioning. Each round's
-    labels are LAZY-``localCheckpoint``ed and materialized by the
+    labels are LAZY-locally-checkpointed and materialized by the
     convergence probe (one job per round — the eager variant paid a
     second materialization job per round). The checkpoint — not a bare
     ``persist`` — is load-bearing as the LINEAGE barrier: a persist is
@@ -240,7 +242,8 @@ def connected_components(
     (measured: dedup_keep_best's explain was 3,640 lines; with the
     checkpoint it plans against a constant-size LogicalRDD scan).
     Superseded rounds release their blocks immediately; the final
-    round rides the retained-pin convention. Same discipline as
+    round backs the result until the caller's ``pin_scope`` closes.
+    Same discipline as
     ``connected_components_logstar`` and ``graph.kcore``.
 
     Returns (doc_id, canonical_id) for every node in the edge set;
@@ -264,38 +267,30 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("comp").alias("ncomp"))
         )
-        new_labels = (
+        new_labels = pin(
             labels.withColumnRenamed("comp", "old")
             .join(neighbor_min, "id", "left")
             .select(
                 "id",
                 F.least(F.col("old"), F.coalesce(F.col("ncomp"), F.col("old"))).alias("comp"),
                 F.col("old"),
-            )
-        ).localCheckpoint(eager=False)
+            ),
+            eager=False,
+            reliable=False,
+        )
         # full count (no limit-1 short circuit): the probe doubles as the
         # checkpoint materializer, and a partial scan would leave
         # unmaterialized partitions that recompute through the history
         changed = new_labels.filter(F.col("comp") != F.col("old")).count()
         if prev_cached is not None:
-            from ..plans.lineage import release_pinned
-
             release_pinned(prev_cached)
         prev_cached = new_labels
         labels = new_labels.select("id", "comp")
         if changed == 0:
             break
     sym.unpersist()
-    # the final round's checkpoint stays live — it backs the returned
-    # frame. retained-pin convention: the caller releases it once the
-    # frame is consumed; otherwise each invocation leaks storage, and
-    # accumulated entries tax every later query in the session.
-    from ..plans.lineage import retain
-
-    out = labels.select(
-        F.col("id").alias("doc_id"), F.col("comp").alias("canonical_id")
-    )
-    return retain(out, prev_cached) if prev_cached is not None else out
+    # the final round's checkpoint stays live — it backs the returned frame
+    return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("canonical_id"))
 
 
 def connected_components_logstar(
@@ -332,7 +327,7 @@ def connected_components_logstar(
     Scale shape per round: two groupBy/join pairs on node id (same key,
     exchange-reusable) + a distinct; edge multiplicity is bounded by
     the distinct, driver state is one (count, checksum) row per round.
-    Lineage barrier: each round ``localCheckpoint``s its edge set.
+    Lineage barrier: each round locally checkpoints its edge set.
     Unlike the plain propagator (whose round plan embeds the previous
     labels ONCE, so persist+probe suffices), a star round embeds the
     previous edge set ~4× (sym twice through the self-join, again
@@ -378,15 +373,16 @@ def connected_components_logstar(
             F.col("v").alias("node"), F.col("m")
         )
         selfrows = sm.select(F.col("u").alias("node"), F.col("m"))
-        small = (
+        # plan-truncating round barrier; LAZY so the convergence
+        # probe below doubles as the materializer (one job per
+        # round, not two — measured ~35% off the round cost)
+        small = pin(
             pointed.unionByName(selfrows)
             .filter(F.col("node") != F.col("m"))
             .select(F.col("node").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            # plan-truncating round barrier; LAZY so the convergence
-            # probe below doubles as the materializer (one job per
-            # round, not two — measured ~35% off the round cost)
-            .localCheckpoint(eager=False)
+            .distinct(),
+            eager=False,
+            reliable=False,
         )
         # convergence probe: (count, order-free checksum) of the edge
         # set. bit_xor, not sum: order-free like sum but cannot
@@ -402,8 +398,6 @@ def connected_components_logstar(
         # one live round, same discipline as kcore)
         superseded, prev = (prev if prev is not e else None), small
         if superseded is not None:
-            from ..plans.lineage import release_pinned
-
             release_pinned(superseded)
         if sig == prev_sig:
             break
@@ -427,11 +421,8 @@ def connected_components_logstar(
         "doc_id", F.coalesce("canonical_id", "doc_id").alias("canonical_id")
     )
     e.unpersist()
-    # the final round's checkpoint backs the returned frame: tag it so
-    # the caller's release_retained frees the blocks deterministically
-    from ..plans.lineage import retain
-
-    return retain(out, prev) if prev is not e else out
+    # the final round's checkpoint backs the returned frame
+    return out
 
 
 def shingle_jaccard_pairs(

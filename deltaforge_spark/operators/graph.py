@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 MICRO = 1_000_000
 
 
-# shared lineage-barrier helper (plans/lineage.py) — one audited
+# shared storage-lifetime helpers (plans/lineage.py) — one audited
 # release path for every peeling loop in the repo
-from ..plans.lineage import release_local_checkpoint as _release_local_checkpoint
+from ..plans.lineage import persist, pin, release_pinned
 
 
 def weighted_edges(pairs: DataFrame, *, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -99,32 +99,24 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        new_ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
+        new_ranks = persist(
+            nodes.join(contrib, "node", "left").select(
                 "node",
                 (
                     F.lit(teleport).cast("long")
                     + F.expr(f"{damp_num} * coalesce(s, 0L) div {damp_den}")
                 ).alias("rank_micro"),
             )
-            .persist()
         )
         new_ranks.count()  # materialize: lineage barrier per round
         if prev is not None:
-            prev.unpersist()
+            release_pinned(prev)
         prev, ranks = new_ranks, new_ranks
     # release the per-call inputs; the RETURNED frame stays persisted
-    # (it is materialized — callers may unpersist after consuming).
-    # Eviction only costs a recompute through lineage, never wrongness.
-    # retained-pin convention: tag the live cache so release_retained
-    # frees it once consumed (an untagged cache leaks a CacheManager
-    # entry per call, taxing every later query's analysis).
+    # until the caller's pin_scope closes
     e.unpersist()
     nodes.unpersist()
-    from ..plans.lineage import retain
-
-    return retain(ranks, ranks)
+    return ranks
 
 
 def pagerank_top_hosts(
@@ -135,9 +127,7 @@ def pagerank_top_hosts(
     ranks = pagerank(edges, n_iter=n_iter)
     top = ranks.orderBy(F.desc("rank_micro"), "node").limit(top_n)
     w = F.row_number().over(Window.orderBy(F.desc("rank_micro"), "node"))
-    from ..plans.lineage import retain, retained_pins
-
-    return retain(top.withColumn("position", w), *retained_pins(ranks))
+    return top.withColumn("position", w)
 
 
 def label_propagation(
@@ -186,23 +176,18 @@ def label_propagation(
             .groupBy("node", "label")
             .agg(F.sum("w").alias("vote_w"))
         )
-        new_labels = (
+        new_labels = persist(
             votes.withColumn("_rk", F.row_number().over(w_arg))
             .filter(F.col("_rk") == 1)
             .select("node", "label")
-            .persist()
         )
         new_labels.count()
         if prev is not None:
-            prev.unpersist()
+            release_pinned(prev)
         prev, labels = new_labels, new_labels
     sym.unpersist()
     nodes.unpersist()
-    # retained-pin convention (same as pagerank): the final round's
-    # cache backs the returned frame; the caller releases it.
-    from ..plans.lineage import retain
-
-    return retain(labels, labels)
+    return labels
 
 
 def triangle_counts(
@@ -246,16 +231,19 @@ def triangle_counts(
     u_first = (F.col("deg_u") < F.col("deg_v")) | (
         (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
     )
-    # localCheckpoint (eager), not persist: three consumers (both wedge
+    # local checkpoint (eager), not persist: three consumers (both wedge
     # sides + the closing join) read the materialized pass, and the
     # blocks are explicitly released below once counts materialize —
     # a bare persist here leaked executor storage for the session
     # lifetime (r7 ADVICE)
-    oriented = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_b"),
-    ).localCheckpoint()
+    oriented = pin(
+        ed.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("deg_b"),
+        ),
+        reliable=False,
+    )
     e1 = oriented.select("a", F.col("b").alias("x"), F.col("deg_b").alias("deg_x"))
     e2 = oriented.select("a", F.col("b").alias("y"), F.col("deg_b").alias("deg_y"))
     x_first = (F.col("deg_x") < F.col("deg_y")) | (
@@ -272,17 +260,14 @@ def triangle_counts(
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )
     if not materialize:
-        # plan-inspection path (test_plan_shape): the caller owns the
-        # oriented checkpoint's lifetime
+        # plan-inspection path (test_plan_shape): the oriented
+        # checkpoint belongs to the caller's pin_scope
         return counts
     # node-grain result, materialized so the (much larger) oriented
-    # edge pass can be released before returning; the result's own
-    # checkpoint blocks are tagged for the caller to release.
-    counts = counts.localCheckpoint()
-    _release_local_checkpoint(oriented)
-    from ..plans.lineage import retain
-
-    return retain(counts, counts)
+    # edge pass can be released before returning
+    counts = pin(counts, reliable=False)
+    release_pinned(oriented)
+    return counts
 
 
 def kcore(
@@ -305,7 +290,7 @@ def kcore(
     Scale shape: each round is (a) one counts-only degree groupBy and
     (b) two leftsemi joins of the edge list against the surviving node
     set — all keyed on a single node id, map-side combined, never
-    collected. Each round's edge list is ``localCheckpoint``ed, NOT
+    collected. Each round's edge list is locally checkpointed, NOT
     merely persisted: every round references its predecessor ~5 times
     (degree union twice, keep-set semi-joins twice through the degree
     table), so a persist-only barrier leaves Catalyst re-analyzing a
@@ -319,11 +304,9 @@ def kcore(
     fast); pathological chains are cut off by ``max_rounds``.
     """
     lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    edges = (
-        pairs.filter(F.col(src) != F.col(dst))
-        .select(lo.alias("u"), hi.alias("v"))
-        .distinct()
-        .localCheckpoint()
+    edges = pin(
+        pairs.filter(F.col(src) != F.col(dst)).select(lo.alias("u"), hi.alias("v")).distinct(),
+        reliable=False,
     )
     n_edges = edges.count()
     for _ in range(max_rounds):
@@ -336,36 +319,32 @@ def kcore(
             .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
         )
         keep = deg.filter(F.col("core_deg") >= k)
-        nxt = (
+        nxt = pin(
             edges.join(keep.select(F.col("node").alias("u")), "u", "leftsemi")
             .join(keep.select(F.col("node").alias("v")), "v", "leftsemi")
-            .select("u", "v")
-            .localCheckpoint()
+            .select("u", "v"),
+            reliable=False,
         )
         n_nxt = nxt.count()
         if n_nxt == n_edges:  # fixpoint: nobody peeled this round
             # materialize the node-grain answer, then free BOTH edge
             # checkpoints (superseded rounds must not accumulate
             # executor storage across invocations — r7 ADVICE)
-            out = keep.localCheckpoint()
-            _release_local_checkpoint(nxt)
-            _release_local_checkpoint(edges)
-            from ..plans.lineage import retain
-
-            return retain(out, out)
-        _release_local_checkpoint(edges)  # superseded round
+            out = pin(keep, reliable=False)
+            release_pinned(nxt)
+            release_pinned(edges)
+            return out
+        release_pinned(edges)  # superseded round
         edges, n_edges = nxt, n_nxt
     # empty core (or max_rounds hit on a pathological chain): the
     # surviving degree table of whatever remains — empty when n_edges=0
-    out = (
+    out = pin(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-        .filter(F.col("core_deg") >= k)
-        .localCheckpoint()
+        .filter(F.col("core_deg") >= k),
+        reliable=False,
     )
-    _release_local_checkpoint(edges)
-    from ..plans.lineage import retain
-
-    return retain(out, out)
+    release_pinned(edges)
+    return out

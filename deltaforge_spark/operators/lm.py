@@ -653,14 +653,11 @@ def perplexity_bins(
     not first action — two checkpoint jobs plus an O(#partitions)
     driver collect run inside this call, and the bucket boundaries are
     frozen against the input as of the call. Callers composing lazily
-    get a materialized frame, not a deferred plan.
-
-    Retained storage: the returned frame IS its eager pin — call
-    ``plans.lineage.release_retained(result)`` once it is fully
-    consumed, or the checkpoint lives until process exit."""
+    get a materialized frame, not a deferred plan. The returned frame
+    IS its eager pin, owned by the caller's ``pin_scope``."""
     from pyspark.sql import Window
 
-    from ..plans.lineage import pin, release_pinned, retain
+    from ..plans.lineage import pin, release_pinned
 
     scored = doc_surprisal(df, lm, text_col=text_col, id_col=id_col)
     sess = scored.sparkSession
@@ -706,7 +703,7 @@ def perplexity_bins(
         .select(id_col, "n_tokens", "ppl", bin_col.alias("bin"))
     )
     release_pinned(d)
-    return retain(out, out)
+    return out
 
 
 # ------------------------------------------- interpolated Kneser-Ney

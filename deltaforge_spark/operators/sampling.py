@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import pin
+
 # 48-bit hash space; fraction f keeps h < f * 2^48
 _SPACE = 1 << 48
 
@@ -140,12 +142,13 @@ def epoch_shuffle(
         #   manifest to durable storage and read it back — survives
         #   executor loss, and the epoch order becomes an artifact every
         #   training job replays identically;
-        # - localCheckpoint (local/dev fallback): executor-local disks,
-        #   cheaper, but gone with the executor.
+        # - local checkpoint (local/dev fallback): executor-local disks,
+        #   cheaper, but gone with the executor; owned by the caller's
+        #   pin_scope.
         if manifest_path is not None:
             out.write.mode("overwrite").parquet(manifest_path)
             return spark.read.parquet(manifest_path)
-        return out.localCheckpoint(eager=True)
+        return pin(out, reliable=False)
     finally:
         sorted_df.unpersist()
 

@@ -25,6 +25,8 @@ import pandas as pd  # noqa: F401 — pandas_udf type hints resolve via module g
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.lineage import persist
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -505,9 +507,8 @@ def semantic_dedup(
     # the assignment pass is read THREE times (both sides of the pair
     # join + the final label join); persist it so the broadcast-assign
     # subtree (centroid TakeOrdered + BroadcastNestedLoopJoin + window
-    # argmin) runs once per call instead of three times. Tagged with
-    # the retained-pin convention — the caller releases after consuming.
-    a = ivf_assign(base, cents, vec_col="_v", id_col="__id", nprobe=1).persist()
+    # argmin) runs once per call instead of three times
+    a = persist(ivf_assign(base, cents, vec_col="_v", id_col="__id", nprobe=1))
     right = a.select(
         F.col("__id").alias("_nid"), F.col("_v").alias("_nv"), "cell_id"
     )
@@ -518,15 +519,9 @@ def semantic_dedup(
         .filter(F.col("_cos") >= F.lit(threshold))
     )
     dups = pairs.groupBy("__id").agg(F.min("_nid").alias("dup_of"))
-    from ..plans.lineage import retain
-
-    return retain(
-        a.join(dups, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.col("cell_id"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            F.col("dup_of"),
-        ),
-        a,
+    return a.join(dups, "__id", "left").select(
+        F.col("__id").alias(id_col),
+        F.col("cell_id"),
+        F.col("dup_of").isNotNull().alias("is_dup"),
+        F.col("dup_of"),
     )

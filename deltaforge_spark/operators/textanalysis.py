@@ -422,7 +422,7 @@ def _bpe_train_rounds(
     replaces into the argmax plan itself — identical merge sequence
     (the argmax sees exactly the same word table either way), bounded
     plan depth, and no per-round materialization job."""
-    from ..plans.lineage import pin, release_local_checkpoint
+    from ..plans.lineage import pin, release_pinned
 
     cur = pin(bpe_word_table(df, text_col=text_col, keep_word=keep_word))
     keep_cols = ["w"] if keep_word else []
@@ -463,10 +463,10 @@ def _bpe_train_rounds(
             if len(pending) >= _BPE_TRAIN_CHUNK:
                 nxt = pin(with_pending())
                 pending.clear()
-                release_local_checkpoint(cur)
+                release_pinned(cur)
                 cur = nxt
     except BaseException:
-        release_local_checkpoint(cur)
+        release_pinned(cur)
         raise
     return learned, with_pending(), cur
 
@@ -496,12 +496,12 @@ def bpe_train(
     tokenizer (bpe_merge_tokens) would then apply. Stops early if the
     vocabulary runs out of pairs. See :func:`_bpe_train_rounds` for
     the round shape."""
-    from ..plans.lineage import release_local_checkpoint
+    from ..plans.lineage import release_pinned
 
     learned, _, cur = _bpe_train_rounds(
         df, text_col=text_col, num_merges=num_merges
     )
-    release_local_checkpoint(cur)
+    release_pinned(cur)
     return _bpe_merge_table(df.sparkSession, learned)
 
 
@@ -531,14 +531,9 @@ def bpe_train_and_apply(
     size — the same object the trainer already localCheckpoints and
     re-scans every round), so it broadcast-joins to the exploded words
     and the only corpus-sized shuffle left is the partial-aggregated
-    per-doc sum (guide §3.1 / §2.3).
-
-    Retained storage: the training pin backs the result; it rides via
-    ``plans.lineage.retain`` — call ``release_retained(result)`` once
-    the frame is fully consumed."""
-    from ..plans.lineage import retain
-
-    learned, final_types, cur = _bpe_train_rounds(
+    per-doc sum (guide §3.1 / §2.3). The training pin backs the result
+    until the caller's ``pin_scope`` closes."""
+    _, final_types, _ = _bpe_train_rounds(
         df, text_col=text_col, num_merges=num_merges, keep_word=True
     )
     tok = final_types.select(
@@ -556,13 +551,12 @@ def bpe_train_and_apply(
         .agg(F.sum("n_sub").cast("long").alias("n_bpe_tokens"))
     )
     base = df.select(id_col).distinct()
-    out = base.join(agg, id_col, "left").select(
+    return base.join(agg, id_col, "left").select(
         id_col,
         F.coalesce(F.col("n_bpe_tokens"), F.lit(0))
         .cast("long")
         .alias("n_bpe_tokens"),
     )
-    return retain(out, cur)
 
 
 def bpe_train_oracle_sql(
@@ -671,14 +665,10 @@ def bpe_apply_merges(
     apply chunk-by-chunk to the word-TYPE table with a pin() barrier
     between chunks (superseded pins released immediately) — the
     vocab-sized intermediate materializes ~merges/256 times instead of
-    nesting 32k replace() calls in one Catalyst expression.
-
-    Retained storage (ADVICE r12): the LAST inter-chunk pin backs the
-    final unpinned chunk, so it cannot be released here; it rides on
-    the result via ``plans.lineage.retain`` — call
-    ``release_retained(result)`` once the frame is fully consumed, or
-    the checkpoint lives until process exit."""
-    from ..plans.lineage import pin, release_pinned, retain
+    nesting 32k replace() calls in one Catalyst expression. The LAST
+    inter-chunk pin backs the final unpinned chunk (ADVICE r12), so it
+    lives until the caller's ``pin_scope`` closes."""
+    from ..plans.lineage import pin, release_pinned
 
     ordered = [
         (r["left_sym"], r["right_sym"])
@@ -713,15 +703,12 @@ def bpe_apply_merges(
         .agg(F.sum("n_sub").cast("long").alias("n_bpe_tokens"))
     )
     base = df.select(id_col).distinct()
-    out = base.join(agg, id_col, "left").select(
+    return base.join(agg, id_col, "left").select(
         id_col,
         F.coalesce(F.col("n_bpe_tokens"), F.lit(0))
         .cast("long")
         .alias("n_bpe_tokens"),
     )
-    if prev_pin is not None:
-        out = retain(out, prev_pin)
-    return out
 
 
 def bpe_roundtrip_oracle_sql(

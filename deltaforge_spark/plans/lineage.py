@@ -1,45 +1,82 @@
-"""Lineage-barrier helpers shared by the iterative/peeling operators.
+"""Storage lifetimes: lineage barriers, caches and the scope that owns them.
 
 Spark has no public "release this checkpoint" API: the blocks (or
 checkpoint files) behind a pinned frame live until the ContextCleaner
 notices the RDD is unreachable, which on a long-lived session means
-every peeling round / archive-replay slice accumulates storage. The
-helpers here make the pattern explicit and auditable:
+every query, peeling round or archive-replay slice accumulates storage.
+The one rule: storage that outlives an operator call is made with
+:func:`pin` or :func:`persist`, and the caller owns its lifetime with
+:func:`pin_scope`:
 
 - :func:`pin` — truncate lineage, reliably when a checkpoint dir is
   configured (survives executor loss), locally otherwise.
-- :func:`release_pinned` — free the storage behind a pinned frame the
-  moment it is superseded: executor blocks for ``localCheckpoint``,
-  checkpoint files (via the Hadoop FS API, so HDFS/S3 dirs work too)
-  for reliable checkpoints.
+- :func:`persist` — ``df.persist()`` for a frame whose cache must
+  outlive the call that made it.
+- :func:`release_pinned` — free the storage behind a pinned or
+  persisted frame the moment it is superseded: executor blocks for
+  ``localCheckpoint`` and caches, checkpoint files (via the Hadoop FS
+  API, so HDFS/S3 dirs work too) for reliable checkpoints.
+- :func:`pin_scope` — every frame :func:`pin` or :func:`persist` makes
+  while the scope is open is released when it exits, by return or by
+  raise. Open it around "build the query, then consume it": inside the
+  scope the returned frame is computable, after it the frame's backing
+  storage is gone. With no scope open nothing is registered, and the
+  storage lives until the ContextCleaner collects it.
+
+Scopes are context-local (``contextvars``): a py4j callback thread or a
+concurrent pipeline never registers into another thread's scope, and a
+scope releases only what it registered — it never clears the session.
 
 ``session.ensure_checkpoint_dir`` wires a default checkpoint dir into
 every locally-built session (VERDICT r10 #3), so the reliable branch
 is the PRODUCTION default; ``pin(df, reliable=False)`` is the explicit
 opt-out for loops whose rounds are cheap to recompute and whose caller
 prefers executor-memory pinning.
-
-Used by operators/graph.py (PageRank / k-core peeling rounds),
-operators/dedup.py (connected-components rounds), operators/
-textanalysis.py (BPE merge rounds) and sources/pgoutput.py
-(``_ranked_by_seq`` rank pinning on the archive path).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 
-__all__ = [
-    "pin",
-    "release_pinned",
-    "release_local_checkpoint",
-    "retain",
-    "release_retained",
-]
+__all__ = ["pin", "persist", "pin_scope", "release_pinned"]
+
+#: the open scopes of this context, innermost last; each maps
+#: ``id(frame)`` to the frame (the strong reference keeps the id unique)
+_SCOPES: ContextVar[tuple[dict[int, DataFrame], ...]] = ContextVar(
+    "deltaforge_pin_scopes", default=()
+)
+
+
+def _register(df: DataFrame) -> DataFrame:
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1][id(df)] = df
+    return df
+
+
+@contextmanager
+def pin_scope() -> Iterator[None]:
+    """Own every frame :func:`pin` / :func:`persist` make inside the
+    block: on exit, by return or by raise, each one still registered is
+    released with :func:`release_pinned`. Nested scopes own only their
+    own frames."""
+    owned: dict[int, DataFrame] = {}
+    token = _SCOPES.set(_SCOPES.get() + (owned,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for df in reversed(list(owned.values())):
+            release_pinned(df)
 
 
 def pin(df: DataFrame, *, eager: bool = True, reliable: bool | None = None) -> DataFrame:
-    """Materialize ``df`` behind a lineage barrier.
+    """Materialize ``df`` behind a lineage barrier, owned by the
+    innermost open :func:`pin_scope`.
 
     ``reliable=None`` (default) resolves from the session: with
     ``setCheckpointDir`` configured (which ``session.py`` defaults for
@@ -60,11 +97,11 @@ def pin(df: DataFrame, *, eager: bool = True, reliable: bool | None = None) -> D
     if reliable is None:
         reliable = sc.getCheckpointDir() is not None
     if not reliable:
-        return df.localCheckpoint(eager=eager)
+        return _register(df.localCheckpoint(eager=eager))
     if sc.getCheckpointDir() is None:
         raise ValueError("pin(reliable=True) needs spark.sparkContext.setCheckpointDir")
     if not eager:
-        return df.checkpoint(eager=False)
+        return _register(df.checkpoint(eager=False))
     # unpersist() is keyed by logical plan, not by who persisted: if
     # the CALLER already cached this frame, a transient persist here
     # followed by unpersist(True) would silently evict the caller's
@@ -72,18 +109,26 @@ def pin(df: DataFrame, *, eager: bool = True, reliable: bool | None = None) -> D
     # checkpoint-write job reads the caller's cache instead.
     already_cached = df.storageLevel.useMemory or df.storageLevel.useDisk
     if already_cached:
-        return df.checkpoint(eager=True)
+        return _register(df.checkpoint(eager=True))
     cached = df.persist()
     try:
-        return df.checkpoint(eager=True)
+        return _register(df.checkpoint(eager=True))
     finally:
         # blocking: callers (and the storage-bound tests) must observe
         # the transient cache as gone the moment pin() returns
         cached.unpersist(True)
 
 
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, owned by the innermost open :func:`pin_scope`:
+    for a cache that backs the frame an operator returns (it keeps the
+    frame's partitioning, or several consumers read it)."""
+    return _register(df.persist())
+
+
 def release_pinned(df: DataFrame) -> None:
-    """Free the storage behind a ``pin``'ed frame.
+    """Free the storage behind a ``pin``'ed or ``persist``'ed frame and
+    drop it from the scope that owns it.
 
     localCheckpoint: the checkpointed plan is a LogicalRDD scan over a
     cached RDD; unpersisting that RDD releases its blocks immediately
@@ -96,13 +141,13 @@ def release_pinned(df: DataFrame) -> None:
     call once the frame is genuinely superseded — the files are its
     ONLY materialization.
 
-    Persisted (cached) frame: ``DataFrame.unpersist`` drops its blocks
-    — so operators that retain a *cache* instead of a checkpoint (the
-    classifier's feature frame keeps its hash partitioning that way)
-    release through the same hook.
+    Persisted (cached) frame: ``DataFrame.unpersist`` drops its blocks.
 
     Best-effort: a plan that isn't a checkpoint scan or a cached frame
     is a silent no-op."""
+    for owned in _SCOPES.get():
+        if owned.get(id(df)) is df:
+            del owned[id(df)]
     try:
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
             df.unpersist(False)
@@ -126,50 +171,3 @@ def release_pinned(df: DataFrame) -> None:
             fs.delete(path, True)
     except Exception:  # pragma: no cover - fs races are non-fatal
         pass
-
-
-# compatibility alias: callers predating the reliable-release extension
-release_local_checkpoint = release_pinned
-
-
-#: attribute carrying the pins a returned frame still depends on
-_RETAINED_ATTR = "_deltaforge_retained_pins"
-
-
-def retain(df: DataFrame, *pins: DataFrame) -> DataFrame:
-    """Record that ``df`` depends on ``pins`` whose storage the
-    producing operator could NOT release before returning (ADVICE r12:
-    ``bpe_apply_merges``'s last inter-chunk pin backs the final unpinned
-    chunk, and ``perplexity_bins``'s eagerly-pinned result IS its only
-    materialization — releasing either inside the operator would break
-    the frame it returns). The retained-pin convention:
-
-    - an operator that must leave pinned storage alive behind its
-      result tags the result with ``retain(out, *pins)`` (a pin may be
-      ``out`` itself);
-    - the CALLER releases with :func:`release_retained` once the frame
-      is fully consumed (collected, written, or persisted elsewhere) —
-      after release the frame is no longer computable;
-    - a caller that never releases leaks exactly one checkpoint per
-      invocation until process exit (the pre-r13 behavior), so
-      long-lived sessions invoking these operators repeatedly should
-      release superseded results.
-    """
-    lst = list(getattr(df, _RETAINED_ATTR, ()))
-    lst.extend(pins)
-    setattr(df, _RETAINED_ATTR, lst)
-    return df
-
-
-def retained_pins(df: DataFrame) -> list[DataFrame]:
-    """The pins still backing ``df`` (empty for ordinary frames)."""
-    return list(getattr(df, _RETAINED_ATTR, ()))
-
-
-def release_retained(df: DataFrame) -> None:
-    """Free every pin recorded by :func:`retain` on ``df``. Call only
-    once the frame is fully consumed: the pins are its backing
-    storage, so the frame cannot be recomputed afterwards."""
-    for p in getattr(df, _RETAINED_ATTR, ()):
-        release_pinned(p)
-    setattr(df, _RETAINED_ATTR, [])

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lineage import persist
+
 # DriftConfig.null_rate_threshold default (drift_detector.rs:112-118)
 NULL_RATE_THRESHOLD = 0.001
 
@@ -127,9 +129,8 @@ def drift_events(
     observed keys explode out of the same scan, and the resulting
     (kind, column, observed, n) table — bounded by schema width x type
     classes, never row count — is persisted so the three event branches
-    derive from it without recomputing the scan. The cache rides the
-    retained-pin convention (plans/lineage.py): callers release after
-    consuming. Values are identical to the separate
+    derive from it without recomputing the scan. The cache belongs to
+    the caller's ``pin_scope`` (plans/lineage.py). Values are identical to the separate
     ``observed_type_counts`` + ``observed_key_counts`` passes those
     branches previously re-ran (3 scans x W parses each).
     """
@@ -154,7 +155,7 @@ def drift_events(
             F.lit("k").alias("kind"), k.alias("column"), F.lit("").alias("observed")
         ),
     )
-    prof = (
+    prof = persist(
         staged.select(F.explode(F.concat(tags, keys)).alias("t"))
         .groupBy(
             F.col("t.kind").alias("kind"),
@@ -162,7 +163,6 @@ def drift_events(
             F.col("t.observed").alias("observed"),
         )
         .agg(F.count("*").alias("n"))
-        .persist()
     )
     counts = prof.filter(F.col("kind") == "t").select("column", "observed", "n")
     key_counts = prof.filter(F.col("kind") == "k").select(
@@ -217,9 +217,7 @@ def drift_events(
     out = mismatches.unionByName(undeclared)
     if nulls is not None:
         out = out.unionByName(nulls)
-    from ..plans.lineage import retain
-
-    return retain(out, prof)
+    return out
 
 
 def drift_report(

@@ -225,6 +225,8 @@ class DlqStore:
 
         from pyspark.sql import Window
 
+        from ..plans.lineage import release_pinned
+
         base = cur.agg(F.coalesce(F.max("seq"), F.lit(-1)).alias("m")).collect()[0]["m"]
         # dense seq assignment WITHOUT a single-partition global sort:
         # rows are numbered within their partition (parallel window),
@@ -237,38 +239,42 @@ class DlqStore:
             .withColumn("_mid", F.monotonically_increasing_id())
             .localCheckpoint()
         )
-        pcounts = sorted(
-            (r["_pid"], r["_n"])
-            for r in tagged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-        )
-        offsets, acc = {}, 0
-        for pid, cnt in pcounts:
-            offsets[pid] = acc
-            acc += cnt
-        off_expr = F.lit(0)
-        if offsets:
-            off_expr = F.coalesce(
-                *[F.when(F.col("_pid") == pid, F.lit(off)) for pid, off in offsets.items()],
-                F.lit(0),
+        try:
+            pcounts = sorted(
+                (r["_pid"], r["_n"])
+                for r in tagged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
             )
-        wp = Window.partitionBy("_pid").orderBy("_mid")
-        numbered = tagged.withColumn(
-            "seq",
-            (F.row_number().over(wp) - F.lit(1) + off_expr + F.lit(base + 1)).cast("long"),
-        ).select(*[f.name for f in self._empty().schema.fields])
+            offsets, acc = {}, 0
+            for pid, cnt in pcounts:
+                offsets[pid] = acc
+                acc += cnt
+            off_expr = F.lit(0)
+            if offsets:
+                off_expr = F.coalesce(
+                    *[F.when(F.col("_pid") == pid, F.lit(off)) for pid, off in offsets.items()],
+                    F.lit(0),
+                )
+            wp = Window.partitionBy("_pid").orderBy("_mid")
+            numbered = tagged.withColumn(
+                "seq",
+                (F.row_number().over(wp) - F.lit(1) + off_expr + F.lit(base + 1)).cast("long"),
+            ).select(*[f.name for f in self._empty().schema.fields])
 
-        merged = cur.unionByName(numbered)
-        if self.overflow_policy == "drop_oldest" and cur_len + incoming > self.max_entries:
-            # FIFO eviction: keep the newest max_entries by seq
-            metrics.inc(
-                "deltaforge_dlq_evicted_total",
-                cur_len + incoming - self.max_entries,
-                pipeline=self.pipeline,
-            )
-            merged = (
-                merged.orderBy(F.col("seq").desc()).limit(self.max_entries)
-            )
-        self._commit(merged)
+            merged = cur.unionByName(numbered)
+            if self.overflow_policy == "drop_oldest" and cur_len + incoming > self.max_entries:
+                # FIFO eviction: keep the newest max_entries by seq
+                metrics.inc(
+                    "deltaforge_dlq_evicted_total",
+                    cur_len + incoming - self.max_entries,
+                    pipeline=self.pipeline,
+                )
+                merged = (
+                    merged.orderBy(F.col("seq").desc()).limit(self.max_entries)
+                )
+            self._commit(merged)
+        finally:
+            # the checkpoint backs nothing once the merge is committed
+            release_pinned(tagged)
         metrics.inc("deltaforge_dlq_events_total", incoming, pipeline=self.pipeline)
         n_now = min(cur_len + incoming, self.max_entries)
         metrics.set("deltaforge_dlq_entries", n_now, pipeline=self.pipeline)

@@ -627,7 +627,9 @@ _DECODER_CACHE_MAX = 4096
 
 #: parsed TABLE_MAP schema dicts keyed by the event payload bytes —
 #: the server re-announces the same table map once per transaction,
-#: byte-identically; same bound as the decoder cache
+#: byte-identically; same bound as the decoder cache. Every entry is
+#: shared by all segments and events that announce the same payload, so
+#: its sequences are tuples: no consumer can change a later decode.
 _TM_PAYLOAD_CACHE: dict[bytes, tuple[int, dict]] = {}
 
 
@@ -912,7 +914,7 @@ def _decode_one(
             # event group) — parse each distinct payload once and reuse
             # the schema dict + compiled decoders (guide §4.5: amortize
             # per-task setup; measured ~560 identical re-parses per
-            # bench segment). The cached dict is read-only downstream.
+            # bench segment).
             cached = _TM_PAYLOAD_CACHE.get(payload)
             if cached is None:
                 table_id = int.from_bytes(payload[0:6], "little")
@@ -924,7 +926,7 @@ def _decode_one(
                 table = payload[p + 1 : p + 1 + tb_len].decode()
                 p += 1 + tb_len + 1
                 n_cols, p = read_lenenc(payload, p)
-                col_types = list(payload[p : p + n_cols])
+                col_types = tuple(payload[p : p + n_cols])
                 p += n_cols
                 meta_len, p = read_lenenc(payload, p)
                 metas = []
@@ -935,14 +937,12 @@ def _decode_one(
                 if mp - p != meta_len:
                     raise BinlogError("table map metadata length mismatch")
                 p = mp
-                nullable = [
-                    _bitmap_get(payload[p:], i) for i in range(n_cols)
-                ]
+                nullable = tuple(_bitmap_get(payload[p:], i) for i in range(n_cols))
                 cached = (
                     table_id,
                     {
                         "db": db, "table": table, "col_types": col_types,
-                        "col_metas": metas, "nullable": nullable,
+                        "col_metas": tuple(metas), "nullable": nullable,
                         "decoders": _decoders_for(col_types, metas),
                     },
                 )

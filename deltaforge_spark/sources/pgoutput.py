@@ -994,15 +994,14 @@ def _control_plane_pin(stream: DataFrame, data_col: str, seq_col: str) -> DataFr
     along so the tag census can count and reject them. The pin is
     control-plane-sized (#control rows, never #events), and it is a
     PERSIST, not a checkpoint: the census job materializes it and
-    every later pass reads the cache. Caller owns release
-    (``release_pinned`` handles cached frames) — the decoder retains
-    it on its result."""
+    every later pass reads the cache, which backs the decoder's result
+    until the caller's ``pin_scope`` closes."""
+    from ..plans.lineage import persist
+
     null_or_empty = F.col(data_col).isNull() | (F.length(data_col) == 0)
-    ctrl = stream.where(null_or_empty | _tag_in(data_col, CONTROL_TAGS)).select(
-        seq_col, data_col
+    return persist(
+        stream.where(null_or_empty | _tag_in(data_col, CONTROL_TAGS)).select(seq_col, data_col)
     )
-    ctrl.persist()
-    return ctrl
 
 
 def pgoutput_relation_catalog(
@@ -1868,11 +1867,11 @@ def decode_pgoutput(
     schema, table, before, after, n_bytes, xid, commit_ts_ms, gid``
     (gid null unless the transaction was prepared).
 
-    Retained storage: the control pin (plus the DML persist and the
-    distributed block table when built) rides the result via
-    ``retain`` — release with ``release_retained`` once consumed. On
-    any raise every pin taken so far is released first."""
-    from ..plans.lineage import release_pinned, retain
+    Storage: the control pin (plus the DML persist and the distributed
+    block table when built) backs the result until the caller's
+    ``pin_scope`` closes. On any raise every pin taken so far is
+    released first, so callers with no scope leak nothing either."""
+    from ..plans.lineage import persist, release_pinned
 
     ctrl = _control_plane_pin(stream, data_col, seq_col)
     pins = [ctrl]
@@ -1911,17 +1910,15 @@ def decode_pgoutput(
             )
         stamp = dict(bucket_width=tx_bucket_width, keep_uncommitted=keep_uncommitted)
         if not n_bounds:
-            return retain(_stamp_intervals(dml, intervals, **stamp), *pins)
+            return _stamp_intervals(dml, intervals, **stamp)
         # both branches below read the DML parse (the one expensive
         # Python pass over the capture): a persist makes them share ONE
         # InMemoryRelation computed inside the final job
-        dml = dml.persist()
+        dml = persist(dml)
         pins.append(dml)
         plain = dml.filter(F.col("stream_xid").isNull()).drop("stream_xid", "msg_xid")
         streamed = _gate_streamed(dml.filter(F.col("stream_xid").isNotNull()), ctl, census)
-        return retain(
-            _stamp_intervals(plain, intervals, **stamp).unionByName(streamed), *pins
-        )
+        return _stamp_intervals(plain, intervals, **stamp).unionByName(streamed)
     except BaseException:
         for p in pins:
             release_pinned(p)
@@ -2074,7 +2071,6 @@ def pgoutput_change_feed(
     reference's handle_insert/update/delete → Event::new_row flow
     (postgres_event.rs:395-644)."""
     from ..envelope import finish_envelope
-    from ..plans.lineage import retain, retained_pins
 
     dec = decode_pgoutput(
         stream, data_col=data_col, seq_col=seq_col, tx_bucket_width=tx_bucket_width
@@ -2106,7 +2102,7 @@ def pgoutput_change_feed(
         ).alias("transaction"),
         F.lit(None).cast("boolean").alias("tx_end"),
     )
-    return retain(finish_envelope(out), *retained_pins(dec))
+    return finish_envelope(out)
 
 
 RELATION_VERSION_SCHEMA = T.StructType(

@@ -1,8 +1,13 @@
 import os
+import sys
 
 import pytest
 
 from deltaforge_spark.session import get_spark
+
+# tools/ on the path: tests share tools/check.py's storage_counts, the
+# helper behind its leak gate
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 
 @pytest.fixture(scope="session")

@@ -93,7 +93,7 @@ PREFIX_REQUIRED = [
     "dedup_containment",         # new (r13: Broder containment pairs)
     "doc_perplexity_kn5",        # new (r13: 5-gram modified Kneser-Ney)
     "doc_perplexity_bins",       # integer-DIV bucket arithmetic (r13)
-    "text_bpe_roundtrip",        # retain-hooked chunked apply (r13)
+    "text_bpe_roundtrip",        # chunked apply (r13)
 ]
 
 

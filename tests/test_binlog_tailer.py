@@ -216,3 +216,28 @@ class TestCompiledDecoders:
         fresh = bl.parse_segment(data, {("db1", "t1"): ["id", "name"]})
         assert first == fresh
         assert len(bl._TM_PAYLOAD_CACHE) == 1  # one distinct payload
+
+    def test_emitted_table_map_edit_cannot_reach_a_later_decode(self):
+        """The TABLE_MAP cache shares one parsed entry across segments:
+        a consumer editing an emitted table_map event must not change a
+        second decode of the same segment."""
+        import contextlib
+        import copy
+
+        types = [bl.MYSQL_TYPE_LONG, bl.MYSQL_TYPE_VARCHAR]
+        metas = [0, 32]
+        w = bl.SegmentWriter(server_id=3)
+        w.append(bl.FORMAT_DESCRIPTION_EVENT, bl.fde_payload())
+        w.append(bl.TABLE_MAP_EVENT,
+                 bl.table_map_payload(43, "db1", "t2", types, metas, [False, True]))
+        w.append(bl.WRITE_ROWS_EVENT, bl.rows_payload(43, 2, [[7, "x"]], types, metas))
+        w.append(bl.XID_EVENT, bl.xid_payload(9))
+        data = w.bytes()
+        first = bl.parse_segment(data)
+        want = copy.deepcopy(first)
+        tm = next(e for e in first if e["kind"] == "table_map")
+        with contextlib.suppress(TypeError, AttributeError):  # frozen: refused
+            tm["col_types"][0] = bl.MYSQL_TYPE_VARCHAR
+        with contextlib.suppress(TypeError, AttributeError):
+            tm["col_types"].append(bl.MYSQL_TYPE_LONG)
+        assert bl.parse_segment(data) == want

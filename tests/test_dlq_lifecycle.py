@@ -109,3 +109,15 @@ def test_error_message_from_reason_col(spark, tmp_path):
     )
     dlq.write(failed, sink_id="s", error_kind="routing", reason_col="why")
     assert dlq.peek(1).collect()[0]["error_message"] == "bad topic"
+
+
+def test_writes_leave_no_persistent_rdds(spark, tmp_path):
+    """Each write numbers its batch behind a local checkpoint; a
+    long-running pipeline must not keep one per DLQ write."""
+    dlq = _store(spark, tmp_path)
+    jsc = spark.sparkContext._jsc
+    before = int(jsc.getPersistentRDDs().size())
+    for i in range(4):
+        dlq.write(_events(spark, [i]), sink_id="s", error_kind="e")
+    assert dlq.queue_len() == 4
+    assert int(jsc.getPersistentRDDs().size()) == before

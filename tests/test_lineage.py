@@ -12,14 +12,18 @@ accumulate storage until the ContextCleaner notices. These tests pin:
 - ``release_pinned`` actually frees the superseded frame's storage
   in BOTH branches: executor blocks (localCheckpoint) and checkpoint
   files (reliable), not just "doesn't crash";
-- ``pin(reliable=False)`` remains the explicit local opt-out.
+- ``pin(reliable=False)`` remains the explicit local opt-out;
+- ``pin_scope`` owns every frame ``pin``/``persist`` make inside it and
+  releases them on exit, by return or by raise.
 """
 
 import os
 
+import pytest
+from check import storage_counts, storage_surplus
 from pyspark.sql import functions as F
 
-from deltaforge_spark.plans.lineage import pin, release_local_checkpoint, release_pinned
+from deltaforge_spark.plans.lineage import persist, pin, pin_scope, release_pinned
 
 
 def _stored_rdd_ids(spark) -> set:
@@ -94,14 +98,14 @@ def test_default_session_takes_reliable_branch(spark):
     assert not os.path.isdir(local), "release_pinned left checkpoint files"
 
 
-def test_release_local_checkpoint_shrinks_executor_storage(spark):
+def test_release_pinned_shrinks_local_checkpoint_storage(spark):
     before = _stored_rdd_ids(spark)
     df = spark.range(10_000).withColumn("v", F.col("id") * 2)
     pinned = pin(df, reliable=False)  # explicit local opt-out
     pinned.count()
     held = _stored_rdd_ids(spark) - before
     assert held, "localCheckpoint should cache blocks"
-    release_local_checkpoint(pinned)
+    release_pinned(pinned)
     after = _stored_rdd_ids(spark) - before
     assert not (held & after), f"blocks not released: {held & after}"
 
@@ -201,33 +205,88 @@ def test_archive_path_pins_reliably_on_default_session(spark, monkeypatch):
     assert reliable_taken and all(reliable_taken)
 
 
-def test_retain_release_frees_checkpoint_files(spark):
-    """ADVICE r12: operators that must leave pinned storage alive
-    behind their result (bpe_apply_merges's last inter-chunk pin,
-    perplexity_bins's eager result pin) tag it via retain(); the
-    caller-side release_retained() must actually delete the checkpoint
-    files and clear the tag."""
-    from deltaforge_spark.plans.lineage import release_retained, retain, retained_pins
+def _exists(f: str) -> bool:
+    return os.path.exists(f.replace("file:", ""))
 
-    base = spark.range(2_000).withColumn("v", F.col("id") % 7)
-    pinned = pin(base)
-    f = _checkpoint_file(pinned)
-    assert f is not None and os.path.exists(f.replace("file:", ""))
-    out = retain(pinned.groupBy("v").count(), pinned)
-    assert len(retained_pins(out)) == 1
-    release_retained(out)
-    assert not os.path.exists(f.replace("file:", ""))
-    assert retained_pins(out) == []
-    # idempotent: a second release is a no-op
-    release_retained(out)
+
+def test_pin_scope_releases_on_normal_exit(spark):
+    """Every pin and persist made inside the scope is released when it
+    exits: checkpoint files deleted, caches dropped."""
+    before = storage_counts(spark)
+    with pin_scope():
+        pinned = pin(spark.range(2_000).withColumn("v", F.col("id") % 7))
+        f = _checkpoint_file(pinned)
+        cached = persist(spark.range(500).withColumn("w", F.col("id") * 3))
+        assert cached.count() == 500
+        assert f is not None and _exists(f)
+        assert pinned.groupBy("v").count().count() == 7
+    assert not _exists(f)
+    assert not (cached.storageLevel.useMemory or cached.storageLevel.useDisk)
+    assert storage_surplus(spark, before) == (0, 0, 0)
+
+
+def test_pin_scope_releases_on_raise(spark):
+    before = storage_counts(spark)
+    with pytest.raises(RuntimeError, match="boom"):
+        with pin_scope():
+            pinned = pin(spark.range(1_000))
+            persist(spark.range(300)).count()
+            raise RuntimeError("boom")
+    assert not _exists(_checkpoint_file(pinned))
+    assert storage_surplus(spark, before) == (0, 0, 0)
+
+
+def test_nested_scopes_own_only_their_own_pins(spark):
+    with pin_scope():
+        outer = pin(spark.range(1_000))
+        with pin_scope():
+            inner = pin(spark.range(2_000))
+        assert not _exists(_checkpoint_file(inner))
+        # the inner exit left the outer scope's pin computable
+        assert _exists(_checkpoint_file(outer))
+        assert outer.count() == 1_000
+    assert not _exists(_checkpoint_file(outer))
+
+
+def test_pin_without_scope_stays_unowned(spark):
+    """With no scope open nothing is registered: an unrelated scope
+    opened later does not release the earlier pin."""
+    loose = pin(spark.range(1_000))
+    try:
+        with pin_scope():
+            pin(spark.range(10)).count()
+        assert _exists(_checkpoint_file(loose))
+        assert loose.count() == 1_000
+    finally:
+        release_pinned(loose)
+    assert not _exists(_checkpoint_file(loose))
+
+
+def test_release_pinned_drops_frame_from_its_scope(spark, monkeypatch):
+    """A frame released in-loop (a superseded round) leaves its scope,
+    so the scope's exit releases only what is still live."""
+    import deltaforge_spark.plans.lineage as lineage
+
+    released = []
+    orig = lineage.release_pinned
+
+    def spy(df):
+        released.append(df)
+        orig(df)
+
+    with pin_scope():
+        first = pin(spark.range(100))
+        second = pin(spark.range(200))
+        lineage.release_pinned(first)
+        monkeypatch.setattr(lineage, "release_pinned", spy)
+    assert released == [second]
 
 
 def test_bpe_apply_retains_last_chunk_pin(spark):
-    """The >1-chunk bpe_apply_merges path must ship its final
-    inter-chunk pin on the result (not leak it anonymously), and
-    release_retained must free it after the result is consumed."""
+    """The >1-chunk bpe_apply_merges path leaves its final inter-chunk
+    pin behind the result (the last chunk reads it); the caller's
+    scope frees it once the result is consumed."""
     from deltaforge_spark.operators.textanalysis import bpe_apply_merges
-    from deltaforge_spark.plans.lineage import release_retained, retained_pins
 
     docs = spark.createDataFrame(
         [(1, "aab aab bba"), (2, "abab baba")], "doc_id INT, text STRING"
@@ -236,45 +295,39 @@ def test_bpe_apply_retains_last_chunk_pin(spark):
         [(1, "a", "a"), (2, "b", "b"), (3, "aa", "b")],
         "merge_rank INT, left_sym STRING, right_sym STRING",
     )
-    out = bpe_apply_merges(docs, merges, chunk=2)
-    rows = {r["doc_id"]: r["n_bpe_tokens"] for r in out.collect()}
+    before = storage_counts(spark)
+    with pin_scope():
+        out = bpe_apply_merges(docs, merges, chunk=2)
+        rows = {r["doc_id"]: r["n_bpe_tokens"] for r in out.collect()}
+        assert storage_surplus(spark, before)[2] > 0, "last chunk pin must stay live"
     assert rows and all(v > 0 for v in rows.values())
-    pins = retained_pins(out)
-    assert len(pins) == 1, "last inter-chunk pin must ride on the result"
-    f = _checkpoint_file(pins[0])
-    assert f is not None and os.path.exists(f.replace("file:", ""))
-    release_retained(out)
-    assert not os.path.exists(f.replace("file:", ""))
+    assert storage_surplus(spark, before) == (0, 0, 0)
 
 
 def test_perplexity_bins_result_is_releasable(spark):
-    """perplexity_bins returns its own eager pin tagged for release —
-    after release_retained the checkpoint files are gone."""
+    """perplexity_bins returns its own eager pin; the caller's scope
+    deletes its checkpoint files."""
     from deltaforge_spark.operators.lm import perplexity_bins, unigram_lm
-    from deltaforge_spark.plans.lineage import release_retained, retained_pins
 
     docs = spark.createDataFrame(
         [(i, f"w{i % 5} w{i % 3} common") for i in range(30)],
         "doc_id INT, text STRING",
     )
     lm = unigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    out = perplexity_bins(docs, lm, n_bins=3)
-    assert out.count() == 30
-    pins = retained_pins(out)
-    assert pins, "bins result must be tagged with its own pin"
-    f = _checkpoint_file(pins[0])
-    assert f is not None and os.path.exists(f.replace("file:", ""))
-    release_retained(out)
-    assert not os.path.exists(f.replace("file:", ""))
+    with pin_scope():
+        out = perplexity_bins(docs, lm, n_bins=3)
+        assert out.count() == 30
+        f = _checkpoint_file(out)
+        assert f is not None and _exists(f)
+    assert not _exists(f)
 
 
 def test_iterative_operators_release_all_storage(spark):
-    """r13 optimization: every operator that leaves a cache/checkpoint
-    alive behind its result must tag it via the retained-pin convention
-    so release_retained frees it. Untagged caches accumulate one
-    CacheManager entry per invocation; measured in-session, dozens of
-    stale entries inflated unrelated queries ~6x (storage pressure +
-    per-query cache-plan matching)."""
+    """r13 optimization: every cache/checkpoint an operator leaves alive
+    behind its result belongs to the caller's scope. Unreleased caches
+    accumulate one CacheManager entry per invocation; measured
+    in-session, dozens of stale entries inflated unrelated queries ~6x
+    (storage pressure + per-query cache-plan matching)."""
     from deltaforge_spark.operators.clustering import kmeans_fit_assign
     from deltaforge_spark.operators.dedup import (
         connected_components,
@@ -288,7 +341,6 @@ def test_iterative_operators_release_all_storage(spark):
         weighted_edges,
     )
     from deltaforge_spark.operators.similarity import semantic_dedup
-    from deltaforge_spark.plans.lineage import release_retained, retained_pins
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (7, 7)], "doc_a LONG, doc_b LONG"
@@ -300,20 +352,32 @@ def test_iterative_operators_release_all_storage(spark):
         [(i, [float(i % 3), 1.0]) for i in range(12)],
         "vec_id LONG, embedding ARRAY<FLOAT>",
     )
-    cases = [
-        connected_components(edges),
-        connected_components_logstar(edges),
-        pagerank(weighted_edges(pairs), n_iter=2),
-        label_propagation(weighted_edges(pairs), n_iter=2),
-        kcore(pairs, 1),
-        triangle_counts(pairs),
-        semantic_dedup(emb, n_cells=2),
-        kmeans_fit_assign(emb, k=2, n_iter=1),
-    ]
-    before = _stored_rdd_ids(spark)
-    for out in cases:
-        assert retained_pins(out), f"operator result must carry its pins: {out}"
-        out.collect()
-        release_retained(out)
-    leaked = _stored_rdd_ids(spark) - before
-    assert not leaked, f"cached RDDs left behind after release: {leaked}"
+    before = storage_counts(spark)
+    with pin_scope():
+        cases = [
+            connected_components(edges),
+            connected_components_logstar(edges),
+            pagerank(weighted_edges(pairs), n_iter=2),
+            label_propagation(weighted_edges(pairs), n_iter=2),
+            kcore(pairs, 1),
+            triangle_counts(pairs),
+            semantic_dedup(emb, n_cells=2),
+            kmeans_fit_assign(emb, k=2, n_iter=1),
+        ]
+        for out in cases:
+            out.collect()
+        assert any(storage_surplus(spark, before)), "operators should hold storage"
+    assert storage_surplus(spark, before) == (0, 0, 0), "storage left behind after the scope"
+
+
+@pytest.mark.parametrize("name", ["basket_brand_lift", "doc_epoch_shuffle"])
+def test_query_leaves_nothing_behind_its_scope(spark, sf_dir, name):
+    """The two queries whose cache (basket_brand_lift's per-order
+    brands) and local checkpoint (epoch_shuffle's ranked result) were
+    made outside pin/persist and so outlived every release."""
+    import __spark_entry__ as entry
+
+    before = storage_counts(spark)
+    with pin_scope():
+        assert entry.queries()[name](spark, sf_dir).collect()
+    assert storage_surplus(spark, before) == (0, 0, 0)

@@ -851,13 +851,15 @@ class TestBpeTrain:
         counts ride the trainer's final segmentation instead of a
         second type-table pass) must be row-identical to the composed
         bpe_apply_merges(df, bpe_train(df)) it replaces, and must
-        leave no storage behind after release."""
+        leave no storage behind its scope."""
+        from check import storage_counts, storage_surplus
+
         from deltaforge_spark.operators.textanalysis import (
             bpe_apply_merges,
             bpe_train,
             bpe_train_and_apply,
         )
-        from deltaforge_spark.plans.lineage import release_retained
+        from deltaforge_spark.plans.lineage import pin_scope
 
         texts = [
             "aaaaaa banana mississippi the the lower",
@@ -872,16 +874,12 @@ class TestBpeTrain:
         composed = sorted(
             map(tuple, bpe_apply_merges(df, bpe_train(df, num_merges=5)).collect())
         )
-        fused_df = bpe_train_and_apply(df, num_merges=5)
-        fused = sorted(map(tuple, fused_df.collect()))
+        before = storage_counts(spark)
+        with pin_scope():
+            fused = sorted(map(tuple, bpe_train_and_apply(df, num_merges=5).collect()))
+            assert storage_surplus(spark, before)[2] > 0, "training pin backs the result"
         assert fused == composed
-        from deltaforge_spark.plans.lineage import retained_pins
-
-        assert len(retained_pins(fused_df)) == 1, (
-            "training pin must ride on the result"
-        )
-        release_retained(fused_df)
-        assert retained_pins(fused_df) == []
+        assert storage_surplus(spark, before) == (0, 0, 0)
 
     def test_apply_reproduces_training_pair_statistics(self, spark):
         """Applying the n learned merges to the training corpus must

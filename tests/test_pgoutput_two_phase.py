@@ -3,11 +3,10 @@ byte-pinned b/P/K/r/p vectors against the public message-format docs,
 the prepared-transaction control table, and the decode pipeline's
 decision gating (commit emits, rollback and pending never do)."""
 
-import os
-import urllib.parse
-
 import pytest
+from check import storage_counts, storage_surplus
 
+from deltaforge_spark.plans.lineage import pin_scope
 from deltaforge_spark.sources.pgoutput import (
     PgoutputError,
     decode_pgoutput,
@@ -172,21 +171,6 @@ class TestPreparedAssembly:
         ]
 
 
-def _stored(spark) -> int:
-    """Persistent RDDs plus CacheManager entries in the session."""
-    n = int(spark.sparkContext._jsc.getPersistentRDDs().size())
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    field = cm.getClass().getDeclaredField("cachedData")
-    field.setAccessible(True)
-    return n + int(field.get(cm).size())
-
-
-def _checkpoint_files(spark) -> set:
-    """Every file under the session's reliable-checkpoint dir."""
-    root = urllib.parse.urlparse(spark.sparkContext.getCheckpointDir()).path
-    return {os.path.join(d, f) for d, _, files in os.walk(root) for f in files}
-
-
 class TestErrorPathReleasesPins:
     """A decode that raises after pinning its control rows releases the
     pin — and every pin taken after it — before the error propagates."""
@@ -209,10 +193,10 @@ class TestErrorPathReleasesPins:
                 (6, encode_prepare(6, 7, 1_000_000, 10, "g10")),
             ]
         stream = _df(spark, rows)
-        before = _stored(spark)
+        before = storage_counts(spark)
         with pytest.raises(Exception, match="truncated"):
             decode_pgoutput(stream)
-        assert _stored(spark) == before
+        assert storage_surplus(spark, before) == (0, 0, 0)
 
     @pytest.mark.parametrize("payload", [None, b""], ids=["null", "empty"])
     def test_null_or_empty_payload_raises(self, spark, payload):
@@ -224,10 +208,10 @@ class TestErrorPathReleasesPins:
             (2, payload),
             (3, encode_commit(3, 4, 7_000_000)),
         ])
-        before = _stored(spark)
+        before = storage_counts(spark)
         with pytest.raises(PgoutputError, match="1 row.*NULL or empty"):
             decode_pgoutput(stream)
-        assert _stored(spark) == before
+        assert storage_surplus(spark, before) == (0, 0, 0)
 
     @pytest.mark.parametrize("collect_max", [65536, 0], ids=["fast", "distributed"])
     def test_torn_stream_capture_leaks_nothing(self, spark, collect_max):
@@ -244,8 +228,36 @@ class TestErrorPathReleasesPins:
             (1, encode_stream_start(2)),
             (2, encode_stream_stop()),
         ])
-        before, files = _stored(spark), _checkpoint_files(spark)
+        before = storage_counts(spark)
         with pytest.raises(PgoutputError, match="never closed"):
             decode_pgoutput(stream, stream_block_collect_max=collect_max)
-        assert _stored(spark) == before
-        assert _checkpoint_files(spark) - files == set()
+        assert storage_surplus(spark, before) == (0, 0, 0)
+
+    def test_raise_after_dml_persist_under_scope_leaks_nothing(self, spark):
+        """A plain and a streamed tx: the decoder persists the DML parse
+        both branches read and returns. A caller raising after consuming
+        it leaves nothing once its scope closes."""
+        from deltaforge_spark.sources.pgoutput import (
+            encode_stream_commit,
+            encode_stream_start,
+            encode_stream_stop,
+        )
+
+        stream = _df(spark, [
+            (0, encode_relation(REL, "public", "t", COLS)),
+            (1, encode_stream_start(10)),
+            (2, encode_insert(REL, ["1", "a"], stream_xid=10)),
+            (3, encode_stream_stop()),
+            (4, encode_stream_commit(10, 0x10, 0x11, 5_000_000)),
+            (5, encode_begin(14, 7_000_000, 40)),
+            (6, encode_insert(REL, ["4", "d"])),
+            (7, encode_commit(14, 15, 7_000_000)),
+        ])
+        before = storage_counts(spark)
+        with pytest.raises(RuntimeError, match="consumer failed"):
+            with pin_scope():
+                assert decode_pgoutput(stream).count() == 2
+                # the control pin and the DML persist back the result
+                assert storage_surplus(spark, before)[:2] == (2, 2)
+                raise RuntimeError("consumer failed")
+        assert storage_surplus(spark, before) == (0, 0, 0)

@@ -7,12 +7,19 @@ Usage: python tools/check.py [--all] [sf_dir] [query ...]
 ``--all`` is the CI mode: ignores any query filter, runs the FULL
 declared set, and exits non-zero on any non-green — so "declared but
 never value-verified" cannot recur.
+
+Leak gate: each query is built and consumed inside one ``pin_scope``;
+a query that leaves more persistent RDDs, CacheManager entries or
+checkpoint files behind its scope than the session held before it
+fails, whatever its values.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
+import urllib.parse
 from decimal import Decimal
 
 import duckdb
@@ -42,14 +49,33 @@ def row_key(row, cols_order):
     return tuple(norm(row[i]) for i in cols_order)
 
 
+def storage_counts(spark) -> tuple[int, int, int]:
+    """What a query can leave behind in the session: (persistent RDDs,
+    CacheManager entries, files under the checkpoint dir)."""
+    sc = spark.sparkContext
+    rdds = int(sc._jsc.getPersistentRDDs().size())
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = int(field.get(cm).size())
+    root = sc.getCheckpointDir()
+    files = 0
+    if root is not None:
+        files = sum(len(fs) for _, _, fs in os.walk(urllib.parse.urlparse(root).path))
+    return rdds, entries, files
+
+
+def storage_surplus(spark, before: tuple[int, int, int]) -> tuple[int, int, int]:
+    """:func:`storage_counts` now minus ``before``; storage the
+    ContextCleaner freed meanwhile does not offset a leak."""
+    return tuple(max(0, a - b) for a, b in zip(storage_counts(spark), before))
+
+
 def compare(name, spark_df, sql, con, duck=None) -> list[str]:
     errs = []
     sdf = spark_df
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-    from deltaforge_spark.plans.lineage import release_retained
-
-    release_retained(sdf)  # retained-pin convention: consumed above
     if duck is not None:  # precomputed fast-oracle result (cols, rows)
         dcols, drows = duck
     else:
@@ -125,6 +151,7 @@ def main():
     only = set() if run_all else set(argv[1:])
 
     import __spark_entry__ as entrymod
+    from deltaforge_spark.plans.lineage import pin_scope
     from deltaforge_spark.session import get_spark
 
     spark = get_spark("check")
@@ -140,22 +167,25 @@ def main():
         if only and name not in only:
             continue
         checked += 1
-        if name not in oracles:
-            try:
-                n = fn(spark, sf_dir).count()
-                print(f"  ~ {name}: no oracle (rows-only) → {n} rows")
-            except Exception as e:
-                print(f"  ✗ {name}: EXCEPTION {e}")
-                failed.append(name)
-            continue
+        before = storage_counts(spark)
+        errs, n = [], None
         try:
-            duck = None
-            if name in FAST_ORACLES and _fast_oracle_scale(con):
-                duck = FAST_ORACLES[name](con)
-            errs = compare(name, fn(spark, sf_dir), oracles[name], con, duck=duck)
+            with pin_scope():
+                if name not in oracles:
+                    n = fn(spark, sf_dir).count()
+                else:
+                    duck = None
+                    if name in FAST_ORACLES and _fast_oracle_scale(con):
+                        duck = FAST_ORACLES[name](con)
+                    errs = compare(name, fn(spark, sf_dir), oracles[name], con, duck=duck)
         except Exception as e:
             errs = [f"EXCEPTION {type(e).__name__}: {e}"]
-        if errs:
+        surplus = storage_surplus(spark, before)
+        if any(surplus):
+            errs.append(f"leaked storage (rdds, cache entries, files): {surplus}")
+        if n is not None and not errs:
+            print(f"  ~ {name}: no oracle (rows-only) → {n} rows")
+        elif errs:
             failed.append(name)
             print(f"  ✗ {name}")
             for e in errs:

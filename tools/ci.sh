@@ -31,7 +31,9 @@ if [ "$tier" != "all" ]; then
 fi
 # the four pgoutput decode paths (plain, streamed, two-phase, change
 # feed) against their DuckDB oracles in EVERY tier, so a decoder change
-# gets a value check on each commit (~45 s on 4 cores)
+# gets a value check on each commit (~45 s on 4 cores). check.py's leak
+# gate fails any query that leaves a cache or checkpoint behind its
+# pin_scope, here and in the --all sweeps below
 python tools/check.py /root/testdata/sf0.001 cdc_pgoutput_decode \
     cdc_pgoutput_stream_decode cdc_pgoutput_two_phase cdc_pgoutput_changefeed
 

@@ -104,7 +104,7 @@ def main() -> None:
     from pyspark.sql import functions as F  # noqa: F401
 
     from deltaforge_spark.operators.textanalysis import bpe_apply_merges
-    from deltaforge_spark.plans.lineage import release_retained
+    from deltaforge_spark.plans.lineage import pin_scope
     from deltaforge_spark.session import get_spark
 
     vocab = synth_corpus()
@@ -134,10 +134,9 @@ def main() -> None:
         best = None
         for _ in range(2):  # min-of-2: shared-host stall insurance
             t0 = time.perf_counter()
-            out = bpe_apply_merges(docs, merges_df, chunk=chunk)
-            n = out.count()
-            sec = time.perf_counter() - t0
-            release_retained(out)
+            with pin_scope():
+                n = bpe_apply_merges(docs, merges_df, chunk=chunk).count()
+                sec = time.perf_counter() - t0
             best = sec if best is None else min(best, sec)
         n_chunks = (len(merges) + chunk - 1) // chunk
         row = {"chunk": chunk, "n_merges": len(merges), "n_chunks": n_chunks,

@@ -209,11 +209,6 @@ EXTRA_KERNELS = {
 }
 
 
-def materialize(df) -> None:
-    if df is not None:
-        df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--only")]
     only: set[str] | None = None
@@ -224,6 +219,8 @@ def main() -> None:
     sf01_dir = "/root/testdata/sf0.1"
 
     import __spark_entry__ as entry
+    from bench import materialize
+    from deltaforge_spark.plans.lineage import pin_scope
     from deltaforge_spark.session import get_spark
 
     spark = get_spark("soak-sf1")
@@ -235,18 +232,19 @@ def main() -> None:
         todo = [(n, fn) for n, fn in todo if n in only]
     for name, fn in todo:
         # warm pass at sf0.001 compiles codegen out of the timings
-        materialize(fn(spark, "/root/testdata/sf0.001"))
+        materialize(lambda: fn(spark, "/root/testdata/sf0.001"))
         row: dict[str, float] = {}
         for label, d in (("sf0.1", sf01_dir), ("sf1", sf1_dir)):
             best = None
             for _ in range(2):  # min-of-2: shared-host stall insurance
                 t0 = time.perf_counter()
-                materialize(fn(spark, d))
+                materialize(lambda: fn(spark, d))
                 sec = time.perf_counter() - t0
                 best = sec if best is None else min(best, sec)
             row[label] = round(best, 3)
             if name in OUTPUT_NORMALIZED:
-                row[f"pairs_{label}"] = fn(spark, d).count()
+                with pin_scope():
+                    row[f"pairs_{label}"] = fn(spark, d).count()
         row["ratio"] = round(row["sf1"] / row["sf0.1"], 2)
         # output-normalized ratio (VERDICT r12 #3): gen_sf makes every
         # sf1 replica a near-dup, so the raw wall ratio on pair-emitting

@@ -59,7 +59,7 @@ def main() -> None:
     for name in names:
         try:
             spark.sparkContext.setJobDescription(f"warm:{name}")
-            materialize(qs[name](spark, warm_dir))
+            materialize(lambda: qs[name](spark, warm_dir))
         except Exception as e:  # noqa: BLE001 — record, keep sweeping
             print(f"  warm FAIL {name}: {e}", file=sys.stderr, flush=True)
     print("warmup done", file=sys.stderr, flush=True)
@@ -71,7 +71,7 @@ def main() -> None:
             t0 = time.perf_counter()
             err = None
             try:
-                materialize(qs[name](spark, sf_dir))
+                materialize(lambda: qs[name](spark, sf_dir))
             except Exception as e:  # noqa: BLE001
                 err = f"{type(e).__name__}: {e}"
             sec = round(time.perf_counter() - t0, 3)
