@@ -41,6 +41,31 @@ def _scratch_dir() -> str:
     return path
 
 
+# cgroup v2, then v1: the memory limit of the container the driver runs in
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    the smaller of 48g and half the memory this process may use — the
+    cgroup limit when one is set, else physical RAM. A 48g heap on a
+    smaller host lets the JVM grow until the host runs out of memory."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # v2 writes "max" and v1 a huge number when unset
+            limit = min(limit, int(raw))
+        break
+    return f"{min(48 << 10, (limit // 2) >> 20)}m"
+
+
 def get_spark(app_name: str = "deltaforge_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a tuned local session.
 
@@ -53,7 +78,10 @@ def get_spark(app_name: str = "deltaforge_spark", cpus: int | None = None) -> Sp
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # shuffle/spill scratch on tmpfs: the container's disk is shared

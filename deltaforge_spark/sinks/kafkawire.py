@@ -42,8 +42,8 @@ except ImportError:
 
 def _crc32c_scalar_raw(data: bytes, reg: int) -> int:
     """Register update over ``data`` from register state ``reg`` (no
-    init/final xor — raw fold, used by both the scalar path and the
-    chunked tail)."""
+    init/final xor — raw fold, used by the small-buffer path and for
+    the short remainders ``crc32c_many`` leaves)."""
     tab = _crc32c_table
     for b in data:
         reg = (reg >> 8) ^ tab[(reg ^ b) & 0xFF]
@@ -78,31 +78,11 @@ def _zero_byte_operator() -> list[int]:
     return [((1 << c) >> 8) ^ _crc32c_table[(1 << c) & 0xFF] for c in range(32)]
 
 
-_advance_cache: dict[int, list[int]] = {}
-
-
-def _advance_operator(n_bytes: int) -> list[int]:
-    """A_n = (one-zero-byte operator)^n via binary exponentiation."""
-    cached = _advance_cache.get(n_bytes)
-    if cached is not None:
-        return cached
-    # identity
-    result = [1 << i for i in range(32)]
-    sq = _zero_byte_operator()
-    n = n_bytes
-    while n:
-        if n & 1:
-            result = [_gf2_matrix_times(sq, result[i]) for i in range(32)]
-        n >>= 1
-        if n:
-            sq = _gf2_matrix_square(sq)
-    _advance_cache[n_bytes] = result
-    return result
-
-
-_LANE_LEN = 512  # fixed power-of-two, multiple of 8 (slice-by-8 stride)
+_LANE_LOG2 = 9
+_LANE_LEN = 1 << _LANE_LOG2  # 512: a multiple of 8 (slice-by-8 stride)
+_CRC_PASS_BYTES = 1 << 20  # zero-matrix bound of one crc32c_many pass
 _np_slice_tables = None
-_lane_pow_cache: list | None = None  # np A_{lane*2^j} matrices
+_lane_pow_cache: list = []  # (operator, byte table) of A_{lane*2^j}
 _lane_pow_lock = threading.Lock()
 
 
@@ -124,85 +104,111 @@ def _slice_tables():
     return _np_slice_tables
 
 
-def _lane_pows(max_level: int):
-    """A_{_LANE_LEN * 2^j} for j in [0, max_level], each as a (32,)
-    uint32 numpy array (column c = image of unit register 1<<c).
+def _byte_tables(op: list[int]):
+    """A GF(2) operator as a (4, 256) uint32 byte table: row b, entry v
+    is the image of register v << 8b, so
+    A(r) = T[0][r & 0xFF] ^ T[1][(r >> 8) & 0xFF] ^ ... ."""
+    import numpy as np
+
+    v = np.arange(256, dtype=np.uint32)
+    tab = np.zeros((4, 256), dtype=np.uint32)
+    for c in range(32):
+        bit = (v >> np.uint32(c % 8)) & np.uint32(1)
+        tab[c // 8] ^= bit * np.uint32(op[c])
+    return tab
+
+
+def _lane_pows(max_level: int) -> list:
+    """(operator, byte table) of A_{_LANE_LEN * 2^j} for j in
+    [0, max_level]: the one-zero-byte operator squared _LANE_LOG2 + j
+    times.
 
     Built copy-on-write under a lock: the thread-per-connection
     loopback broker validates CRCs concurrently, and two threads
     growing a shared list could append the same level twice — silently
     corrupting the index->matrix invariant for every later fold."""
     global _lane_pow_cache
-    import numpy as np
-
     cache = _lane_pow_cache
-    if cache is not None and len(cache) > max_level:
+    if len(cache) > max_level:
         return cache
     with _lane_pow_lock:
-        cache = _lane_pow_cache
-        if cache is None:
-            cache = [np.array(_advance_operator(_LANE_LEN), dtype=np.uint32)]
-        else:
-            cache = list(cache)  # never mutate the published list
+        cache = list(_lane_pow_cache)  # never mutate the published list
         while len(cache) <= max_level:
-            prev = [int(x) for x in cache[-1]]
-            sq = _gf2_matrix_square(prev)
-            cache.append(np.array(sq, dtype=np.uint32))
+            if cache:
+                op = _gf2_matrix_square(cache[-1][0])
+            else:
+                op = _zero_byte_operator()
+                for _ in range(_LANE_LOG2):
+                    op = _gf2_matrix_square(op)
+            cache.append((op, _byte_tables(op)))
         _lane_pow_cache = cache
     return cache
 
 
-def _fold_tree(lanes, level0: int):
-    """Pairwise GF(2) tree fold of a power-of-two count of sequential
-    lane registers (each covering _LANE_LEN * 2^level0 bytes) into one
-    register. Each level applies ONE fixed advance matrix to the left
-    half — vectorized bit-serial matrix-vector product across pairs."""
+def _fold_tree(lanes):
+    """Pairwise GF(2) tree fold of each row of an (n, 2^m) matrix of
+    sequential lane registers into one register per row. Each level
+    applies ONE fixed advance matrix to the left half of every pair —
+    four byte-table gathers, vectorized across all rows."""
     import numpy as np
 
-    level = level0
+    level = 0
     cur = lanes
-    one = np.uint32(1)
-    while cur.shape[0] > 1:
-        mat = _lane_pows(level)[level]
-        left, right = cur[0::2], cur[1::2]
-        out = np.zeros(left.shape[0], dtype=np.uint32)
-        v = left.copy()
-        for i in range(32):
-            out ^= np.where((v & one).astype(bool), mat[i], np.uint32(0))
-            v >>= one
-        cur = out ^ right
+    u8, u16, u24, mask = np.uint32(8), np.uint32(16), np.uint32(24), np.uint32(0xFF)
+    while cur.shape[1] > 1:
+        t = _lane_pows(level)[level][1]
+        left, right = cur[:, 0::2], cur[:, 1::2]
+        cur = (
+            t[0][left & mask]
+            ^ t[1][(left >> u8) & mask]
+            ^ t[2][(left >> u16) & mask]
+            ^ t[3][left >> u24]
+            ^ right
+        )
         level += 1
-    return int(cur[0])
+    return cur[:, 0]
 
 
-def _crc32c_numpy_raw(data: bytes, reg: int) -> int:
-    """Multi-lane slicing-by-8: split into K = n//512 lanes, advance
-    all lane registers 8 bytes per Python-level iteration (vectorized
-    table gathers across lanes), then combine the lane registers with
-    a GF(2) pairwise tree (power-of-two blocks, blocks chained with
-    the scalar advance operator). Exact same result as the sequential
-    loop; Python-level iteration count is lane_len/8 = 64."""
+def _crc32c_pass(segs: list, regs: list[int]) -> list[int]:
+    """Raw registers of every segment (each >= 4 bytes) from its start
+    register, in ONE multi-lane slicing-by-8 pass.
+
+    Each segment is right-aligned in a zero matrix whose width is the
+    longest segment rounded up to whole lanes, and its first 4 bytes are
+    XORed with its start register (little-endian): starting the register
+    at r is the same as starting at 0 with those bytes flipped, and the
+    leading zero bytes leave a zero register at zero. The rows are cut
+    into 512-byte lanes, all lanes of all rows advance 8 bytes per
+    Python-level iteration (64 iterations), and each row's lanes —
+    padded on the left with zero registers to a power of two — fold
+    into its register with the GF(2) tree."""
     import numpy as np
 
     lane = _LANE_LEN
-    k = len(data) // lane
-    body = k * lane
+    n = len(segs)
+    width = -(-max(map(len, segs)) // lane) * lane
+    mat = np.zeros((n, width), dtype=np.uint8)
+    for row, seg, reg in zip(mat, segs, regs):
+        tail = row[width - len(seg):]
+        tail[:] = np.frombuffer(seg, dtype=np.uint8)
+        tail[:4] ^= np.frombuffer(reg.to_bytes(4, "little"), dtype=np.uint8)
+    per_row = width // lane
+    k = n * per_row
     # view each 8-byte chunk as ONE little-endian uint64 and
     # transpose-copy the (k, lane/8) word matrix ONCE — an 8x cheaper
-    # copy than transposing bytes (k*lane/8 strided elements, not
-    # k*lane), after which every per-iteration slice is contiguous.
-    # On LE platforms q & 0xFFFFFFFF IS b0|b1<<8|b2<<16|b3<<24.
-    arr64 = np.frombuffer(data, dtype="<u8", count=body // 8).reshape(k, lane // 8)
-    arr64_t = np.ascontiguousarray(arr64.T)
+    # copy than transposing bytes, after which every per-iteration
+    # slice is contiguous. q & 0xFFFFFFFF IS b0|b1<<8|b2<<16|b3<<24.
+    arr64_t = np.ascontiguousarray(mat.view("<u8").reshape(k, lane // 8).T)
+    del mat
     t = _slice_tables()
     t0, t1, t2, t3, t4, t5, t6, t7 = (t[j] for j in range(8))
     lanes = np.zeros(k, dtype=np.uint32)
     u8, u16, u24, mask = np.uint32(8), np.uint32(16), np.uint32(24), np.uint32(0xFF)
-    m8 = np.uint64(0xFF)
+    m8, m32 = np.uint64(0xFF), np.uint64(0xFFFFFFFF)
     s32, s40, s48, s56 = np.uint64(32), np.uint64(40), np.uint64(48), np.uint64(56)
     for j in range(lane // 8):
         q = arr64_t[j]
-        x = lanes ^ (q & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+        x = lanes ^ (q & m32).astype(np.uint32)
         lanes = (
             t7[x & mask]
             ^ t6[(x >> u8) & mask]
@@ -213,43 +219,63 @@ def _crc32c_numpy_raw(data: bytes, reg: int) -> int:
             ^ t1[(q >> s48) & m8]
             ^ t0[q >> s56]
         )
-    # fold sequential lanes: power-of-two blocks left→right, tree per
-    # block, blocks chained with A_{block2 bytes}(r1) ^ r2
-    folded: int | None = None
-    folded_from = 0  # lane index where the folded prefix ends
-    pos = 0
-    while pos < k:
-        m = 1
-        while m * 2 <= k - pos:
-            m *= 2
-        block = _fold_tree(lanes[pos : pos + m], 0)
-        if folded is None:
-            folded = block
-        else:
-            folded = _gf2_matrix_times(_advance_operator(m * lane), folded) ^ block
-        pos += m
-        folded_from = pos
-    assert folded_from == k
-    # whole-body register from init reg: affine shift of the zero-init fold
-    reg = _gf2_matrix_times(_advance_operator(body), reg) ^ (folded or 0)
-    return _crc32c_scalar_raw(data[body:], reg)
+    lanes = lanes.reshape(n, per_row)
+    pow2 = 1 << (per_row - 1).bit_length()
+    if pow2 != per_row:
+        lanes = np.concatenate(
+            [np.zeros((n, pow2 - per_row), dtype=np.uint32), lanes], axis=1
+        )
+    return [int(r) for r in _fold_tree(lanes)]
 
 
-def crc32c(data: bytes, crc: int = 0) -> int:
+def crc32c_many(bufs) -> list[int]:
+    """CRC-32C of every buffer, computed together in passes whose zero
+    matrix holds at most _CRC_PASS_BYTES: buffers are packed longest
+    first, and a buffer longer than the bound continues in later passes
+    from the register its earlier segments left. Buffers (or final
+    remainders) shorter than 4 bytes take the table loop."""
+    if _c_crc32c is not None:
+        return [_c_crc32c(b) for b in bufs]
+    views = [memoryview(b) for b in bufs]
+    regs = [0xFFFFFFFF] * len(views)
+    pos = [0] * len(views)
+    live = [i for i, v in enumerate(views) if len(v) >= 4]
+    while live:
+        # one round: the next segment of every buffer with >= 4 bytes
+        # left, packed longest first into passes under the bound
+        segs = sorted(
+            ((i, views[i][pos[i] : pos[i] + _CRC_PASS_BYTES]) for i in live),
+            key=lambda s: -len(s[1]),
+        )
+        start = 0
+        while start < len(segs):
+            width = -(-len(segs[start][1]) // _LANE_LEN) * _LANE_LEN
+            stop = start + max(1, _CRC_PASS_BYTES // width)
+            group = segs[start:stop]
+            out = _crc32c_pass([s for _, s in group], [regs[i] for i, _ in group])
+            for (i, seg), reg in zip(group, out):
+                regs[i] = reg
+                pos[i] += len(seg)
+            start = stop
+        live = [i for i in live if len(views[i]) - pos[i] >= 4]
+    return [
+        _crc32c_scalar_raw(v[p:], reg) ^ 0xFFFFFFFF
+        for v, p, reg in zip(views, pos, regs)
+    ]
+
+
+def crc32c(data: bytes) -> int:
     """CRC-32C (Castagnoli) — the RecordBatch v2 checksum (Kafka uses
     Castagnoli, NOT the zlib IEEE polynomial). C wheel when present;
-    numpy multi-lane + GF(2) combine for large buffers; table loop for
-    small ones."""
-    if _c_crc32c is not None and crc == 0:
+    the numpy multi-lane pass of ``crc32c_many`` for large buffers;
+    table loop for small ones."""
+    if _c_crc32c is not None:
         return _c_crc32c(data)
-    reg = crc ^ 0xFFFFFFFF
-    # numpy pays ~1300 fixed op dispatches (64 iterations x ~21 ops);
-    # below ~16KB the scalar table loop is cheaper (measured crossover)
+    # a numpy pass pays ~1300 fixed op dispatches (64 iterations x ~21
+    # ops); below ~16KB the scalar table loop is cheaper (measured)
     if len(data) >= 16384:
-        reg = _crc32c_numpy_raw(data, reg)
-    else:
-        reg = _crc32c_scalar_raw(data, reg)
-    return reg ^ 0xFFFFFFFF
+        return crc32c_many([data])[0]
+    return _crc32c_scalar_raw(data, 0xFFFFFFFF) ^ 0xFFFFFFFF
 
 
 # ----------------------------------------------------------- murmur2
@@ -499,6 +525,39 @@ def _encode_records(
     return b"".join(parts)
 
 
+def _record_batch_body(
+    records: list[tuple[bytes | None, bytes | None, list[tuple[str, bytes]]]],
+    *,
+    base_timestamp: int,
+    producer_id: int,
+    producer_epoch: int,
+    base_sequence: int,
+    transactional: bool,
+) -> bytes:
+    """The part of a RecordBatch v2 its CRC32C covers: attributes
+    through the records. The producer triple + baseSequence is the
+    idempotence identity the broker dedupes on."""
+    attributes = 0x0010 if transactional else 0  # bit 4: isTransactional
+    return struct.pack(
+        ">hiqqqhii",
+        attributes,
+        len(records) - 1,  # lastOffsetDelta
+        base_timestamp,
+        base_timestamp,  # maxTimestamp
+        producer_id,
+        producer_epoch,
+        base_sequence,
+        len(records),
+    ) + _encode_records(records)
+
+
+def _frame_record_batch(body: bytes, crc: int) -> bytes:
+    """baseOffset, batchLength, partitionLeaderEpoch, magic 2 and the
+    CRC32C of ``body``, then the body."""
+    # batchLength counts leaderEpoch + magic + crc + body
+    return struct.pack(">qiibI", 0, 4 + 1 + 4 + len(body), -1, 2, crc) + body
+
+
 def encode_record_batch(
     records: list[tuple[bytes | None, bytes | None, list[tuple[str, bytes]]]],
     *,
@@ -508,28 +567,16 @@ def encode_record_batch(
     base_sequence: int = -1,
     transactional: bool = False,
 ) -> bytes:
-    """RecordBatch v2 (magic 2): CRC32C covers attributes→end; the
-    producer triple + baseSequence is the idempotence identity the
-    broker dedupes on."""
-    recs = _encode_records(records)
-    attributes = 0x0010 if transactional else 0  # bit 4: isTransactional
-    after_crc = bytearray(struct.pack(">h", attributes))
-    after_crc += struct.pack(">i", len(records) - 1)  # lastOffsetDelta
-    after_crc += struct.pack(">q", base_timestamp)
-    after_crc += struct.pack(">q", base_timestamp)  # maxTimestamp
-    after_crc += struct.pack(">q", producer_id)
-    after_crc += struct.pack(">h", producer_epoch)
-    after_crc += struct.pack(">i", base_sequence)
-    after_crc += struct.pack(">i", len(records))
-    after_crc += recs
-    crc = crc32c(bytes(after_crc))
-    head = bytearray(struct.pack(">q", 0))  # baseOffset
-    batch_len = 4 + 1 + 4 + len(after_crc)  # leaderEpoch+magic+crc+rest
-    head += struct.pack(">i", batch_len)
-    head += struct.pack(">i", -1)  # partitionLeaderEpoch
-    head += struct.pack(">b", 2)  # magic
-    head += struct.pack(">I", crc)
-    return bytes(head) + bytes(after_crc)
+    """RecordBatch v2 (magic 2): CRC32C covers attributes→end."""
+    body = _record_batch_body(
+        records,
+        base_timestamp=base_timestamp,
+        producer_id=producer_id,
+        producer_epoch=producer_epoch,
+        base_sequence=base_sequence,
+        transactional=transactional,
+    )
+    return _frame_record_batch(body, crc32c(body))
 
 
 def decode_record_batch(data: bytes) -> dict[str, Any]:
@@ -693,10 +740,12 @@ class KafkaWireProducer:
             parts = murmur2_partitions([r[1] for r in buf], self.num_partitions)
             for (topic, kb, vb, hdrs), part in zip(buf, parts):
                 pending.setdefault((topic, part), []).append((kb, vb, hdrs))
-        for (topic, part), records in sorted(pending.items()):
-            self._add_partitions([(topic, part)])
-            seq = self._sequences.get((topic, part), 0)
-            batch = encode_record_batch(
+        # every batch body first, so the CRC-32C of the whole flush is
+        # one crc32c_many call rather than one numpy pass per batch
+        groups = sorted(pending.items())
+        seqs = [self._sequences.get(tp, 0) for tp, _ in groups]
+        bodies = [
+            _record_batch_body(
                 records,
                 base_timestamp=self.ts,
                 producer_id=self.producer_id,
@@ -704,6 +753,12 @@ class KafkaWireProducer:
                 base_sequence=seq,
                 transactional=True,
             )
+            for (_, records), seq in zip(groups, seqs)
+        ]
+        crcs = crc32c_many(bodies)
+        for ((topic, part), records), seq, rb_body, crc in zip(groups, seqs, bodies, crcs):
+            self._add_partitions([(topic, part)])
+            batch = _frame_record_batch(rb_body, crc)
             body = _str(self.txn_id) + struct.pack(">hi", -1, 30000)  # acks=all
             body += struct.pack(">i", 1) + _str(topic)
             body += struct.pack(">i", 1) + struct.pack(">i", part) + _bytes(batch)

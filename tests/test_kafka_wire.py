@@ -168,7 +168,9 @@ def broker():
 
 
 def _connect(port):
-    return socket.create_connection(("127.0.0.1", port))
+    # the broker thread dies on a batch it cannot decode; the timeout
+    # turns the producer's wait for its reply into a failure, not a hang
+    return socket.create_connection(("127.0.0.1", port), timeout=60)
 
 
 # ---------------------------------------------------------------- unit
@@ -178,6 +180,100 @@ class TestPrimitives:
     def test_crc32c_castagnoli_vector(self):
         assert kw.crc32c(b"123456789") == 0xE3069283  # the standard check value
         assert kw.crc32c(b"") == 0
+
+    def test_crc32c_rfc3720_vectors(self):
+        # RFC 3720 (iSCSI) appendix B.4 CRC-32C examples
+        vectors = [
+            (bytes(32), 0x8A9136AA),
+            (b"\xff" * 32, 0x62A8AB43),
+            (bytes(range(32)), 0x46DD794E),
+            (bytes(range(31, -1, -1)), 0x113FDB5C),
+        ]
+        for data, want in vectors:
+            assert kw.crc32c(data) == want
+        assert kw.crc32c_many([d for d, _ in vectors]) == [w for _, w in vectors]
+
+    # The numpy pass is checked against the byte-table loop, not against
+    # itself: the producer and the validating broker both call crc32c,
+    # so a wrong large-buffer CRC would round-trip unnoticed. The C
+    # wheel, when installed, is switched off so the numpy pass runs.
+
+    @staticmethod
+    def _table_crc(data):
+        return kw._crc32c_scalar_raw(data, 0xFFFFFFFF) ^ 0xFFFFFFFF
+
+    def test_crc32c_matches_table_loop_at_edge_lengths(self, monkeypatch):
+        import random
+
+        monkeypatch.setattr(kw, "_c_crc32c", None)
+        rng = random.Random(7)
+        lengths = [*range(6), 511, 512, 513, 16383, 16384, 16385]
+        bufs = [rng.randbytes(n) for n in lengths]
+        want = [self._table_crc(b) for b in bufs]
+        assert [kw.crc32c(b) for b in bufs] == want
+        assert [kw.crc32c_many([b])[0] for b in bufs] == want
+        assert kw.crc32c_many(bufs) == want
+
+    def test_crc32c_many_across_the_pass_bound(self, monkeypatch):
+        import random
+
+        monkeypatch.setattr(kw, "_c_crc32c", None)
+        rng = random.Random(11)
+        bound = kw._CRC_PASS_BYTES
+        # one buffer per side of the bound, and remainders of 1..5 bytes
+        # after a full pass (the last 1-3 take the table loop)
+        big = [rng.randbytes(bound + d) for d in (-1, 0, 1, 3, 4, 5)]
+        for b in big:
+            assert kw.crc32c(b) == self._table_crc(b)
+        # one mixed call: edge lengths, random sizes and a buffer that
+        # needs three passes, in shuffled order
+        edges = (0, 1, 3, 4, 5, 511, 512, 513, 16383, 16384, 16385)
+        bufs = [rng.randbytes(n) for n in edges]
+        bufs += [rng.randbytes(rng.randrange(70_000)) for _ in range(40)]
+        bufs.append(rng.randbytes(2 * bound + 515))
+        rng.shuffle(bufs)
+        assert kw.crc32c_many(bufs) == [self._table_crc(b) for b in bufs]
+
+    def test_crc32c_many_small_pass_bound(self, monkeypatch):
+        # a 2 KiB bound makes most buffers span several rounds and most
+        # passes hold several rows: register carry and packing both run
+        import random
+
+        monkeypatch.setattr(kw, "_c_crc32c", None)
+        monkeypatch.setattr(kw, "_CRC_PASS_BYTES", 2048)
+        rng = random.Random(13)
+        bufs = [rng.randbytes(rng.randrange(12_000)) for _ in range(60)]
+        bufs += [rng.randbytes(2048 * k + d) for k in (1, 2) for d in (1, 3, 4)]
+        assert kw.crc32c_many(bufs) == [self._table_crc(b) for b in bufs]
+
+    def test_crc32c_many_threads_share_the_fold_tables(self, monkeypatch):
+        # the threaded loopback broker validates CRCs concurrently: start
+        # from an empty fold-table cache so the threads race to grow it
+        import random
+        import sys
+
+        monkeypatch.setattr(kw, "_c_crc32c", None)
+        monkeypatch.setattr(kw, "_lane_pow_cache", [])
+        rng = random.Random(17)
+        bufs = [rng.randbytes(rng.randrange(4, 300_000)) for _ in range(16)]
+        want = [self._table_crc(b) for b in bufs]
+        results = {}
+
+        def worker(i):
+            results[i] = kw.crc32c_many(bufs[i:] + bufs[:i])
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert results == {i: want[i:] + want[:i] for i in range(8)}
 
     def test_varint_zigzag(self):
         for n in (0, 1, -1, 63, -64, 300, -300, 2**31, -(2**31)):
@@ -308,6 +404,73 @@ class TestTransactionalProtocol:
         vals = [r["value"] for recs in state.committed.values() for r in recs]
         assert vals == [b"v"]  # exactly once
         p2.close()
+
+    def test_flush_sends_encode_record_batch_bytes(self, broker, monkeypatch):
+        """Each Produce payload of a flush is ``encode_record_batch`` of
+        its (topic, partition) group with that group's base sequence,
+        sent after its AddPartitionsToTxn, groups in sorted order."""
+        import random
+
+        port, _state = broker
+        monkeypatch.setattr(kw, "_c_crc32c", None)  # run the numpy pass
+        rng = random.Random(3)
+        p = kw.KafkaWireProducer(_connect(port), "tx-bytes", num_partitions=3)
+        p.init_transactions()
+        calls = []
+        real_call = p.client.call
+
+        def recording_call(api_key, api_version, body):
+            calls.append((api_key, body))
+            return real_call(api_key, api_version, body)
+
+        p.client.call = recording_call
+        sequences = {}
+        for txn in range(2):
+            sent = []
+            p.begin_transaction()
+            for i in range(400):
+                topic = ("orders", "users", "items")[i % 3]
+                key = f"k{txn}-{i}".encode()
+                # the "orders" batches pass 16 KiB, the others stay small
+                value = rng.randbytes(500 if i % 3 == 0 else 8)
+                hdrs = json.dumps({"op": "c"}) if i % 2 else None
+                p.send(topic, key, value, hdrs)
+                sent.append((topic, key, value, [("op", b"c")] if i % 2 else []))
+            calls.clear()
+            p.commit_transaction()
+            groups = {}
+            for topic, key, value, hdrs in sent:
+                part = kw.partition_for(key, 3)
+                groups.setdefault((topic, part), []).append((key, value, hdrs))
+            assert len(groups) > 3
+            want_calls = []
+            for (topic, part), records in sorted(groups.items()):
+                seq = sequences.get((topic, part), 0)
+                batch = kw.encode_record_batch(
+                    records, base_timestamp=p.ts, producer_id=p.producer_id,
+                    producer_epoch=p.producer_epoch, base_sequence=seq,
+                    transactional=True,
+                )
+                sequences[(topic, part)] = seq + len(records)
+                want_calls.append((kw.API_ADD_PARTITIONS_TO_TXN, topic, part))
+                want_calls.append((kw.API_PRODUCE, topic, part, batch))
+            got_calls = []
+            for api_key, body in calls:
+                _txn, pos = _read_str(body, 0)
+                if api_key == kw.API_ADD_PARTITIONS_TO_TXN:
+                    topic, pos = _read_str(body, pos + 10 + 4)
+                    part = struct.unpack_from(">i", body, pos + 4)[0]
+                    got_calls.append((api_key, topic, part))
+                elif api_key == kw.API_PRODUCE:
+                    topic, pos = _read_str(body, pos + 6 + 4)
+                    part, blen = struct.unpack_from(">ii", body, pos + 4)
+                    batch = body[pos + 12 : pos + 12 + blen]
+                    assert len(batch) == blen
+                    got_calls.append((api_key, topic, part, batch))
+            assert got_calls == want_calls
+            assert calls[-1][0] == kw.API_END_TXN
+            assert max(len(c[3]) for c in want_calls if len(c) == 4) > 16384
+        p.close()
 
 
 # ----------------------------------------------------------- via Spark
