@@ -206,6 +206,10 @@ def parse_reference_spec(d: dict) -> RefPipeline:
     """Normalize a parsed reference YAML document. Raises
     UnsupportedSpecError on vocabulary this engine does not know —
     never silently drops config."""
+    if not isinstance(d, dict):
+        raise UnsupportedSpecError(
+            f"pipeline spec must be a YAML mapping, got {type(d).__name__} {repr(d)[:200]}"
+        )
     if d.get("apiVersion", "deltaforge/v1") != "deltaforge/v1":
         raise UnsupportedSpecError(f"apiVersion {d['apiVersion']!r}")
     meta = d.get("metadata", {})
@@ -280,6 +284,8 @@ def parse_reference_spec(d: dict) -> RefPipeline:
 
 
 def load_reference_spec(path_or_yaml: str) -> RefPipeline:
+    """Load a spec from a file path, or from YAML text when no such file
+    exists (a mistyped path thus fails as a non-mapping document)."""
     import yaml
 
     text = path_or_yaml
