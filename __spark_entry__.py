@@ -3705,11 +3705,8 @@ def q_cdc_binlog_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from pyspark.sql import types as T
 
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES,
-        decode_binlog_segments,
-        synth_binlog_events,
-    )
+    from deltaforge_spark.sources.binlog import decode_binlog_segments
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     segs = synth_binlog_events(spark, sf_dir)
     dec = decode_binlog_segments(segs, {("testdb", "events"): EVENTS_COL_NAMES})
@@ -3760,8 +3757,8 @@ def q_cdc_binlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from deltaforge_spark.sources.binlog import EVENTS_COL_NAMES, synth_binlog_events
     from deltaforge_spark.sources.datasource import BinlogSegmentsDataSource
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     spark.dataSource.register(BinlogSegmentsDataSource)
     # materialize the synthetic archive once per sf_dir (deterministic
@@ -3856,11 +3853,8 @@ def q_cdc_binlog_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from pyspark.sql import types as T
 
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES,
-        binlog_change_feed,
-        synth_binlog_events,
-    )
+    from deltaforge_spark.sources.binlog import binlog_change_feed
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     image_schema = T.StructType(
         [

@@ -338,12 +338,10 @@ def main():
     # methodology), so warming the identical kernel at sf0.001 is
     # measuring the same thing it does — per-event capability, not
     # process boot.
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES as _WARM_COLS,
-        decode_binlog_segments as _warm_decode,
-        synth_binlog_events as _warm_synth,
-    )
+    from deltaforge_spark.sources.binlog import decode_binlog_segments as _warm_decode
     from deltaforge_spark.sources.fixtures import (
+        EVENTS_COL_NAMES as _WARM_COLS,
+        synth_binlog_events as _warm_synth,
         synth_pgoutput_orders as _warm_pg_synth,
         synth_pgoutput_two_phase as _warm_2pc_synth,
     )
@@ -420,10 +418,10 @@ def main():
     # (binlog bytes exist before a consumer starts; encoding them is not
     # part of decode capability), then the timed run is scan → parse
     # (CRC + log_pos verified per event) → row materialization, min-of-3.
-    from deltaforge_spark.sources.binlog import (
+    from deltaforge_spark.sources.binlog import decode_binlog_segments
+    from deltaforge_spark.sources.fixtures import (
         EVENTS_COL_NAMES,
         SYNTH_FORMAT,
-        decode_binlog_segments,
         synth_binlog_events,
     )
 

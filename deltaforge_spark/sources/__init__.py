@@ -6,7 +6,6 @@ from .binlog import (
     binlog_change_feed,
     decode_binlog_segments,
     parse_segment,
-    synth_binlog_events,
 )
 from .pgoutput import ReplicationStream
 from .tailloop import (
@@ -41,7 +40,6 @@ __all__ = [
     "binlog_change_feed",
     "decode_binlog_segments",
     "parse_segment",
-    "synth_binlog_events",
     "decode_pgoutput",
     "decode_pgoutput_messages",
     "decode_pgoutput_truncates",

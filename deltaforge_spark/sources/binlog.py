@@ -10,14 +10,15 @@ header, FORMAT_DESCRIPTION, TABLE_MAP, WRITE/UPDATE/DELETE_ROWS v2,
 GTID, QUERY, XID, ROTATE — documented in the MySQL Internals manual).
 This module implements that grammar both ways:
 
-- **encode**: a deterministic binlog-segment writer used as the fixture
-  generator (and byte-pinned in unit tests against hand-computed
-  vectors), including CRC32 event checksums and running ``log_pos``
-  offsets;
-- **decode**: a strict parser — magic check, CRC verification, header
-  ``log_pos`` cross-check against actual bytes consumed, loud
-  ``BinlogError`` on any truncation — producing CDC rows with JSON
-  before/after images.
+- **encode**: a deterministic binlog-segment writer that the fixtures
+  (``sources/fixtures.py``) and the benchmark generator build on
+  (byte-pinned in unit tests against hand-computed vectors), including
+  CRC32 event checksums and running ``log_pos`` offsets;
+- **decode**: one strict framer, ``BinlogTailer`` (magic check, CRC
+  verification, header ``log_pos`` cross-check against actual bytes
+  consumed, loud ``BinlogError`` on any truncation), which
+  ``parse_segment`` feeds a whole segment, and one flattener,
+  ``segment_rows``, producing CDC rows with JSON before/after images.
 
 Distribution model: a binlog *file* is sequential by construction
 (TABLE_MAP applies to following row events, GTID/XID bracket them), so
@@ -42,13 +43,14 @@ from __future__ import annotations
 
 import json
 import struct
+import traceback
 import zlib
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -830,53 +832,26 @@ def parse_segment(
     columns_by_table: dict[tuple[str, str], list[str]] | None = None,
 ) -> list[dict[str, Any]]:
     """Parse one self-contained binlog segment into a list of decoded
-    events. Verifies magic, per-event CRC32, and that each header's
-    ``log_pos`` matches the actual byte offset — any drift is a
-    ``BinlogError`` (a corrupted segment must not decode silently).
+    events: :class:`BinlogTailer` fed the whole segment once, plus an
+    end check. The tailer is the only binlog framer, so a segment
+    decodes the same whether it arrives whole or in slices; its checks
+    (magic, per-event CRC32, ``log_pos`` continuity, a size floor) make
+    any corruption a ``BinlogError``. The end check adds what a live
+    tail cannot know: input shorter than the magic and a truncated
+    last event are errors too, never a silent partial decode.
 
-    Sequential state (the parts of the format that ARE sequential):
-    ``table_map`` (table_id → schema, reference handle_table_map),
-    current GTID and transaction bracket (GTID … XID). Row events
-    yield ``rows`` entries with positional values; when
+    Row events yield ``rows`` entries with positional values; when
     ``columns_by_table`` has an entry for (db, table), values are
     emitted as name→value dicts instead.
     """
-    if data[: len(MAGIC)] != MAGIC:
+    if len(data) < len(MAGIC):
         raise BinlogError("bad binlog magic")
-    off = len(MAGIC)
-    events: list[dict[str, Any]] = []
-    table_map: dict[int, dict[str, Any]] = {}
-    current_gtid: tuple[str, int] | None = None
-    pending_rows: list[dict[str, Any]] = []
-
-    while off < len(data):
-        if off + HEADER_LEN > len(data):
-            raise BinlogError("event header truncated")
-        ts, type_code, server_id, event_size, log_pos, flags = struct.unpack_from(
-            "<IBIIIH", data, off
-        )
-        if off + event_size > len(data):
-            raise BinlogError("event body truncated")
-        if log_pos != off + event_size:
-            raise BinlogError(
-                f"log_pos drift: header says {log_pos}, actual {off + event_size}"
-            )
-        body = data[off : off + event_size - CRC_LEN]
-        crc_stored = int.from_bytes(
-            data[off + event_size - CRC_LEN : off + event_size], "little"
-        )
-        if (zlib.crc32(body) & 0xFFFFFFFF) != crc_stored:
-            raise BinlogError(f"crc mismatch at offset {off}")
-        payload = body[HEADER_LEN:]
-        off += event_size
-
-        common = {"ts_sec": ts, "server_id": server_id, "log_pos": log_pos}
-
-        evs, current_gtid = _decode_one(
-            type_code, payload, common, table_map, current_gtid,
-            pending_rows, columns_by_table, off - event_size,
-        )
-        events.extend(evs)
+    tailer = BinlogTailer(columns_by_table)
+    events = tailer.feed(data)
+    left = tailer._n_held
+    if left:
+        part = "header" if left < HEADER_LEN else "body"
+        raise BinlogError(f"event {part} truncated at offset {tailer._offset}")
     return events
 
 
@@ -889,14 +864,12 @@ def _decode_one(
     pending_rows: list[dict[str, Any]],
     columns_by_table: dict[tuple[str, str], list[str]] | None,
     err_offset: int,
-) -> tuple[list[dict[str, Any]], tuple[str, int] | None]:
+) -> tuple[dict[str, Any], tuple[str, int] | None]:
     """Decode ONE framed event payload against the sequential decode
-    state (table_map, current GTID, open-transaction rows). Shared by
-    the whole-segment parser and the incremental tailer — the state
-    threading is exactly what survives across arbitrary read
-    boundaries (reference mysql/mod.rs:386-423 keeps the same fields
-    on its connection loop)."""
-    events: list[dict[str, Any]] = []
+    state (table_map, current GTID, open-transaction rows) that
+    :meth:`BinlogTailer.feed` threads across arbitrary read boundaries
+    (reference mysql/mod.rs:386-423 keeps the same fields on its
+    connection loop)."""
     # any exception past the CRC gate is a framing bug inside a
     # checksum-valid event — surface it AS BinlogError so callers
     # (and on_error='route') have one loud, catchable contract
@@ -907,7 +880,7 @@ def _decode_one(
             if binlog_version != 4:
                 raise BinlogError(f"unsupported binlog version {binlog_version}")
             server_version = payload[2:52].split(b"\x00", 1)[0].decode()
-            events.append({**common, "kind": "fde", "server_version": server_version})
+            ev = {**common, "kind": "fde", "server_version": server_version}
         elif type_code == TABLE_MAP_EVENT:
             # TABLE_MAP repeats byte-identically once per transaction
             # per table (the server re-announces before every rows
@@ -950,9 +923,9 @@ def _decode_one(
                     _TM_PAYLOAD_CACHE[payload] = cached
             table_id, tm_entry = cached
             table_map[table_id] = tm_entry
-            events.append({**common, "kind": "table_map", "table_id": table_id,
-                           "db": tm_entry["db"], "table": tm_entry["table"],
-                           "col_types": tm_entry["col_types"]})
+            ev = {**common, "kind": "table_map", "table_id": table_id,
+                  "db": tm_entry["db"], "table": tm_entry["table"],
+                  "col_types": tm_entry["col_types"]}
         elif type_code in (WRITE_ROWS_EVENT, UPDATE_ROWS_EVENT, DELETE_ROWS_EVENT):
             table_id = int.from_bytes(payload[0:6], "little")
             tm = table_map.get(table_id)
@@ -1010,13 +983,12 @@ def _decode_one(
                             r[side] = dict(zip(names, r[side]))
             ev = {**common, "kind": "rows", "op": op, "db": tm["db"],
                   "table": tm["table"], "rows": rows, "gtid": current_gtid}
-            events.append(ev)
             pending_rows.append(ev)
         elif type_code == GTID_LOG_EVENT:
             sid = payload[1:17]
             gno = struct.unpack_from("<q", payload, 17)[0]
             current_gtid = (sid.hex(), gno)
-            events.append({**common, "kind": "gtid", "sid": sid.hex(), "gno": gno})
+            ev = {**common, "kind": "gtid", "sid": sid.hex(), "gno": gno}
         elif type_code == XID_EVENT:
             xid = struct.unpack_from("<Q", payload, 0)[0]
             for ev in pending_rows:
@@ -1024,7 +996,7 @@ def _decode_one(
             # clear IN PLACE: the list is caller-owned sequential state
             # (rebinding here would silently orphan the tx bracket)
             pending_rows.clear()
-            events.append({**common, "kind": "xid", "xid": xid})
+            ev = {**common, "kind": "xid", "xid": xid}
         elif type_code == QUERY_EVENT:
             thread_id, exec_time, db_len, err, status_len = struct.unpack_from(
                 "<IIBHH", payload, 0
@@ -1033,14 +1005,14 @@ def _decode_one(
             schema = payload[p : p + db_len].decode()
             p += db_len + 1
             sql = payload[p:].decode()
-            events.append({**common, "kind": "query", "schema": schema, "sql": sql})
+            ev = {**common, "kind": "query", "schema": schema, "sql": sql}
         elif type_code == ROTATE_EVENT:
             position = struct.unpack_from("<Q", payload, 0)[0]
             next_name = payload[8:].decode()
-            events.append({**common, "kind": "rotate", "position": position,
-                           "next_file": next_name})
+            ev = {**common, "kind": "rotate", "position": position,
+                  "next_file": next_name}
         else:
-            events.append({**common, "kind": "other", "type_code": type_code})
+            ev = {**common, "kind": "other", "type_code": type_code}
     except BinlogError:
         raise
     except (struct.error, IndexError, UnicodeDecodeError, ValueError) as e:
@@ -1048,23 +1020,24 @@ def _decode_one(
             f"malformed event (type {type_code}) at offset "
             f"{err_offset}: {type(e).__name__}: {e}"
         ) from e
-    return events, current_gtid
+    return ev, current_gtid
 
 
 class BinlogTailer:
     """Incremental binlog tail over an arbitrary-boundary byte feed —
-    the connection-shaped seam below which the whole-segment parser
-    and a live socket client share one decode path (reference
+    the package's only binlog framer: ``parse_segment`` is this class
+    fed a whole segment once, and a live socket client feeds it frame
+    by frame (reference
     mysql/mod.rs:386-423: the connection loop reads frames as they
     arrive, threading table_map/GTID/transaction state across reads;
     this class is that loop with the socket abstracted to ``feed``).
 
     - ``feed(chunk)`` accepts ANY byte slicing of the stream (single
       bytes, mid-header cuts, multi-event blobs) and returns the
-      events completed by that chunk, identical to what
-      ``parse_segment`` yields on the concatenation.
-    - Framing is as strict as the batch parser: magic, per-event
-      CRC32, log_pos continuity — a corrupt frame raises immediately.
+      events completed by that chunk; any slicing yields the same
+      events as ``parse_segment`` on the concatenation.
+    - Framing is strict: magic, per-event CRC32, an event-size floor,
+      log_pos continuity — a corrupt frame raises immediately.
     - ``checkpoint()`` is the resumable position: binlog file, last
       COMMITTED log_pos (XID boundary — resuming mid-transaction
       would replay a torn prefix), and the accumulated executed-GTID
@@ -1085,7 +1058,10 @@ class BinlogTailer:
         if mode not in ("file", "stream"):
             raise ValueError(f"mode must be file|stream, got {mode!r}")
         self._columns = columns_by_table
-        self._buf = bytearray()
+        # unframed input: chunks held until the pending frame can complete
+        self._held: list[bytes] = []
+        self._n_held = 0
+        self._need = 0
         self._mode = mode
         # a COM_BINLOG_DUMP network stream carries NO 4-byte magic and
         # its log_pos fields are server-file positions (artificial
@@ -1100,71 +1076,82 @@ class BinlogTailer:
         self.position = BinlogPosition(file=file)
 
     def feed(self, chunk: bytes) -> list[dict[str, Any]]:
-        self._buf += chunk
+        # frame in place over one bytes object: a segment fed whole is
+        # sliced, never copied. Input short of the pending frame is only
+        # held, so a large event fed in small slices is joined once
+        chunk = bytes(chunk)
+        self._held.append(chunk)
+        self._n_held += len(chunk)
+        if self._n_held < self._need:
+            return []
+        data = b"".join(self._held)
+        off, end = 0, len(data)
         events: list[dict[str, Any]] = []
         while True:
             if self._need_magic:
-                if len(self._buf) < len(MAGIC):
+                if end - off < len(MAGIC):
+                    self._need = len(MAGIC)
                     break
-                if bytes(self._buf[: len(MAGIC)]) != MAGIC:
+                if data[off : off + len(MAGIC)] != MAGIC:
                     raise BinlogError("bad binlog magic")
-                del self._buf[: len(MAGIC)]
+                off += len(MAGIC)
                 self._offset = len(MAGIC)
                 self._need_magic = False
-            if len(self._buf) < HEADER_LEN:
+            if end - off < HEADER_LEN:
+                self._need = HEADER_LEN
                 break
             ts, type_code, server_id, event_size, log_pos, flags = struct.unpack_from(
-                "<IBIIIH", self._buf, 0
+                "<IBIIIH", data, off
             )
             if event_size < HEADER_LEN + CRC_LEN:
                 raise BinlogError(f"event size {event_size} below header+crc")
-            if len(self._buf) < event_size:
-                break  # incomplete frame: wait for more bytes
-            if self._mode == "file":
-                if log_pos != self._offset + event_size:
-                    raise BinlogError(
-                        f"log_pos drift: header says {log_pos}, "
-                        f"actual {self._offset + event_size}"
-                    )
-            body = bytes(self._buf[: event_size - CRC_LEN])
-            crc_stored = int.from_bytes(
-                self._buf[event_size - CRC_LEN : event_size], "little"
-            )
-            if (zlib.crc32(body) & 0xFFFFFFFF) != crc_stored:
+            if end - off < event_size:
+                self._need = event_size  # incomplete frame: wait for more
+                break
+            if self._mode == "file" and log_pos != self._offset + event_size:
+                raise BinlogError(
+                    f"log_pos drift: header says {log_pos}, "
+                    f"actual {self._offset + event_size}"
+                )
+            crc_at = off + event_size - CRC_LEN
+            crc_stored = int.from_bytes(data[crc_at : crc_at + CRC_LEN], "little")
+            if zlib.crc32(data[off:crc_at]) != crc_stored:
                 raise BinlogError(f"crc mismatch at offset {self._offset}")
-            payload = body[HEADER_LEN:]
+            payload = data[off + HEADER_LEN : crc_at]
             err_offset = self._offset
-            del self._buf[:event_size]
+            off += event_size
             if self._mode == "stream" and log_pos:
                 self._offset = log_pos  # trust server positions on the wire
             else:
                 self._offset += event_size
 
             common = {"ts_sec": ts, "server_id": server_id, "log_pos": log_pos}
-            evs, self._gtid = _decode_one(
+            ev, self._gtid = _decode_one(
                 type_code, payload, common, self._table_map, self._gtid,
                 self._pending, self._columns, err_offset,
             )
-            events.extend(evs)
-            for ev in evs:
-                if ev["kind"] == "gtid":
-                    self.position.handle_gtid(f"{ev['sid']}:{ev['gno']}")
-                elif ev["kind"] == "xid":
-                    # commit boundary: the position becomes resumable here
-                    self.position.handle_xid()
-                    self.position.pos = ev["log_pos"]
-                elif ev["kind"] == "rotate":
-                    self.position.handle_rotate(ev["next_file"], ev["position"])
-                    # per-file sequential state resets, GTID set persists.
-                    # FILE mode: the next file begins with its own 4-byte
-                    # magic + log_pos chain. STREAM mode: a dump stream
-                    # carries NO magic between files — the next event
-                    # follows directly (arming magic here would reject it)
-                    self._table_map = {}
-                    if self._mode == "file":
-                        self._need_magic = True
-                    else:
-                        self._offset = ev["position"] or 0
+            events.append(ev)
+            if type_code == GTID_LOG_EVENT:
+                self.position.handle_gtid(f"{ev['sid']}:{ev['gno']}")
+            elif type_code == XID_EVENT:
+                # commit boundary: the position becomes resumable here
+                self.position.handle_xid()
+                self.position.pos = log_pos
+            elif type_code == ROTATE_EVENT:
+                self.position.handle_rotate(ev["next_file"], ev["position"])
+                # per-file sequential state resets, GTID set persists.
+                # FILE mode: the next file begins with its own 4-byte
+                # magic + log_pos chain. STREAM mode: a dump stream
+                # carries NO magic between files — the next event
+                # follows directly (arming magic here would reject it)
+                self._table_map = {}
+                if self._mode == "file":
+                    self._need_magic = True
+                else:
+                    self._offset = ev["position"] or 0
+        rest = data[off:]
+        self._held = [rest] if rest else []
+        self._n_held = len(rest)
         return events
 
     def checkpoint(self) -> str:
@@ -1330,7 +1317,36 @@ BINLOG_ROW_SCHEMA = T.StructType(
     ]
 )
 
-_EMPTY_ROW_PREFIX = (None,) * 11
+def _segment_fingerprint(raw: bytes) -> str:
+    """``crc32:length`` of a raw segment: the ``segment`` column."""
+    return f"{zlib.crc32(raw):08x}:{len(raw)}"
+
+
+def segment_rows(
+    raw: bytes,
+    columns_by_table: dict[tuple[str, str], list[str]] | None = None,
+) -> Iterator[tuple]:
+    """One segment's row images as ``BINLOG_ROW_SCHEMA`` tuples, JSON
+    before/after objects and the segment fingerprint included — the one
+    event-to-row flattener behind ``decode_binlog_segments`` and the
+    ``binlog_segments`` source. The whole segment is parsed before the
+    first row is yielded, so a corrupt one raises ``BinlogError`` with
+    nothing emitted."""
+    events = parse_segment(raw, columns_by_table)
+    seg_fp = _segment_fingerprint(raw)
+    # no sort_keys: image key order is already deterministic (zip with
+    # the schema's column list)
+    dumps = json.dumps
+    for ev in events:
+        if ev["kind"] != "rows":
+            continue
+        sid, gno = ev["gtid"] if ev["gtid"] else (None, None)
+        head = (ev["ts_sec"], ev["server_id"], ev["db"], ev["table"], ev["op"],
+                ev.get("xid"), sid, gno, ev["log_pos"])
+        for r in ev["rows"]:
+            b, a = r["before"], r["after"]
+            yield head + (None if b is None else dumps(b),
+                          None if a is None else dumps(a), seg_fp, None)
 
 
 def decode_binlog_segments(
@@ -1342,7 +1358,7 @@ def decode_binlog_segments(
 ) -> DataFrame:
     """Map-only decode: one task per segment, each fully independent.
     Emits one output row per row image with JSON before/after objects
-    (plus a null ``decode_error`` column).
+    (plus a null ``decode_error`` column), via :func:`segment_rows`.
 
     ``on_error``: a corrupt segment (bad magic/CRC/log_pos/truncation)
     by default FAILS the job — exactly-once posture, nothing skipped
@@ -1356,6 +1372,7 @@ def decode_binlog_segments(
         raise ValueError(f"on_error must be fail|route, got {on_error!r}")
     sc = segments.sparkSession.sparkContext
     bc = sc.broadcast(columns_by_table)
+    names = BINLOG_ROW_SCHEMA.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = bc.value
@@ -1363,45 +1380,14 @@ def decode_binlog_segments(
             out = []
             for blob in pdf[data_col]:
                 raw = bytes(blob)
-                seg_fp = f"{zlib.crc32(raw) & 0xFFFFFFFF:08x}:{len(raw)}"
                 try:
-                    events = parse_segment(raw, cols)
-                except BinlogError:
+                    out.extend(segment_rows(raw, cols))
+                except BinlogError as e:
                     if on_error == "fail":
                         raise
-                    import traceback
-
-                    out.append(
-                        _EMPTY_ROW_PREFIX
-                        + (seg_fp,
-                           traceback.format_exc(limit=0).strip().splitlines()[-1])
-                    )
-                    continue
-                for ev in events:
-                    if ev["kind"] != "rows":
-                        continue
-                    sid, gno = ev["gtid"] if ev["gtid"] else (None, None)
-                    # no sort_keys: image key order is already
-                    # deterministic (zip with the schema's column list)
-                    dumps = json.dumps
-                    for r in ev["rows"]:
-                        b, a = r["before"], r["after"]
-                        out.append(
-                            (
-                                ev["ts_sec"], ev["server_id"], ev["db"], ev["table"],
-                                ev["op"], ev.get("xid"), sid, gno, ev["log_pos"],
-                                None if b is None else dumps(b),
-                                None if a is None else dumps(a),
-                                seg_fp,
-                                None,
-                            )
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["ts_sec", "server_id", "db", "table", "op", "xid",
-                         "gtid_sid", "gno", "log_pos", "before", "after",
-                         "segment", "decode_error"],
-            )
+                    error = traceback.format_exception_only(e)[-1].strip()
+                    out.append((None,) * 11 + (_segment_fingerprint(raw), error))
+            yield pd.DataFrame(out, columns=names)
 
     return segments.select(data_col).mapInPandas(run, BINLOG_ROW_SCHEMA)
 
@@ -1472,151 +1458,6 @@ def binlog_change_feed(
         F.lit(None).cast("boolean").alias("tx_end"),
     )
     return finish_envelope(out)
-
-
-# ------------------------------------------------------------------
-# deterministic segment synthesis (fixture generator)
-# ------------------------------------------------------------------
-
-EVENTS_COL_NAMES = ["event_id", "ts", "user_id", "event_type", "value", "props", "amount"]
-EVENTS_COL_TYPES = [
-    MYSQL_TYPE_LONGLONG,
-    MYSQL_TYPE_DATETIME2,
-    MYSQL_TYPE_LONGLONG,
-    MYSQL_TYPE_VARCHAR,
-    MYSQL_TYPE_DOUBLE,
-    MYSQL_TYPE_JSON,        # props rides the wire as real JSONB binary
-    MYSQL_TYPE_NEWDECIMAL,  # amount: packed decimal(18,2), sign-covering
-]
-EVENTS_COL_METAS = [0, 6, 0, 64, 8, 4, (18 << 8) | 2]
-EVENTS_TABLE_ID = 777
-SYNTH_SERVER_ID = 7777
-SYNTH_SID = bytes(range(16))
-#: bump when the synth stream's schema/layout changes — cache keys
-#: (bench staging) embed it so stale segments never decode silently
-SYNTH_FORMAT = 2
-
-SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("segment", T.LongType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
-
-
-def synth_binlog_events(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    rows_per_segment: int = 1000,
-    rows_per_event: int = 100,
-) -> DataFrame:
-    """Encode the ``events`` table as deterministic binlog segments.
-
-    Per segment (event_id // rows_per_segment): magic, FDE, GTID
-    (gno = segment + 1), QUERY(BEGIN), then per op-run TABLE_MAP +
-    ROWS events (≤ rows_per_event rows each, real MySQL statement
-    batching), XID (= segment id), ROTATE. Op mix mirrors the
-    change-feed mapping (changefeed.py): signup→insert, error→delete,
-    else update with before image (value-1, props NULL — the NULL
-    exercises the row-image null bitmap on the wire)."""
-    from .snapshot import read_table
-
-    ev = read_table(spark, sf_dir, "events")
-    # ts is epoch-nanos LONG after read_table normalization → µs.
-    # Integer DIV, not `/`: epoch nanos (~1.7e18) exceed double's 2^53
-    # exact-integer range, so float division would corrupt low digits.
-    ev = ev.withColumn("_ts_us", F.expr("CAST(ts DIV 1000 AS BIGINT)"))
-
-    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(key[0])
-        w = SegmentWriter(SYNTH_SERVER_ID)
-        w.append(FORMAT_DESCRIPTION_EVENT, fde_payload())
-        w.append(GTID_LOG_EVENT, gtid_payload(SYNTH_SID, seg + 1))
-        w.append(QUERY_EVENT, query_payload("testdb", "BEGIN"))
-        pdf = pdf.sort_values("event_id").reset_index(drop=True)
-
-        def op_of(et: str) -> str:
-            if et == "signup":
-                return "c"
-            if et == "error":
-                return "d"
-            return "u"
-
-        # column-wise extraction (r13 optimization, guide §4.2): the
-        # per-row pdf.iloc path built a fresh Series per event and
-        # dominated synth wall; values are pulled once per column here
-        _eids = pdf["event_id"].astype("int64").tolist()
-        _uids = pdf["user_id"].astype("int64").tolist()
-        _ts = pdf["_ts_us"].astype("int64").tolist()
-        _ets = [str(e) for e in pdf["event_type"].tolist()]
-        _vals = pdf["value"].tolist()
-        _props = pdf["props"].tolist()
-
-        # split into runs of equal op, then chunks of rows_per_event
-        runs: list[tuple[str, list[int]]] = []
-        for idx in range(len(pdf)):
-            op = op_of(_ets[idx])
-            if runs and runs[-1][0] == op and len(runs[-1][1]) < rows_per_event:
-                runs[-1][1].append(idx)
-            else:
-                runs.append((op, [idx]))
-        for op, idxs in runs:
-            w.append(
-                TABLE_MAP_EVENT,
-                table_map_payload(
-                    EVENTS_TABLE_ID, "testdb", "events",
-                    EVENTS_COL_TYPES, EVENTS_COL_METAS,
-                    [False, False, False, False, True, True, False],
-                ),
-            )
-            images: list[list[Any]] = []
-            for idx in idxs:
-                props = _props[idx]
-                if props is None or (isinstance(props, float) and pd.isna(props)):
-                    props_obj = None
-                else:
-                    props_obj = json.loads(str(props))
-                eid, uid = _eids[idx], _uids[idx]
-                # integer-derived decimal: exact on both engines, odd
-                # ids negative so the complement encoding is exercised
-                amount = f"{'-' if eid % 2 else ''}{eid}.{uid % 100:02d}"
-                v = _vals[idx]
-                row = [
-                    eid, _ts[idx], uid,
-                    _ets[idx],
-                    None if pd.isna(v) else float(v),
-                    props_obj,
-                    amount,
-                ]
-                if op == "c":
-                    images.append(row)
-                elif op == "d":
-                    images.append(row)
-                else:
-                    before = list(row)
-                    before[4] = None if row[4] is None else row[4] - 1.0
-                    before[5] = None  # exercises the null bitmap
-                    images.append(before)
-                    images.append(row)
-            type_code = {"c": WRITE_ROWS_EVENT, "u": UPDATE_ROWS_EVENT, "d": DELETE_ROWS_EVENT}[op]
-            w.append(
-                type_code,
-                rows_payload(
-                    EVENTS_TABLE_ID, len(EVENTS_COL_TYPES), images,
-                    EVENTS_COL_TYPES, EVENTS_COL_METAS, update=(op == "u"),
-                ),
-            )
-        w.append(XID_EVENT, xid_payload(seg))
-        w.append(ROTATE_EVENT, rotate_payload(4, f"binlog.{seg + 1:06d}"))
-        return pd.DataFrame([(seg, w.bytes())], columns=["segment", "data"])
-
-    keyed = ev.withColumn(
-        "_seg", F.floor(F.col("event_id") / F.lit(rows_per_segment)).cast("long")
-    )
-    return keyed.groupBy("_seg").applyInPandas(
-        lambda key, pdf: gen(key, pdf), SEGMENT_SCHEMA
-    )
 
 
 DDL_SCHEMA = T.StructType(

@@ -1,11 +1,17 @@
-"""Deterministic pgoutput capture fixtures: the TPC-H-shaped
-``orders`` table encoded as plain, streamed (protocol v2) and
-two-phase pgoutput byte streams. The encoders are the codec's own
-inverse, so ``decode_pgoutput`` over these streams must reproduce the
-source table, which the DuckDB oracles check from the parquet alone.
+"""Deterministic capture fixtures, built with the codecs' own
+encoders, so decoding them must reproduce the source table, which the
+DuckDB oracles check from the parquet alone:
+
+- pgoutput: the TPC-H-shaped ``orders`` table encoded as plain,
+  streamed (protocol v2) and two-phase pgoutput byte streams;
+- binlog: the ``events`` table encoded as self-contained binlog
+  segments (``synth_binlog_events``).
 """
 
 from __future__ import annotations
+
+import json
+from typing import Any
 
 import pandas as pd
 
@@ -13,6 +19,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .binlog import (
+    DELETE_ROWS_EVENT,
+    FORMAT_DESCRIPTION_EVENT,
+    GTID_LOG_EVENT,
+    MYSQL_TYPE_DATETIME2,
+    MYSQL_TYPE_DOUBLE,
+    MYSQL_TYPE_JSON,
+    MYSQL_TYPE_LONGLONG,
+    MYSQL_TYPE_NEWDECIMAL,
+    MYSQL_TYPE_VARCHAR,
+    QUERY_EVENT,
+    ROTATE_EVENT,
+    TABLE_MAP_EVENT,
+    UPDATE_ROWS_EVENT,
+    WRITE_ROWS_EVENT,
+    XID_EVENT,
+    SegmentWriter,
+    fde_payload,
+    gtid_payload,
+    query_payload,
+    rotate_payload,
+    rows_payload,
+    table_map_payload,
+    xid_payload,
+)
 from .pgoutput import (
     FLOAT8,
     INT8,
@@ -371,3 +402,148 @@ def synth_pgoutput_two_phase(
                 )
 
     return _tx_bucketed_synth(orders, emit, rows_per_tx=rows_per_tx)
+
+
+# ------------------------------------------------------------------
+# deterministic segment synthesis (fixture generator)
+# ------------------------------------------------------------------
+
+EVENTS_COL_NAMES = ["event_id", "ts", "user_id", "event_type", "value", "props", "amount"]
+EVENTS_COL_TYPES = [
+    MYSQL_TYPE_LONGLONG,
+    MYSQL_TYPE_DATETIME2,
+    MYSQL_TYPE_LONGLONG,
+    MYSQL_TYPE_VARCHAR,
+    MYSQL_TYPE_DOUBLE,
+    MYSQL_TYPE_JSON,        # props rides the wire as real JSONB binary
+    MYSQL_TYPE_NEWDECIMAL,  # amount: packed decimal(18,2), sign-covering
+]
+EVENTS_COL_METAS = [0, 6, 0, 64, 8, 4, (18 << 8) | 2]
+EVENTS_TABLE_ID = 777
+SYNTH_SERVER_ID = 7777
+SYNTH_SID = bytes(range(16))
+#: bump when the synth stream's schema/layout changes — cache keys
+#: (bench staging) embed it so stale segments never decode silently
+SYNTH_FORMAT = 2
+
+SEGMENT_SCHEMA = T.StructType(
+    [
+        T.StructField("segment", T.LongType()),
+        T.StructField("data", T.BinaryType()),
+    ]
+)
+
+
+def synth_binlog_events(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    rows_per_segment: int = 1000,
+    rows_per_event: int = 100,
+) -> DataFrame:
+    """Encode the ``events`` table as deterministic binlog segments.
+
+    Per segment (event_id // rows_per_segment): magic, FDE, GTID
+    (gno = segment + 1), QUERY(BEGIN), then per op-run TABLE_MAP +
+    ROWS events (≤ rows_per_event rows each, real MySQL statement
+    batching), XID (= segment id), ROTATE. Op mix mirrors the
+    change-feed mapping (changefeed.py): signup→insert, error→delete,
+    else update with before image (value-1, props NULL — the NULL
+    exercises the row-image null bitmap on the wire)."""
+    from .snapshot import read_table
+
+    ev = read_table(spark, sf_dir, "events")
+    # ts is epoch-nanos LONG after read_table normalization → µs.
+    # Integer DIV, not `/`: epoch nanos (~1.7e18) exceed double's 2^53
+    # exact-integer range, so float division would corrupt low digits.
+    ev = ev.withColumn("_ts_us", F.expr("CAST(ts DIV 1000 AS BIGINT)"))
+
+    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        seg = int(key[0])
+        w = SegmentWriter(SYNTH_SERVER_ID)
+        w.append(FORMAT_DESCRIPTION_EVENT, fde_payload())
+        w.append(GTID_LOG_EVENT, gtid_payload(SYNTH_SID, seg + 1))
+        w.append(QUERY_EVENT, query_payload("testdb", "BEGIN"))
+        pdf = pdf.sort_values("event_id").reset_index(drop=True)
+
+        def op_of(et: str) -> str:
+            if et == "signup":
+                return "c"
+            if et == "error":
+                return "d"
+            return "u"
+
+        # column-wise extraction (r13 optimization, guide §4.2): the
+        # per-row pdf.iloc path built a fresh Series per event and
+        # dominated synth wall; values are pulled once per column here
+        _eids = pdf["event_id"].astype("int64").tolist()
+        _uids = pdf["user_id"].astype("int64").tolist()
+        _ts = pdf["_ts_us"].astype("int64").tolist()
+        _ets = [str(e) for e in pdf["event_type"].tolist()]
+        _vals = pdf["value"].tolist()
+        _props = pdf["props"].tolist()
+
+        # split into runs of equal op, then chunks of rows_per_event
+        runs: list[tuple[str, list[int]]] = []
+        for idx in range(len(pdf)):
+            op = op_of(_ets[idx])
+            if runs and runs[-1][0] == op and len(runs[-1][1]) < rows_per_event:
+                runs[-1][1].append(idx)
+            else:
+                runs.append((op, [idx]))
+        for op, idxs in runs:
+            w.append(
+                TABLE_MAP_EVENT,
+                table_map_payload(
+                    EVENTS_TABLE_ID, "testdb", "events",
+                    EVENTS_COL_TYPES, EVENTS_COL_METAS,
+                    [False, False, False, False, True, True, False],
+                ),
+            )
+            images: list[list[Any]] = []
+            for idx in idxs:
+                props = _props[idx]
+                if props is None or (isinstance(props, float) and pd.isna(props)):
+                    props_obj = None
+                else:
+                    props_obj = json.loads(str(props))
+                eid, uid = _eids[idx], _uids[idx]
+                # integer-derived decimal: exact on both engines, odd
+                # ids negative so the complement encoding is exercised
+                amount = f"{'-' if eid % 2 else ''}{eid}.{uid % 100:02d}"
+                v = _vals[idx]
+                row = [
+                    eid, _ts[idx], uid,
+                    _ets[idx],
+                    None if pd.isna(v) else float(v),
+                    props_obj,
+                    amount,
+                ]
+                if op == "c":
+                    images.append(row)
+                elif op == "d":
+                    images.append(row)
+                else:
+                    before = list(row)
+                    before[4] = None if row[4] is None else row[4] - 1.0
+                    before[5] = None  # exercises the null bitmap
+                    images.append(before)
+                    images.append(row)
+            type_code = {"c": WRITE_ROWS_EVENT, "u": UPDATE_ROWS_EVENT, "d": DELETE_ROWS_EVENT}[op]
+            w.append(
+                type_code,
+                rows_payload(
+                    EVENTS_TABLE_ID, len(EVENTS_COL_TYPES), images,
+                    EVENTS_COL_TYPES, EVENTS_COL_METAS, update=(op == "u"),
+                ),
+            )
+        w.append(XID_EVENT, xid_payload(seg))
+        w.append(ROTATE_EVENT, rotate_payload(4, f"binlog.{seg + 1:06d}"))
+        return pd.DataFrame([(seg, w.bytes())], columns=["segment", "data"])
+
+    keyed = ev.withColumn(
+        "_seg", F.floor(F.col("event_id") / F.lit(rows_per_segment)).cast("long")
+    )
+    return keyed.groupBy("_seg").applyInPandas(
+        lambda key, pdf: gen(key, pdf), SEGMENT_SCHEMA
+    )

@@ -241,3 +241,62 @@ class TestCompiledDecoders:
         with contextlib.suppress(TypeError, AttributeError):
             tm["col_types"].append(bl.MYSQL_TYPE_LONG)
         assert bl.parse_segment(data) == want
+
+
+def _reframe_first_event(data, **fields):
+    """The segment with its first event's header fields replaced and its
+    CRC recomputed, so only the named fields are wrong."""
+    import struct
+    import zlib
+
+    off = len(bl.MAGIC)
+    head = dict(zip(("ts", "type_code", "server_id", "event_size", "log_pos", "flags"),
+                    struct.unpack_from("<IBIIIH", data, off)))
+    size = head["event_size"]
+    payload = data[off + bl.HEADER_LEN : off + size - bl.CRC_LEN]
+    head.update(fields)
+    if head["event_size"] < bl.HEADER_LEN + bl.CRC_LEN:
+        payload = b""
+    body = struct.pack("<IBIIIH", *head.values()) + payload
+    ev = body + zlib.crc32(body).to_bytes(4, "little")
+    return data[:off] + ev + data[off + size :]
+
+
+def _malformed_segments():
+    data = _segment()
+    bad_crc = bytearray(data)
+    bad_crc[40] ^= 0xFF
+    off = len(bl.MAGIC)
+    return {
+        # a 4-byte event whose log_pos agrees with its size: only a size
+        # floor rejects it
+        "undersized_event": _reframe_first_event(data, event_size=4, log_pos=off + 4),
+        "bad_crc": bytes(bad_crc),
+        "log_pos_drift": _reframe_first_event(data, log_pos=0),
+        "bad_magic": b"nope" + data[off:],
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_malformed_segments()))
+def test_framing_errors_match_whole_and_sliced(case):
+    """One framer: the whole-segment parse and the tailer, fed whole or
+    byte by byte, reject each malformed input with the same message."""
+    data = _malformed_segments()[case]
+    with pytest.raises(bl.BinlogError) as whole:
+        bl.parse_segment(data)
+    with pytest.raises(bl.BinlogError) as fed:
+        bl.BinlogTailer().feed(data)
+    t = bl.BinlogTailer()
+    with pytest.raises(bl.BinlogError) as sliced:
+        for i in range(len(data)):
+            t.feed(data[i : i + 1])
+    assert str(whole.value) == str(fed.value) == str(sliced.value)
+
+
+@pytest.mark.parametrize("cut", [0, 3, 4 + 7, -1])
+def test_parse_segment_rejects_empty_and_truncated_input(cut):
+    """What a live tail waits on, a whole segment cannot lack: empty
+    input, a cut magic and a truncated last event all raise."""
+    data = _segment()
+    with pytest.raises(bl.BinlogError, match="magic|truncated"):
+        bl.parse_segment(data[:cut])

@@ -399,11 +399,8 @@ def test_binlog_purge_detected_before_resume(spark, tmp_path):
     segments' executed set comes from decoding actual wire bytes."""
     from pyspark.sql import functions as F
 
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES,
-        decode_binlog_segments,
-        synth_binlog_events,
-    )
+    from deltaforge_spark.sources.binlog import decode_binlog_segments
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
     from deltaforge_spark.sources.gtid import (
         BinlogPosition,
         check_position_reachability,
@@ -448,11 +445,8 @@ def test_corrupt_segment_fails_loudly_not_silently(spark, tmp_path):
 
     import pytest as _pytest
 
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES,
-        decode_binlog_segments,
-        synth_binlog_events,
-    )
+    from deltaforge_spark.sources.binlog import decode_binlog_segments
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     path = str(tmp_path / "segments")
     synth_binlog_events(spark, "/root/testdata/sf0.001", rows_per_segment=100).write.parquet(path)
@@ -511,11 +505,8 @@ def test_corrupt_segment_routes_to_dlq_when_asked(spark, tmp_path):
     stage."""
     from pyspark.sql import functions as F
 
-    from deltaforge_spark.sources.binlog import (
-        EVENTS_COL_NAMES,
-        decode_binlog_segments,
-        synth_binlog_events,
-    )
+    from deltaforge_spark.sources.binlog import decode_binlog_segments
+    from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     path = str(tmp_path / "segments")
     synth_binlog_events(spark, "/root/testdata/sf0.001", rows_per_segment=100).write.parquet(path)

@@ -135,7 +135,7 @@ def test_run_archive_pipeline_black_box(tmp_path, capsys, spark, sf_dir):
     import glob
     import json as _json
 
-    from deltaforge_spark.sources.binlog import synth_binlog_events
+    from deltaforge_spark.sources.fixtures import synth_binlog_events
 
     bl_dir = str(tmp_path / "segments.parquet")
     synth_binlog_events(spark, sf_dir).write.parquet(bl_dir)

@@ -225,90 +225,124 @@ class TestOffsetHardening:
     """VERDICT r5 #9: file-count offsets are only meaningful while the
     sorted prefix under them is immutable — deletion, compaction, or
     rename between micro-batches must fail the stream LOUDLY, never
-    silently skip or remap data."""
+    silently skip or remap data. Runs over ``binlog_segments`` here and
+    ``pgoutput_spool`` in the subclass below: one stream reader serves
+    both."""
+
+    suffix = ".binlog"
 
     def _reader(self, src):
-        from deltaforge_spark.sources.datasource import _BinlogStreamReader
+        return BinlogSegmentsDataSource({"path": src}).simpleStreamReader(None)
 
-        return _BinlogStreamReader({"path": src})
+    def _write(self, path, i):
+        # file #i: one row-bearing unit, whatever the format
+        _write_segment(path, [[i, "x"]], gno=i, xid=899 + i)
 
     def test_deleted_segment_under_checkpoint_is_loud(self, tmp_path):
         from deltaforge_spark.sources.datasource import SegmentStoreChangedError
 
+        sfx = self.suffix
         src = str(tmp_path / "s")
         os.makedirs(src)
-        _write_segment(f"{src}/b1.binlog", [[1, "a"]], gno=1, xid=900)
-        _write_segment(f"{src}/b2.binlog", [[2, "b"]], gno=2, xid=901)
+        self._write(f"{src}/b1{sfx}", 1)
+        self._write(f"{src}/b2{sfx}", 2)
         r = self._reader(src)
         rows, off = r.read(r.initialOffset())
-        assert off["files"] == 2 and off["last"] == "b2.binlog"
+        assert off["files"] == 2 and off["last"] == f"b2{sfx}"
         assert len(list(rows)) == 2
-        os.remove(f"{src}/b2.binlog")  # compaction/cleanup under the offset
+        os.remove(f"{src}/b2{sfx}")  # compaction/cleanup under the offset
         with pytest.raises(SegmentStoreChangedError, match="deleted/compacted"):
             r.read(off)
 
     def test_renamed_prefix_under_checkpoint_is_loud(self, tmp_path):
         from deltaforge_spark.sources.datasource import SegmentStoreChangedError
 
+        sfx = self.suffix
         src = str(tmp_path / "s")
         os.makedirs(src)
-        _write_segment(f"{src}/b1.binlog", [[1, "a"]], gno=1, xid=900)
+        self._write(f"{src}/b1{sfx}", 1)
         r = self._reader(src)
         _rows, off = r.read(r.initialOffset())
         # rewrite: same count, different name → same-count remap
-        os.rename(f"{src}/b1.binlog", f"{src}/a0.binlog")
+        os.rename(f"{src}/b1{sfx}", f"{src}/a0{sfx}")
         with pytest.raises(SegmentStoreChangedError, match="prefix"):
             r.read(off)
 
     def test_replay_range_checks_end_offset(self, tmp_path):
         from deltaforge_spark.sources.datasource import SegmentStoreChangedError
 
+        sfx = self.suffix
         src = str(tmp_path / "s")
         os.makedirs(src)
-        _write_segment(f"{src}/b1.binlog", [[1, "a"]], gno=1, xid=900)
+        self._write(f"{src}/b1{sfx}", 1)
         r = self._reader(src)
         _rows, off = r.read(r.initialOffset())
-        os.remove(f"{src}/b1.binlog")
+        os.remove(f"{src}/b1{sfx}")
         with pytest.raises(SegmentStoreChangedError):
             r.readBetweenOffsets(r.initialOffset(), off)
 
     def test_intact_store_still_tails(self, tmp_path):
+        sfx = self.suffix
         src = str(tmp_path / "s")
         os.makedirs(src)
-        _write_segment(f"{src}/b1.binlog", [[1, "a"]], gno=1, xid=900)
+        self._write(f"{src}/b1{sfx}", 1)
         r = self._reader(src)
         _rows, off = r.read(r.initialOffset())
-        _write_segment(f"{src}/b2.binlog", [[2, "b"]], gno=2, xid=901)
+        self._write(f"{src}/b2{sfx}", 2)
         rows, off2 = r.read(off)
         assert len(list(rows)) == 1 and off2["files"] == 2
 
     def test_legacy_offset_without_name_still_accepted(self, tmp_path):
         """Checkpoints written before the name field lack 'last' —
         count-only offsets keep working (no forced re-snapshot)."""
+        sfx = self.suffix
         src = str(tmp_path / "s")
         os.makedirs(src)
-        _write_segment(f"{src}/b1.binlog", [[1, "a"]], gno=1, xid=900)
-        _write_segment(f"{src}/b2.binlog", [[2, "b"]], gno=2, xid=901)
+        self._write(f"{src}/b1{sfx}", 1)
+        self._write(f"{src}/b2{sfx}", 2)
         r = self._reader(src)
         rows, off = r.read({"files": 1})
         assert len(list(rows)) == 1 and off["files"] == 2
 
-    def test_pgoutput_spool_same_contract(self, tmp_path):
+
+class TestSpoolOffsetHardening(TestOffsetHardening):
+    suffix = ".pgout"
+
+    def _reader(self, src):
+        from deltaforge_spark.sources.datasource import PgoutputSpoolDataSource
+
+        return PgoutputSpoolDataSource({"path": src}).simpleStreamReader(None)
+
+    def _write(self, path, i):
+        from deltaforge_spark.sources.datasource import write_spool
+
+        write_spool(path, [f"m{i}".encode()])
+
+    def test_resumed_stream_numbers_seq_like_batch(self, spark, tmp_path):
+        """A stream resumed at files=1 gives the second file's messages
+        the seq values a batch read gives them (``1 << 32`` onward), so
+        the tx stamping downstream sees one numbering on every path."""
         from deltaforge_spark.sources.datasource import (
-            SegmentStoreChangedError,
-            _PgoutputStreamReader,
+            PgoutputSpoolDataSource,
             write_spool,
         )
 
         src = str(tmp_path / "w")
         os.makedirs(src)
-        write_spool(f"{src}/w1.pgout", [b"m1", b"m2"])
-        r = _PgoutputStreamReader({"path": src})
-        rows, off = r.read(r.initialOffset())
-        assert len(list(rows)) == 2 and off["last"] == "w1.pgout"
-        os.remove(f"{src}/w1.pgout")
-        with pytest.raises(SegmentStoreChangedError):
-            r.read(off)
+        write_spool(f"{src}/w1.pgout", [b"a1", b"a2"])
+        write_spool(f"{src}/w2.pgout", [b"b1", b"b2", b"b3"])
+        spark.dataSource.register(PgoutputSpoolDataSource)
+        batch = {
+            (r["file"], r["seq"])
+            for r in spark.read.format("pgoutput_spool").option("path", src).load().collect()
+        }
+        r = self._reader(src)
+        _rows, first = r.read(r.initialOffset())
+        resumed = [(f, seq) for f, seq, _ in r.read({"files": 1, "last": "w1.pgout"})[0]]
+        assert [seq for _, seq in resumed] == [1 << 32, (1 << 32) + 1, (1 << 32) + 2]
+        assert set(resumed) == {x for x in batch if x[0] == "w2.pgout"}
+        replayed = [(f, seq) for f, seq, _ in r.readBetweenOffsets({"files": 1}, first)]
+        assert replayed == resumed
 
 
 class TestTriggerWithoutNewFiles:

@@ -56,12 +56,37 @@ def test_cited_queries_are_declared():
 
 
 def test_cited_pgoutput_names_resolve():
-    """A stale citation of a deleted pgoutput decoder or helper fails:
-    every backticked ``decode_*`` / ``pgoutput_*`` name must exist in
-    the pgoutput module."""
-    from deltaforge_spark.sources import pgoutput
+    """A stale citation of a deleted decoder, framer or fixture fails:
+    every backticked ``decode_*`` / ``pgoutput_*`` name in GUARANTEES.md
+    must exist in the pgoutput module, and every backticked binlog or
+    fixture name in GUARANTEES.md and COVERAGE.md (``parse_segment``,
+    ``BinlogTailer``, ``synth_*``, anything named after the binlog) in
+    the binlog side of the sources package. Query names (``cdc_*``) are
+    checked by test_cited_queries_are_declared."""
+    from deltaforge_spark.sources import (
+        binlog,
+        datasource,
+        fixtures,
+        gtid,
+        pgoutput,
+        tailloop,
+    )
 
     cited = set(re.findall(r"`((?:decode|pgoutput)_\w+)`", _doc()))
+    cited = {n for n in cited if "binlog" not in n}
     assert cited, "matrix cites no pgoutput names?"
     missing = sorted(n for n in cited if not hasattr(pgoutput, n))
     assert not missing, f"GUARANTEES.md cites names pgoutput does not define: {missing}"
+
+    with open(os.path.join(REPO, "COVERAGE.md")) as f:
+        docs = _doc() + f.read()
+    binlog_like = r"(?i:\w*binlog\w*)|parse_segment|segment_rows|Mysql\w+|synth_\w+"
+    cited = {n for n in re.findall(rf"`({binlog_like})`", docs) if not n.startswith("cdc_")}
+    assert {"parse_segment", "BinlogTailer", "decode_binlog_segments"} <= cited
+    # the binlog codec and its fixtures, plus the modules that hold its
+    # position (gtid), tail loop (tailloop) and archive source, whose
+    # format name is a citation too
+    owners = (binlog, fixtures, gtid, tailloop, datasource)
+    cited.discard(datasource.BinlogSegmentsDataSource.name())
+    missing = sorted(n for n in cited if not any(hasattr(m, n) for m in owners))
+    assert not missing, f"docs cite binlog names the sources do not define: {missing}"

@@ -11,13 +11,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from deltaforge_spark.sources.binlog import (
+from deltaforge_spark.sources.binlog import decode_binlog_segments
+from deltaforge_spark.sources.fixtures import (
     EVENTS_COL_NAMES,
     SEGMENT_SCHEMA,
-    decode_binlog_segments,
     synth_binlog_events,
+    synth_pgoutput_orders,
 )
-from deltaforge_spark.sources.fixtures import synth_pgoutput_orders
 from deltaforge_spark.sources.pgoutput import decode_pgoutput
 
 

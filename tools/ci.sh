@@ -4,8 +4,9 @@
 # value-verified" cannot recur (the fast tier catches SQL-side
 # regressions in seconds; the --all tier value-checks every query).
 #
-#   tools/ci.sh fast   # ~1 min  : oracle SQL parses + unit guards +
-#                      # the pgoutput decode oracles at sf0.001
+#   tools/ci.sh fast   # ~6 min on 4 cores (~4 of them the plan-shape
+#                      # sweep): oracle SQL parses + unit guards + the
+#                      # pgoutput and binlog decode oracles at sf0.001
 #   tools/ci.sh all    # minutes : pytest + full DuckDB value-check
 #   tools/ci.sh sf1    # ~2 h    : 10x scale soak — regenerate sf1,
 #                      # time the risky kernels, value-check the FULL
@@ -22,6 +23,9 @@ python -m pytest tests/test_pyworker.py::TestArchiveReads -q
 # the Kafka wire primitives (CRC-32C against the byte-table loop and the
 # RFC 3720 vectors, varints, RecordBatch round trip, murmur2), Spark-free
 python -m pytest tests/test_kafka_wire.py::TestPrimitives -q
+# the one binlog framer (BinlogTailer, which parse_segment feeds whole):
+# sliced-feed parity and identical errors whole or byte by byte, Spark-free
+python -m pytest tests/test_binlog_tailer.py -q
 # plan-shape sweep in EVERY tier (VERDICT r11 #2: r11 shipped a query
 # that failed the repo's own scale-killer gate because the builder only
 # ran targeted tests — the cross-cutting plan sweeps must run before
@@ -39,6 +43,10 @@ fi
 # pin_scope, here and in the --all sweeps below
 python tools/check.py /root/testdata/sf0.001 cdc_pgoutput_decode \
     cdc_pgoutput_stream_decode cdc_pgoutput_two_phase cdc_pgoutput_changefeed
+# the binlog side likewise (~45 s): segment decode, change feed, the
+# binlog_segments source and DDL capture all run the one framer
+python tools/check.py /root/testdata/sf0.001 cdc_binlog_decode \
+    cdc_binlog_changefeed cdc_binlog_datasource cdc_ddl_capture
 
 if [ "$tier" = "all" ]; then
     python -m pytest tests/ -x -q
