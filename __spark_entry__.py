@@ -3744,6 +3744,19 @@ def q_cdc_binlog_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _binlog_archive_dir(sf_dir: str) -> str:
+    """Where ``q_cdc_binlog_datasource`` caches its segment archive. The
+    archive outlives the process and the checkout, so the key carries
+    the fixture format as well as the sf directory: segments an older
+    ``SYNTH_FORMAT`` wrote are never decoded as current ones."""
+    import hashlib
+
+    from deltaforge_spark.sources import fixtures
+
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+    return f"/tmp/dfspark-binlog-archive-v{fixtures.SYNTH_FORMAT}-{tag}"
+
+
 def q_cdc_binlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME wire decode through the native Spark source
     (sources/datasource.py BinlogSegmentsDataSource): segments land as
@@ -3752,7 +3765,6 @@ def q_cdc_binlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc_binlog_decode oracle — pinning that the format front-end and
     the mapInPandas path decode bit-identically."""
     _prep(spark)
-    import hashlib
     import os as _os
 
     from pyspark.sql import types as T
@@ -3761,11 +3773,10 @@ def q_cdc_binlog_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deltaforge_spark.sources.fixtures import EVENTS_COL_NAMES, synth_binlog_events
 
     spark.dataSource.register(BinlogSegmentsDataSource)
-    # materialize the synthetic archive once per sf_dir (deterministic
-    # blobs → cache key on content-independent path; atomic dir rename
-    # so concurrent callers never see partial archives)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    final = f"/tmp/dfspark-binlog-archive-{tag}"
+    # materialize the synthetic archive once per sf_dir and fixture
+    # format (deterministic blobs; atomic dir rename so concurrent
+    # callers never see partial archives)
+    final = _binlog_archive_dir(sf_dir)
     if not _os.path.isdir(final):
         import shutil as _shutil
         import uuid as _uuid

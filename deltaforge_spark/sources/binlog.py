@@ -1375,19 +1375,20 @@ def decode_binlog_segments(
     names = BINLOG_ROW_SCHEMA.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # one frame per segment: a task holds one segment's rows at a
+        # time, not every row of its input batch
         cols = bc.value
         for pdf in batches:
-            out = []
             for blob in pdf[data_col]:
                 raw = bytes(blob)
                 try:
-                    out.extend(segment_rows(raw, cols))
+                    out = list(segment_rows(raw, cols))
                 except BinlogError as e:
                     if on_error == "fail":
                         raise
                     error = traceback.format_exception_only(e)[-1].strip()
-                    out.append((None,) * 11 + (_segment_fingerprint(raw), error))
-            yield pd.DataFrame(out, columns=names)
+                    out = [(None,) * 11 + (_segment_fingerprint(raw), error)]
+                yield pd.DataFrame(out, columns=names)
 
     return segments.select(data_col).mapInPandas(run, BINLOG_ROW_SCHEMA)
 

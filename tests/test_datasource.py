@@ -378,3 +378,18 @@ class TestTriggerWithoutNewFiles:
         assert trigger() == 2
         assert trigger() == 0
         assert spark.read.parquet(out).count() == 2
+
+
+def test_archive_cache_dir_keys_fixture_format(monkeypatch):
+    """The cached archive of the binlog_segments oracle query lives in
+    /tmp across runs and checkouts; a fixture format change must select
+    a new directory, never one an older format wrote."""
+    import __spark_entry__ as entry
+    from deltaforge_spark.sources import fixtures
+
+    sf = "/data/sf0.01"
+    current = entry._binlog_archive_dir(sf)
+    assert current == entry._binlog_archive_dir(sf)
+    assert current != entry._binlog_archive_dir("/data/sf0.1")
+    monkeypatch.setattr(fixtures, "SYNTH_FORMAT", fixtures.SYNTH_FORMAT + 1)
+    assert entry._binlog_archive_dir(sf) != current

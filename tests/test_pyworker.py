@@ -1,7 +1,8 @@
 """The Python worker daemon entry point (deltaforge_spark/pyworker.py):
 ``importlib.invalidate_caches()`` re-reads a zip archive's directory
-only when the archive changed, and engine sessions run their Python
-tasks under that patch."""
+only when the archive changed, the daemon preloads and freezes the
+numpy/pandas/pyarrow stack before it forks, and engine sessions run
+their Python tasks under both."""
 
 import json
 import os
@@ -55,6 +56,44 @@ _PROBE = textwrap.dedent(
 )
 
 
+_PRELOAD_PROBE = textwrap.dedent(
+    """
+    import gc, json, sys
+
+    from deltaforge_spark import pyworker
+
+    before = gc.get_freeze_count()
+    pyworker.preload()
+    print(json.dumps({
+        "frozen_before": before,
+        "frozen": gc.get_freeze_count(),
+        "enabled": gc.isenabled(),
+        "missing": [m for m in sys.argv[1:] if m not in sys.modules],
+        "engine": sorted(m for m in sys.modules if m.split(".")[0] == "deltaforge_spark"),
+    }))
+    """
+)
+
+
+class TestPreload:
+    STACK = ["numpy", "pandas", "pyarrow", "pyspark.sql.pandas.serializers",
+             "pyspark.sql.pandas.types"]
+
+    def test_stack_imported_frozen_and_collector_on(self):
+        env = dict(os.environ, PYTHONPATH=ROOT)
+        proc = subprocess.run(
+            [sys.executable, "-c", _PRELOAD_PROBE, *self.STACK],
+            env=env, capture_output=True, text=True, timeout=120, check=True,
+        )
+        out = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert out["missing"] == []
+        assert out["frozen_before"] == 0 and out["frozen"] > 0
+        assert out["enabled"] is True
+        # engine modules stay out of the daemon, so a job's addPyFile
+        # copy is what its workers import
+        assert out["engine"] == ["deltaforge_spark", "deltaforge_spark.pyworker"]
+
+
 class TestArchiveReads:
     def test_directory_read_once_and_again_after_rewrite(self, tmp_path):
         env = dict(os.environ, PYTHONPATH=ROOT)
@@ -87,3 +126,15 @@ def test_session_tasks_run_patched(spark):
     assert spark.conf.get("spark.python.daemon.module") == "deltaforge_spark.pyworker"
     rows = spark.range(0, 4, numPartitions=2).mapInPandas(probe, "patched boolean").collect()
     assert [r.patched for r in rows] == [True, True]
+
+
+def test_session_tasks_fork_from_frozen_daemon(spark):
+    def probe(batches):
+        import gc
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    rows = spark.range(0, 4, numPartitions=2).mapInPandas(probe, "frozen long").collect()
+    assert len(rows) == 2 and all(r.frozen > 0 for r in rows)

@@ -43,6 +43,8 @@ def needs_reference(path):
 
 @needs_reference("/root/reference/examples")
 def test_all_reference_examples_parse():
+    """All 7 files parse, and lower to programs+sinks without running
+    Spark."""
     assert len(EXAMPLES) == 7
     for path in EXAMPLES:
         ref = load_reference_spec(path)
@@ -50,6 +52,7 @@ def test_all_reference_examples_parse():
         assert ref.sinks, path
         for s in ref.sinks:
             assert s.envelope in ("native", "debezium", "cloudevents")
+        _compile_with_identity_js(ref)
 
 
 def test_env_passthrough_vs_substitution(monkeypatch):
@@ -134,19 +137,46 @@ def test_quorum_mode_parses():
     assert ref.commit_policy.kind == "quorum" and ref.commit_policy.quorum == 2
 
 
+def _compile_with_identity_js(ref):
+    """Lower ``ref`` under js_policy='identity', check its program and
+    sinks, and return the compiled spec."""
+    program, sinks, policy, ref2 = compile_reference_pipeline(
+        ref, js_policy="identity", transports={}
+    )
+    assert callable(program)
+    assert len(sinks) == len(ref.sinks)
+    for want, got in zip(ref.sinks, sinks):
+        assert got.name == want.id and got.required == want.required
+    if any(p["type"] == "javascript" for p in ref.processors):
+        assert ref2.warnings  # identity pass-through is recorded
+    return ref2
+
+
 def test_examples_compile_with_identity_js():
-    """All 7 files lower to programs+sinks without running Spark."""
-    for path in EXAMPLES:
-        ref = load_reference_spec(path)
-        program, sinks, policy, ref2 = compile_reference_pipeline(
-            ref, js_policy="identity", transports={}
-        )
-        assert callable(program)
-        assert len(sinks) == len(ref.sinks)
-        for want, got in zip(ref.sinks, sinks):
-            assert got.name == want.id and got.required == want.required
-        if any(p["type"] == "javascript" for p in ref.processors):
-            assert ref2.warnings  # identity pass-through is recorded
+    """The lowering the reference examples get in
+    test_all_reference_examples_parse, without the reference checkout:
+    the testdata spec plus one inline javascript processor compiles
+    under js_policy='identity', one sink per spec sink, the pass-through
+    recorded as a warning."""
+    ref = _testdata_spec_with_unmapped_js()
+    assert ref.sinks
+    assert _compile_with_identity_js(ref).warnings
+
+
+def _testdata_spec_with_unmapped_js():
+    """``TESTDATA_SPEC`` plus one inline javascript processor with no
+    registered Python equivalent."""
+    import yaml
+
+    doc = yaml.safe_load(expand_env(TESTDATA_SPEC))
+    doc["spec"]["processors"].append(
+        {
+            "type": "javascript",
+            "id": "no-equivalent",
+            "inline": "function processBatch(events) { return events; }",
+        }
+    )
+    return parse_reference_spec(doc)
 
 
 def test_js_without_equivalent_is_an_error_by_default():
@@ -157,17 +187,7 @@ def test_js_without_equivalent_is_an_error_by_default():
     if os.path.exists(dev_yaml):
         ref = load_reference_spec(dev_yaml)
     else:
-        import yaml
-
-        doc = yaml.safe_load(expand_env(TESTDATA_SPEC))
-        doc["spec"]["processors"].append(
-            {
-                "type": "javascript",
-                "id": "no-equivalent",
-                "inline": "function processBatch(events) { return events; }",
-            }
-        )
-        ref = parse_reference_spec(doc)
+        ref = _testdata_spec_with_unmapped_js()
     assert any(p["type"] == "javascript" for p in ref.processors)
     with pytest.raises(UnsupportedSpecError, match="javascript processor"):
         compile_reference_pipeline(ref)

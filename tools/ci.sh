@@ -18,8 +18,9 @@ tier="${1:-fast}"
 
 python tools/guard_names.py
 python -m pytest tests/test_oracle_sql_valid.py -q
-# the Python worker daemon's archive-read patch, Spark-free
-python -m pytest tests/test_pyworker.py::TestArchiveReads -q
+# the Python worker daemon's archive-read patch and its preload of the
+# frozen numpy/pandas/pyarrow stack, Spark-free
+python -m pytest tests/test_pyworker.py::TestArchiveReads tests/test_pyworker.py::TestPreload -q
 # the Kafka wire primitives (CRC-32C against the byte-table loop and the
 # RFC 3720 vectors, varints, RecordBatch round trip, murmur2), Spark-free
 python -m pytest tests/test_kafka_wire.py::TestPrimitives -q
